@@ -136,55 +136,47 @@ object Maintenance {
         stats.map(_.nFiles.toLong).sum, 0L, committed = false)
 
     val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
-    // partitions compact independently — submit their rewrite jobs
-    // CONCURRENTLY (bounded driver pool; the cluster parallelizes within
-    // each job) so a long tail of small-file partitions doesn't serialize
-    // on job-submission latency. Each job writes its own immutable dest
-    // dir, so concurrency changes nothing about the result or the commit.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, selected.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val rewritten = try {
-      val fs = selected.zipWithIndex.map { case (p, i) =>
-        scala.concurrent.Future {
-          // dir name is index-unique and path-safe regardless of the key's
-          // characters ('=' excluded so nothing ever hive-parses it)
-          val sub = s"cpt$i-${p.key.replaceAll("[^A-Za-z0-9._-]", "_")}"
-          val dest = s"$tablePath/$batchDirName/$sub"
-          // pending MoR deletes AND deltas materialize here: the
-          // rewrite's source is the sidecar-aware read, and the commit
-          // below drops the sidecar entries
-          val df = Upsert.applyMor(spark,
-            spark.read.parquet(s"$tablePath/${p.rel}"), manifest, tablePath,
-            Some(Set(p.key)))
-          val n = targetFiles(p.bytes, targetFileBytes)
-          if (zorderCols.nonEmpty) Layout.zorderWrite(df, dest, zorderCols, n)
-          else df.coalesce(n).write.mode(SaveMode.Overwrite).parquet(dest)
-          // deletes-only compaction preserves a SUBSET of the content, so
-          // the source dir's bloom sidecars stay valid verbatim — carry
-          // them into the new dir (they'd otherwise die with the
-          // superseded dir at GC, and the partition would silently lose
-          // its point-lookup skipping). A materialized DELTA adds values
-          // the old filter never saw — carrying it would wrongly skip, so
-          // that partition rides filterless until its next stats-writing
-          // rewrite (absent sidecar = read, never wrongly pruned)
-          if (!manifest.contains(s"__delta.${p.key}"))
-            graft.streaming.TableFs.list(s"$tablePath/${p.rel}")
-              .filter(f => f.isFile && f.getPath.getName.startsWith("_bloom_") &&
-                f.getPath.getName.endsWith(".bin"))
-              .foreach { f =>
-                val name = f.getPath.getName
-                graft.streaming.TableFs.writeBytes(s"$dest/$name",
-                  graft.streaming.TableFs.readBytes(s"$tablePath/${p.rel}/$name"))
-              }
-          (p, s"$batchDirName/$sub")
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    // partitions compact independently — run their rewrite jobs
+    // CONCURRENTLY (at most 4 driver threads; the cluster parallelizes
+    // within each job) so a long tail of small-file partitions doesn't
+    // serialize on job-submission latency. Each job writes its own
+    // immutable dest dir, so concurrency changes nothing about the result
+    // or the commit; every rewrite finishes before a failure is rethrown,
+    // so none is left writing into staging the next GC pass collects.
+    val rewritten = JoinAll(spark, maxThreads = 4)(
+      selected.zipWithIndex.map { case (p, i) => () =>
+        // dir name is index-unique and path-safe regardless of the key's
+        // characters ('=' excluded so nothing ever hive-parses it)
+        val sub = s"cpt$i-${p.key.replaceAll("[^A-Za-z0-9._-]", "_")}"
+        val dest = s"$tablePath/$batchDirName/$sub"
+        // pending MoR deletes AND deltas materialize here: the
+        // rewrite's source is the sidecar-aware read, and the commit
+        // below drops the sidecar entries
+        val df = Upsert.applyMor(spark,
+          spark.read.parquet(s"$tablePath/${p.rel}"), manifest, tablePath,
+          Some(Set(p.key)))
+        val n = targetFiles(p.bytes, targetFileBytes)
+        if (zorderCols.nonEmpty) Layout.zorderWrite(df, dest, zorderCols, n)
+        else df.coalesce(n).write.mode(SaveMode.Overwrite).parquet(dest)
+        // deletes-only compaction preserves a SUBSET of the content, so
+        // the source dir's bloom sidecars stay valid verbatim — carry
+        // them into the new dir (they'd otherwise die with the
+        // superseded dir at GC, and the partition would silently lose
+        // its point-lookup skipping). A materialized DELTA adds values
+        // the old filter never saw — carrying it would wrongly skip, so
+        // that partition rides filterless until its next stats-writing
+        // rewrite (absent sidecar = read, never wrongly pruned)
+        if (!manifest.contains(s"__delta.${p.key}"))
+          graft.streaming.TableFs.list(s"$tablePath/${p.rel}")
+            .filter(f => f.isFile && f.getPath.getName.startsWith("_bloom_") &&
+              f.getPath.getName.endsWith(".bin"))
+            .foreach { f =>
+              val name = f.getPath.getName
+              graft.streaming.TableFs.writeBytes(s"$dest/$name",
+                graft.streaming.TableFs.readBytes(s"$tablePath/${p.rel}/$name"))
+            }
+        (p, s"$batchDirName/$sub")
+      })
     val afterSelected = rewritten.map { case (_, rel) =>
       dataFiles(s"$tablePath/$rel").length.toLong
     }.sum

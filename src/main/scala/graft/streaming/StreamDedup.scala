@@ -202,9 +202,25 @@ object StreamDedup {
   def mergeBatchIntoSnapshot(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, snapshotPath: String,
                              key: String, orderCol: String,
-                             committer: SnapshotCommitter = AtomicRenameCommitter): Seq[String] =
-    mergeBatchIntoSnapshotImpl(spark, batch, snapshotPath, key, orderCol,
-      crashBeforeCommit = false, committer)
+                             committer: SnapshotCommitter = AtomicRenameCommitter): Seq[String] = {
+    val days = batchDays(batch, orderCol)
+    if (days.isEmpty) return Seq.empty // empty micro-batch: nothing to commit
+    val staged = stageMerge(spark, batch, snapshotPath, key, orderCol, days, committer)
+    commitMerge(staged, committer)
+    staged.readDays
+  }
+
+  /** The `yyyyMMdd` days present in `batch` by `orderCol` — partition
+    * METADATA, not data: each input partition returns its distinct days and
+    * the driver merges them, one job with no shuffle (a `distinct()` costs
+    * a shuffle-map job plus a result job).
+    */
+  private[graft] def batchDays(batch: DataFrame, orderCol: String): Seq[String] = {
+    val day = org.apache.spark.sql.Encoders.STRING
+    batch.select(date_format(col(orderCol), "yyyyMMdd")).as(day)
+      .mapPartitions(_.toSet.iterator)(day)
+      .collect().toSeq.distinct
+  }
 
   /** Read a snapshot's committed state: exactly the manifest-referenced
     * data dirs (`snap_day` rides in the data columns, so no partition
@@ -216,6 +232,22 @@ object StreamDedup {
     val manifest = committer.readManifest(snapshotPath)
     require(manifest.nonEmpty, s"no committed snapshot at $snapshotPath")
     spark.read.parquet(manifest.values.map(rel => s"$snapshotPath/$rel").toSeq: _*)
+  }
+
+  /** The committed state of `days` alone: only those days' manifest
+    * entries are resolved and listed, so the read is O(days), not
+    * O(snapshot) like [[readSnapshot]].
+    */
+  private[graft] def readSnapshotDays(spark: org.apache.spark.sql.SparkSession,
+                                      snapshotPath: String, days: Seq[String],
+                                      schema: org.apache.spark.sql.types.StructType,
+                                      committer: SnapshotCommitter): DataFrame = {
+    val manifest = committer.readManifest(snapshotPath)
+    val paths = days.flatMap(manifest.get).map(rel => s"$snapshotPath/$rel")
+    require(paths.nonEmpty,
+      s"no committed day of ${days.mkString(",")} at $snapshotPath")
+    // the known schema spares a footer-sampling job per read
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Manifest read via the default committer (spec/back-compat surface;
@@ -230,24 +262,34 @@ object StreamDedup {
   private def gcUnreferenced(snapshotPath: String, liveRel: Set[String]): Unit =
     SnapshotGc.gcUnreferenced(snapshotPath, liveRel)
 
-  /** `crashBeforeCommit` is the test seam for the commit protocol: true
-    * returns after the data write but BEFORE the manifest flip — the
-    * crash window a durable commit must tolerate. Returns the day set the
-    * merge READ (batch days + their predecessors) — exactly the days
-    * whose snapshot content could have changed, which downstream
-    * incremental maintenance ([[StreamStar]]) uses as its rebuild scope.
+  /** A merge written under its own immutable batch dir but not yet
+    * visible: `manifest` is the committed state it was merged against,
+    * `schema` the schema of the rows it wrote, `readDays` the days it read
+    * (batch days + their predecessors) — exactly the days whose snapshot
+    * content could change, which downstream incremental maintenance
+    * ([[StreamStar]]) uses as its rebuild scope.
     */
-  private[graft] def mergeBatchIntoSnapshotImpl(
+  private[graft] final case class StagedMerge(
+      snapshotPath: String, manifest: Map[String, String],
+      schema: org.apache.spark.sql.types.StructType,
+      readDays: Seq[String], batchDirName: String, writtenDays: Set[String])
+
+  /** The data half of a merge: read the committed state of the batch's
+    * days and their predecessors, keep-latest it with the batch and write
+    * the result under a fresh `batch-<uuid>` dir. Nothing is visible until
+    * [[commitMerge]] flips the manifest, so staging alone is the crash
+    * window a durable commit must tolerate (`FileStreamSpec` stops there),
+    * and it can run beside writes to other tables. `batchDays` is
+    * [[batchDays]] of the batch, non-empty.
+    */
+  private[graft] def stageMerge(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, snapshotPath: String,
-      key: String, orderCol: String, crashBeforeCommit: Boolean,
-      committer: SnapshotCommitter = AtomicRenameCommitter): Seq[String] = {
+      key: String, orderCol: String, batchDays: Seq[String],
+      committer: SnapshotCommitter): StagedMerge = {
+    require(batchDays.nonEmpty, "an empty batch has nothing to stage")
     val dayFmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
     val withDay = batch.withColumn("snap_day", date_format(col(orderCol), "yyyyMMdd"))
-    // partition METADATA, not data: one value per day present in the batch
-    val batchDays = withDay.select("snap_day").distinct()
-      .collect().map(_.getString(0))
-    if (batchDays.isEmpty) return Seq.empty // empty micro-batch: nothing to commit
     val readDays = (batchDays ++ batchDays.map(d =>
       java.time.LocalDate.parse(d, dayFmt).minusDays(1).format(dayFmt)))
       .distinct.sorted
@@ -280,15 +322,20 @@ object StreamDedup {
     val writtenDays = TableFs.list(batchDir)
       .filter(f => f.isDirectory && f.getPath.getName.startsWith("day_part="))
       .map(_.getPath.getName.stripPrefix("day_part=")).toSet
+    StagedMerge(snapshotPath, manifest, withDay.schema, readDays,
+      batchDirName, writtenDays)
+  }
 
-    if (crashBeforeCommit) return readDays // crash window: data written, pointer not flipped
-
-    // commit: touched days re-point to the new batch dir (a read day whose
-    // rows were all superseded away simply drops out), untouched days keep
-    // their existing entries; then release superseded data. This merge
-    // stages no change log of its own, so a carried `__cdf` (a snapshot
-    // table someone enabled the feed on) is dropped like every
-    // non-logging commit does — see Upsert.dropCarriedCdf
+  /** The visibility half of a merge: touched days re-point to the staged
+    * batch dir (a read day whose rows were all superseded away simply
+    * drops out), untouched days keep their existing entries; then release
+    * superseded data. This merge stages no change log of its own, so a
+    * carried `__cdf` (a snapshot table someone enabled the feed on) is
+    * dropped like every non-logging commit does — see Upsert.dropCarriedCdf
+    */
+  private[graft] def commitMerge(staged: StagedMerge,
+                                 committer: SnapshotCommitter): Unit = {
+    import staged._
     val newManifest = graft.pipeline.Upsert.dropCarriedCdf(
       (manifest -- readDays)) ++
       writtenDays.map(d => d -> s"$batchDirName/day_part=$d")
@@ -298,6 +345,5 @@ object StreamDedup {
     // snapshot never lose files mid-scan (see gcUnreferenced)
     gcUnreferenced(snapshotPath, manifest.values.toSet ++
       newManifest.values ++ committer.retainedReferences(snapshotPath))
-    readDays
   }
 }

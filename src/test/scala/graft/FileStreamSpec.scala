@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamDedup
+import graft.streaming.{AtomicRenameCommitter, StreamDedup}
 
 /** Production-shaped streaming: a file source discovered incrementally
   * across restarts (checkpointed), merged into a keep-latest parquet
@@ -125,14 +125,14 @@ class FileStreamSpec extends AnyFunSuite {
     StreamDedup.mergeBatchIntoSnapshot(spark, b1, snap.toString, "event_id", "ts")
     val committed = StreamDedup.readManifest(snap.toString)
 
-    // kill merge #2 inside the commit window: its batch dir is fully
-    // written but the manifest was never flipped
+    // kill merge #2 inside the commit window: stage without commit — its
+    // batch dir is fully written but the manifest was never flipped
     val b2 = Seq(
       (3L, ts("2024-01-01 12:00:00"), "a", 3.0),
       (1L, ts("2024-01-01 12:30:00"), "a", 11.0)
     ).toDF("event_id", "ts", "event_type", "value")
-    StreamDedup.mergeBatchIntoSnapshotImpl(spark, b2, snap.toString,
-      "event_id", "ts", crashBeforeCommit = true)
+    StreamDedup.stageMerge(spark, b2, snap.toString, "event_id", "ts",
+      StreamDedup.batchDays(b2, "ts"), AtomicRenameCommitter)
 
     // the committed view is byte-for-byte the pre-crash state: the orphaned
     // batch dir is invisible to readers — day 01-01 neither lost (rows

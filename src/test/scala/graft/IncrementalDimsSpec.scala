@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dims
 import graft.pipeline.{Pipeline, Upsert}
 import graft.sources.Tables
-import graft.streaming.StreamStar
+import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, StreamDedup, StreamStar}
 
 /** Mergeable (incremental) dims: the O(dim + batch) refresh path that
   * replaces the O(fact) per-cycle rebuild at scale. Pinned here:
@@ -18,7 +18,9 @@ import graft.streaming.StreamStar
   * any batch split; (2) the streaming star with incrementalDims ends equal
   * to the batch pipeline, across a restart; (3) a replayed micro-batch is
   * absorbed exactly once (the manifest batch-id ledger); (4) a cross-batch
-  * duplicate row never double-counts.
+  * duplicate row never double-counts; (5) a failed commit inside a
+  * concurrent tick leaves the commit order intact and replays to the batch
+  * pipeline's state.
   */
 class IncrementalDimsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -60,10 +62,32 @@ class IncrementalDimsSpec extends AnyFunSuite {
     Files.copy(part.toPath, src.resolve(s"batch_$n.parquet"))
   }
 
-  test("streaming star with incremental dims ≡ batch pipeline, across restart") {
-    val pipeOut = Files.createTempDirectory("idim-pipe").toString
-    Pipeline.run(spark, sf, pipeOut)
+  private lazy val pipeOut: String = {
+    val out = Files.createTempDirectory("idim-pipe").toString
+    Pipeline.run(spark, sf, out)
+    out
+  }
 
+  /** Dims (exact `event_count`s included) and star under `root` equal
+    * `Pipeline.run`'s over all of `sf`'s events.
+    */
+  private def assertEqualsPipeline(root: String): Unit = {
+    Seq("dim_user", "dim_event_type", "dim_date").foreach { d =>
+      val cols = spark.read.parquet(s"$pipeOut/$d").columns.sorted.map(col)
+      assert(
+        rows(Upsert.readTable(spark, s"$root/$d").select(cols.toIndexedSeq: _*)) ==
+          rows(spark.read.parquet(s"$pipeOut/$d").select(cols.toIndexedSeq: _*)),
+        s"incremental $d must equal the batch pipeline's $d")
+    }
+    // and the star still matches (its joins consume the incremental dims)
+    def starRows(df: DataFrame): Set[String] = rows(df.select(
+      col("user_key"), col("event_type_key"), col("date_key").cast("long"),
+      col("event_id"), col("measure_value"), col("ts_us")))
+    assert(starRows(Upsert.readTable(spark, s"$root/fact_events_star")) ==
+      starRows(spark.read.parquet(s"$pipeOut/fact_events_star")))
+  }
+
+  test("streaming star with incremental dims ≡ batch pipeline, across restart") {
     val Seq(c1, c2, c3) = splitThree(Tables.events(spark, sf))
     val src = Files.createTempDirectory("idim-src")
     val ckpt = Files.createTempDirectory("idim-ckpt")
@@ -81,19 +105,67 @@ class IncrementalDimsSpec extends AnyFunSuite {
     addFile(src, 3, c3) // restart from checkpoint
     runOnce()
 
-    Seq("dim_user", "dim_event_type", "dim_date").foreach { d =>
-      val cols = spark.read.parquet(s"$pipeOut/$d").columns.sorted.map(col)
-      assert(
-        rows(Upsert.readTable(spark, s"$root/$d").select(cols.toIndexedSeq: _*)) ==
-          rows(spark.read.parquet(s"$pipeOut/$d").select(cols.toIndexedSeq: _*)),
-        s"incremental $d must equal the batch pipeline's $d")
+    assertEqualsPipeline(root)
+  }
+
+  /** Rename commits, except that while `armed` a commit to `failPath`
+    * throws and a commit to `slowPath` first waits `delayMs` — so a tick
+    * that rethrew before joining its sibling branches would return before
+    * the slow one commits.
+    */
+  private class FailingCommitter(failPath: String, slowPath: String, delayMs: Long)
+      extends SnapshotCommitter {
+    @volatile var armed = false
+    override def readManifest(path: String): Map[String, String] =
+      AtomicRenameCommitter.readManifest(path)
+    override def commit(path: String, entries: Map[String, String]): Unit = {
+      if (armed && path == failPath)
+        throw new java.io.IOException(s"injected commit failure at $path")
+      if (armed && path == slowPath) Thread.sleep(delayMs)
+      AtomicRenameCommitter.commit(path, entries)
     }
-    // and the star still matches (its joins consume the incremental dims)
-    def starRows(df: DataFrame): Set[String] = rows(df.select(
-      col("user_key"), col("event_type_key"), col("date_key").cast("long"),
-      col("event_id"), col("measure_value"), col("ts_us")))
-    assert(starRows(Upsert.readTable(spark, s"$root/fact_events_star")) ==
-      starRows(spark.read.parquet(s"$pipeOut/fact_events_star")))
+  }
+
+  Seq("dim_event_type", "fact_snap").foreach { failing =>
+    test(s"a failed $failing commit in a concurrent tick throws after every branch; replay ≡ pipeline") {
+      val root = Files.createTempDirectory("idim-fault").toString
+      val p = StreamStar.StarPaths(root)
+      // dim_date is the tick's last branch, after the failing dim's
+      val c = new FailingCommitter(s"$root/$failing", p.dimDate, delayMs = 1000)
+      val Seq(c0, c1, c2) = splitThree(Tables.events(spark, sf))
+      StreamStar.upsertStarBatch(spark, c0, root, c, Some(0L), incrementalDims = true)
+      StreamStar.upsertStarBatch(spark, c1, root, c, Some(1L), incrementalDims = true)
+
+      def manifests(): Map[String, Map[String, String]] =
+        Seq(p.dimUser, p.dimEventType, p.dimDate, p.factSnap, p.star)
+          .map(t => t -> c.readManifest(t)).toMap
+      val before = manifests()
+      c.armed = true
+      val e = intercept[java.io.IOException] {
+        StreamStar.upsertStarBatch(spark, c2, root, c, Some(2L), incrementalDims = true)
+      }
+      c.armed = false
+      assert(e.getMessage.contains("injected"))
+      val atThrow = manifests()
+      // every other dim branch had committed batch 2 when the throw returned
+      Seq(p.dimUser, p.dimEventType, p.dimDate).filterNot(_ == s"$root/$failing")
+        .foreach(d => assert(Upsert.tableMeta(d, c).get("batch").contains("2"),
+          s"$d must have committed before the tick threw"))
+      // the fact never flips over a dim that did not commit, and the star
+      // never replaces over a fact that did not flip
+      assert(atThrow(p.factSnap) == before(p.factSnap))
+      assert(atThrow(p.star) == before(p.star))
+      if (failing == "dim_event_type")
+        assert(atThrow(p.dimEventType) == before(p.dimEventType))
+      Thread.sleep(1000)
+      assert(manifests() == atThrow, "no manifest may change after the throw")
+
+      // crash-replay of batch 2 with no fault converges to the pipeline
+      StreamStar.upsertStarBatch(spark, c2, root, c, Some(2L), incrementalDims = true)
+      assertEqualsPipeline(root)
+      assert(StreamDedup.readSnapshot(spark, p.factSnap, c).count() ==
+        Tables.events(spark, sf).select("event_id").distinct().count())
+    }
   }
 
   test("a replayed micro-batch is absorbed exactly once") {

@@ -87,6 +87,28 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Maintenance.tableFileStats(path, c).forall(_.nFiles == 1))
   }
 
+  test("a failing partition rewrite fails the compaction only after every rewrite finished") {
+    val path = Files.createTempDirectory("graft-cpt").toString + "/t"
+    val c = AtomicRenameCommitter
+    upsertFragmented(path, c, 8, (1L to 40L).map(i => (s"d${i % 2}", i, 100L)): _*)
+    val preManifest = c.readManifest(path)
+    // d0's files (the first rewrite) stop being parquet: its rewrite
+    // throws, d1's succeeds
+    new java.io.File(s"$path/${preManifest("d0")}").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.write(f.toPath, "not parquet".getBytes))
+
+    intercept[Exception](Maintenance.compact(spark, path, committer = c))
+    assert(c.readManifest(path) == preManifest, "a failed compaction must not commit")
+    // the sibling rewrite had completed its write when the failure surfaced
+    val staging = new java.io.File(path).listFiles()
+      .filter(f => f.getName.startsWith("batch-") &&
+        !preManifest.values.exists(_.startsWith(s"${f.getName}/")))
+    assert(staging.length == 1, s"one staging dir: ${staging.map(_.getName).toSeq}")
+    assert(new java.io.File(staging.head, "cpt1-d1/_SUCCESS").exists,
+      "the d1 rewrite must have finished before compact threw")
+  }
+
   test("time travel across the compaction commit resolves the pre-compaction layout") {
     val path = Files.createTempDirectory("graft-cpt").toString + "/t"
     val c = new VersionedCommitter

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.graftshim.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -121,5 +123,48 @@ class StreamStarSpec extends AnyFunSuite {
       .filter($"date_key" === 20240105L).select("event_id")
       .collect().map(_.getLong(0)).toSet
     assert(day5 == Set(3L, 4L))
+  }
+
+  test("a steady-state incremental tick runs a bounded number of Spark jobs") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ss-jobs").toString
+    def batch(ids: Seq[Long], day: String) = ids.map(i =>
+      (i, java.sql.Timestamp.valueOf(f"$day ${i % 24}%02d:00:00"), i % 3,
+        "vitals", i.toDouble, """{"k":"55"}"""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    def tick(id: Long, df: DataFrame): Unit =
+      StreamStar.upsertStarBatch(spark, df, root, batchId = Some(id),
+        incrementalDims = true)
+    tick(0L, batch(1L to 40L, "2024-01-01")) // seed: full-rebuild dims
+    tick(1L, batch(41L to 60L, "2024-01-02")) // warm: first incremental tick
+    // the measured tick lands new rows plus a re-sent one, like a cron
+    // extract whose lookback overlaps the previous window
+    val measured = batch((61L to 80L) :+ 45L, "2024-01-02")
+
+    val group = "steady-state-tick"
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        jobGroups.add(Option(s.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "one incremental tick")
+    try tick(2L, measured)
+    finally {
+      spark.sparkContext.clearJobGroup()
+      ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val groups = jobGroups.toArray.toSeq
+    // the concurrent branches carry the caller's local properties
+    assert(groups.forall(_ == group), s"every job of the tick is in its group: $groups")
+    // 27 jobs when every dim re-derived the batch's new rows and each read
+    // of the fact sampled parquet footers for its schema; 21 once the tick
+    // derives them once (persisted), reads with known schemas and collects
+    // its day set in one job. A consumer that re-derives the batch again
+    // fails here, not only in a benchmark.
+    assert(groups.size <= 21, s"jobs per steady-state tick: ${groups.size}")
   }
 }
