@@ -23,15 +23,24 @@ import org.apache.spark.sql.execution.SQLExecution
   *  - the first failure in branch order is rethrown, later ones ride along
   *    as suppressed exceptions.
   *
-  * A single branch runs inline on the calling thread.
+  * A single branch runs inline on the calling thread; at most
+  * `MaxThreads` branches run at once.
   */
 object JoinAll {
 
-  def apply[T](spark: SparkSession, maxThreads: Int = Int.MaxValue)
-              (branches: Seq[() => T]): Seq[T] = {
+  /** At most this many branches run at once. Every caller's branches are
+    * whole Spark jobs that parallelize across the cluster on their own;
+    * the threads only hide per-job driver latency, which 4 already covers
+    * for the largest fixed set (a tick's fact staging plus its 3 dims),
+    * and a long branch list (compaction's partition rewrites) must not
+    * start one driver thread per branch.
+    */
+  private val MaxThreads = 4
+
+  def apply[T](spark: SparkSession)(branches: Seq[() => T]): Seq[T] = {
     if (branches.size <= 1) return branches.map(_())
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val pool = Executors.newFixedThreadPool(math.min(maxThreads, branches.size))
+    val pool = Executors.newFixedThreadPool(math.min(MaxThreads, branches.size))
     val outcomes = try {
       val futures = branches.map(b =>
         SQLExecution.withThreadLocalCaptured(session, pool)(b()))

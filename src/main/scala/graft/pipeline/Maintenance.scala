@@ -137,13 +137,13 @@ object Maintenance {
 
     val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
     // partitions compact independently — run their rewrite jobs
-    // CONCURRENTLY (at most 4 driver threads; the cluster parallelizes
-    // within each job) so a long tail of small-file partitions doesn't
-    // serialize on job-submission latency. Each job writes its own
+    // CONCURRENTLY (JoinAll caps the driver threads at 4; the cluster
+    // parallelizes within each job) so a long tail of small-file
+    // partitions doesn't serialize on job-submission latency. Each job writes its own
     // immutable dest dir, so concurrency changes nothing about the result
     // or the commit; every rewrite finishes before a failure is rethrown,
     // so none is left writing into staging the next GC pass collects.
-    val rewritten = JoinAll(spark, maxThreads = 4)(
+    val rewritten = JoinAll(spark)(
       selected.zipWithIndex.map { case (p, i) => () =>
         // dir name is index-unique and path-safe regardless of the key's
         // characters ('=' excluded so nothing ever hive-parses it)

@@ -234,20 +234,20 @@ object StreamDedup {
     spark.read.parquet(manifest.values.map(rel => s"$snapshotPath/$rel").toSeq: _*)
   }
 
-  /** The committed state of `days` alone: only those days' manifest
-    * entries are resolved and listed, so the read is O(days), not
-    * O(snapshot) like [[readSnapshot]].
+  /** The state of `days` under `manifest` alone: only those days' entries
+    * are resolved and listed, so the read is O(days), not O(snapshot) like
+    * [[readSnapshot]]. `None` when none of the days is committed; each
+    * caller decides what that means. The known schema spares a
+    * footer-sampling job per read (and prunes to its columns).
     */
   private[graft] def readSnapshotDays(spark: org.apache.spark.sql.SparkSession,
-                                      snapshotPath: String, days: Seq[String],
-                                      schema: org.apache.spark.sql.types.StructType,
-                                      committer: SnapshotCommitter): DataFrame = {
-    val manifest = committer.readManifest(snapshotPath)
+                                      snapshotPath: String,
+                                      manifest: Map[String, String], days: Seq[String],
+                                      schema: org.apache.spark.sql.types.StructType)
+      : Option[DataFrame] = {
     val paths = days.flatMap(manifest.get).map(rel => s"$snapshotPath/$rel")
-    require(paths.nonEmpty,
-      s"no committed day of ${days.mkString(",")} at $snapshotPath")
-    // the known schema spares a footer-sampling job per read
-    spark.read.schema(schema).parquet(paths: _*)
+    if (paths.isEmpty) None
+    else Some(spark.read.schema(schema).parquet(paths: _*))
   }
 
   /** Manifest read via the default committer (spec/back-compat surface;
@@ -303,12 +303,8 @@ object StreamDedup {
 
     // manifest-level pruning — the object-store equivalent of partition
     // pruning: only the touched days' committed paths are ever listed/read
-    val existingPaths = readDays.flatMap(manifest.get)
-      .map(rel => s"$snapshotPath/$rel")
-    val existing =
-      if (existingPaths.nonEmpty)
-        spark.read.schema(withDay.schema).parquet(existingPaths: _*)
-      else withDay.limit(0)
+    val existing = readSnapshotDays(spark, snapshotPath, manifest, readDays,
+      withDay.schema).getOrElse(withDay.limit(0))
     val merged = graft.operators.Dedup.keepLatestAgg(
       existing.unionByName(withDay), Seq(key), Seq(col(orderCol)))
 

@@ -152,8 +152,11 @@ object StreamStar {
     // the replace set, so a day whose rows all moved forward is dropped,
     // not left stale.
     val readDays = staged.readDays
-    val factTouched = StreamDedup.readSnapshotDays(spark, p.factSnap, readDays,
-      staged.schema, committer).drop("snap_day")
+    val factTouched = StreamDedup.readSnapshotDays(spark, p.factSnap,
+      committer.readManifest(p.factSnap), readDays, staged.schema)
+      .getOrElse(throw new IllegalStateException(
+        s"no committed day of ${readDays.mkString(",")} at ${p.factSnap}"))
+      .drop("snap_day")
     val starDelta = Star.factStar(
       factTouched,
       Upsert.readTable(spark, p.dimUser, committer),
@@ -180,13 +183,10 @@ object StreamStar {
                                   committer: SnapshotCommitter,
                                   stageFact: () => StreamDedup.StagedMerge)
       : StreamDedup.StagedMerge = {
-    val factManifest = committer.readManifest(p.factSnap)
-    val oldPaths = days.flatMap(factManifest.get)
-      .map(rel => s"${p.factSnap}/$rel")
     val ids = batch.select("event_id")
-    val oldIds =
-      if (oldPaths.nonEmpty) spark.read.schema(ids.schema).parquet(oldPaths: _*)
-      else ids.limit(0)
+    val oldIds = StreamDedup.readSnapshotDays(spark, p.factSnap,
+      committer.readManifest(p.factSnap), days, ids.schema)
+      .getOrElse(ids.limit(0))
     val newEvents = Dedup.keepLatestAgg(batch, Seq("event_id"), Seq(col("ts")))
       .join(oldIds, Seq("event_id"), "left_anti")
       .persist()
