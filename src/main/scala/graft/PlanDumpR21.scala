@@ -4,19 +4,19 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Round-21 optimization evidence dumper: `explain("formatted")` for the
-  * named queries into `plans/<dir>/<query>_<suffix>.txt`, under the SAME
-  * session configuration as [[Bench]] (master/shuffle partitions from
+/** Optimization evidence dumper: `explain("formatted")` for the named
+  * queries into `plans/<dir>/<query>_<suffix>.txt`, under the SAME session
+  * configuration as [[Bench]] (master/shuffle partitions from
   * `SPARK_GRAFT_CPUS`) so the dumped plans are the plans the bench actually
   * runs. Each query is materialized through the noop SINK first — the
-  * bench's own action, unlike r20's `toRdd.count()` which planned a
-  * different (RDD-conversion) query — and that same DataFrame's
-  * QueryExecution is dumped, so adaptive plans are FINAL
-  * (isFinalPlan=true: runtime broadcast choices, AQEShuffleRead
-  * coalescing).
+  * bench's own action (a `toRdd.count()` would plan a different,
+  * RDD-conversion query) — and that same DataFrame's QueryExecution is
+  * dumped, so adaptive plans are FINAL (isFinalPlan=true: runtime
+  * broadcast choices, AQEShuffleRead coalescing).
   *
   * Usage: runMain graft.PlanDumpR21 <before|after> <q1>[,<q2>...] [dir]
-  * (dir defaults to r21)
+  * (dir defaults to r21; `r20` writes the round-20 evidence files under
+  * `plans/r20/`)
   */
 object PlanDumpR21 {
   def main(args: Array[String]): Unit = {

@@ -6,79 +6,37 @@ import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, SnapshotGc, TableFs}
 
-/** Partition-pruned incremental upsert — MERGE-into-partitioned-parquet
-  * with copy-on-write granularity of ONE PARTITION, not one table.
+/** Manifest tables: parquet data under immutable `batch-<uuid>` dirs,
+  * made visible by one atomically replaced MANIFEST pointer (the
+  * [[graft.streaming.SnapshotCommitter]] seam), written and read
+  * partition by partition.
   *
   * The reference rebuilds every model table as a full overwrite snapshot
   * on a 15-minute schedule (scheduler/README.md:688-692 semantics); that
-  * is correct but rewrites the world. At 100 TB the incremental form is
-  * mandatory: a delta batch touches a handful of day-partitions, so the
-  * merge must (a) READ only the touched partitions — the `isin` partition
-  * filter prunes the scan to them — (b) keep-latest per key across
-  * existing ∪ delta via the same `max_by` aggregate as the W1 dedup, and
-  * (c) WRITE only those partitions back, which is exactly Spark's dynamic
-  * partition-overwrite mode (`spark.sql.sources.partitionOverwriteMode=
-  * dynamic`): untouched partition directories are never listed, read, or
-  * replaced. Work scales with the delta, not the table — the same
-  * copy-on-write contract a Delta/Iceberg MERGE gives, expressed with
-  * plain Spark + parquet.
-  *
-  * Ties between an existing row and a delta row with identical order keys
-  * resolve to the DELTA row (a `__src` rank is appended to the max_by
-  * order), so replaying the same batch is idempotent and an exact
-  * re-send of a row with a bumped payload still lands.
-  *
-  * The merged frame is `localCheckpoint`ed before the write: it cuts the
-  * lineage back to materialized partitions, which both avoids Spark's
-  * read-overwrite-same-path rejection and bounds the write's input to the
-  * touched-partition rows (in a multi-node deployment the same cut is a
-  * staging write + atomic partition swap).
-  *
-  * `touched` is collected to the driver: it is the DISTINCT partition-key
-  * list of one delta batch — bounded by the batch's day-span, not by data
-  * volume.
+  * is correct but rewrites the world. Here a write rewrites only the
+  * partitions it touches: it reads just their manifest entries, stages
+  * the new partitions under a fresh batch dir and publishes them with one
+  * manifest flip ([[upsertPartitionsAtomic]], [[replacePartitionsAtomic]]),
+  * so work scales with the delta, not the table. Upserts keep the latest
+  * row per key across existing ∪ delta with the W1 dedup's `max_by`
+  * aggregate; ties go to the DELTA row (a `__src` rank is appended to the
+  * order), so replaying a batch is idempotent and an exact re-send with a
+  * bumped payload still lands.
   *
   * '''Key→partition contract''': the partition column must be functionally
   * dependent on the key — an update to a key must land in the SAME
-  * partition the existing row lives in. A delta row that relocates a key
-  * to a different partition would leave the stale row alive in its
-  * untouched home partition (never read by the pruned scan) alongside the
-  * new row. The cheap within-delta guard below rejects a delta carrying
-  * two partition values for one key; a key-relocating workload needs the
-  * full-key anti-join path (read by KEY, not by partition) instead of
-  * this operator. The exception is relocation WITHIN the touched set:
-  * when both the old and new partitions are read (as the streaming star
-  * maintenance guarantees by construction), the cross-partition max_by
-  * resolves it correctly.
-  *
-  * Atomicity caveat: dynamic partition overwrite commits per partition
-  * directory — a crash mid-write can leave SOME touched partitions new and
-  * others old (each individually consistent; untouched partitions are
-  * never at risk, and re-running the same merge converges because ties go
-  * to the delta). When cross-partition atomicity matters, use
-  * [[upsertPartitionsAtomic]]: immutable batch dirs + one atomic manifest
-  * flip (the [[graft.streaming.SnapshotCommitter]] seam), crash-safe by
-  * construction.
+  * partition the existing row lives in. A delta row that relocated a key
+  * to another partition would leave the stale row alive in its untouched
+  * home partition. The within-delta guard rejects a delta carrying two
+  * partition values for one key. Relocation WITHIN the touched set is
+  * fine: both partitions are read, and the cross-partition merge resolves
+  * it (the streaming fact merge reads each batch day's predecessor for
+  * exactly this).
   */
 object Upsert {
 
   case class UpsertStats(touchedPartitions: Seq[String], deltaRows: Long,
                          mergedRows: Long)
-
-  def upsertPartitions(spark: SparkSession, delta: DataFrame,
-                       tablePath: String, partCol: String,
-                       keys: Seq[String], order: Seq[String]): UpsertStats = {
-    val touched = touchedPartitionsOf(delta, partCol, keys)
-    val existing = spark.read.parquet(tablePath)
-      .filter(col(partCol).cast("string").isin(touched: _*))
-    val merged = mergeByKey(existing, delta, keys, order).localCheckpoint(true)
-    // partitionOverwriteMode scoped to THIS write (a session-conf toggle
-    // would race with concurrent writers on the same SparkSession)
-    merged.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(tablePath)
-    UpsertStats(touched, delta.count(), merged.count())
-  }
 
   /** The delta's distinct partition values (bounded by the batch's
     * partition span, not data volume), with the two contract guards: no
@@ -115,49 +73,45 @@ object Upsert {
         keys, (order.map(col) :+ col("__src")).toIndexedSeq)
       .drop("__src")
 
-  /** [[upsertPartitions]] with CROSS-PARTITION atomicity — the incremental
-    * MERGE whose failure semantics match the reference's per-table CTAS
-    * snapshots (one atomic publish, never a half-merged table), built on
-    * the same manifest protocol as the streaming snapshot merge
-    * ([[graft.streaming.StreamDedup.mergeBatchIntoSnapshot]]):
+  /** Partition-granular MERGE with cross-partition atomicity — failure
+    * semantics of the reference's per-table CTAS snapshots (one atomic
+    * publish, never a half-merged table):
     *
     *  1. data is immutable — the merged touched partitions land under a
-    *     fresh `batch-<uuid>/<partCol>=<v>/` staging dir; nothing mutates
+    *     fresh `batch-<uuid>/__part=<v>/` staging dir; nothing mutates
     *     committed files;
     *  2. visibility is one pointer — `MANIFEST` maps each partition value
     *     to the batch dir owning it; [[readTable]] scans only
     *     manifest-referenced paths, so uncommitted staging is invisible;
-    *  3. commit is ONE atomic manifest replace (the
-    *     [[graft.streaming.SnapshotCommitter]] seam: rename locally,
-    *     conditional put on S3-class stores) covering ALL touched
+    *  3. commit is ONE atomic manifest replace covering ALL touched
     *     partitions at once — readers see the whole merge or none of it;
     *  4. superseded data is GC'd one merge cycle late, so a reader that
     *     resolved paths just before the flip finishes its scan.
     *
-    * A crash anywhere before the flip leaves the previous manifest — and
-    * therefore exactly the previous committed table — in force
-    * (`UpsertSpec` kills a merge inside that window and proves old-only,
-    * never mixed). Same key→partition contract as [[upsertPartitions]].
-    * Single writer assumed with the default committer; a
-    * [[graft.streaming.CasCommitter]] upgrades that to optimistic
-    * concurrency — the loser of an interleaved commit gets a retryable
-    * [[graft.streaming.ConcurrentCommitException]] with the winner's
-    * manifest intact (`CasCommitterSpec`) — as with any
-    * filesystem-pointer table format
-    * without a CAS service.
+    * It is [[stageUpsert]] followed by [[commitReplace]]; a crash anywhere
+    * between them leaves the previous manifest — and therefore exactly
+    * the previous committed table — in force (`UpsertSpec` stops after
+    * the staging half and proves old-only, never mixed). The streaming
+    * fact merge ([[graft.streaming.StreamDedup.mergeBatchIntoSnapshot]])
+    * commits through the same two halves. Single writer assumed with the
+    * default committer; a [[graft.streaming.CasCommitter]] upgrades that
+    * to optimistic concurrency — the loser of an interleaved commit gets a
+    * retryable [[graft.streaming.ConcurrentCommitException]] with the
+    * winner's manifest intact (`CasCommitterSpec`).
     *
     * The partition column stays IN the data files (staging partitions by a
     * string copy `__part`), so manifest-pruned multi-dir reads need no
-    * partition discovery — the same device as the streaming snapshot's
-    * `snap_day`/`day_part` split.
+    * partition discovery. `mergedRows` is the footer-proved row count of
+    * the rewritten partitions.
     */
   def upsertPartitionsAtomic(spark: SparkSession, delta: DataFrame,
                              tablePath: String, partCol: String,
                              keys: Seq[String], order: Seq[String],
                              committer: SnapshotCommitter = AtomicRenameCommitter): UpsertStats =
     withOp(committer, tablePath, "upsert") {
-      upsertPartitionsAtomicImpl(spark, delta, tablePath, partCol, keys, order,
-        crashBeforeCommit = false, committer)
+      val staged = stageUpsert(spark, delta, tablePath, partCol, keys, order, committer)
+      commitReplace(staged, committer)
+      UpsertStats(staged.parts, delta.count(), staged.writtenRows)
     }
 
   /** Committed state of a manifest-table: exactly the manifest-referenced
@@ -196,8 +150,16 @@ object Upsert {
     */
   def readTablePartitions(spark: SparkSession, tablePath: String,
                           values: Seq[String],
-                          committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
-    val manifest = committer.readManifest(tablePath)
+                          committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame =
+    readTablePartitions(spark, tablePath, values, committer.readManifest(tablePath))
+
+  /** [[readTablePartitions]] under a manifest the caller already read: a
+    * writer that stages against this state and commits against the same
+    * read (a second read would reset a CAS committer's observation).
+    */
+  private[graft] def readTablePartitions(spark: SparkSession, tablePath: String,
+                                         values: Seq[String],
+                                         manifest: Map[String, String]): DataFrame = {
     require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
     val entries = values.map(partKey)
       .flatMap(k => manifest.get(k).map(k -> _)).toMap
@@ -330,7 +292,7 @@ object Upsert {
     * Emits one row per changed key with `change_type` ∈ {`insert`,
     * `update_post`, `delete`}: post-image values for inserts/updates, the
     * pre-image for deletes ([[keyedDiff]]). Sound because keys are pinned
-    * to partitions (the [[upsertPartitions]] key→partition contract): a
+    * to partitions (the key→partition contract, see the object doc): a
     * key cannot move between an untouched and a touched partition without
     * touching both.
     */
@@ -487,8 +449,8 @@ object Upsert {
     * already pays for the rewrite) and stages them under the same atomic
     * flip as the data. [[tableChanges]] then serves single-step spans by
     * READING the log — O(change rows) bytes, no join — instead of
-    * diffing. `keys` are the table's logical merge keys (the
-    * [[upsertPartitions]] key→partition contract keys).
+    * diffing. `keys` are the table's logical merge keys (the keys of
+    * the key→partition contract, see the object doc).
     */
   def enableChangeFeed(tablePath: String, keys: Seq[String],
                        committer: SnapshotCommitter = AtomicRenameCommitter): Unit = {
@@ -573,7 +535,7 @@ object Upsert {
     * Applying `tableChanges(v_i, v_j)` to a replica at `v_i` yields
     * exactly the source at `v_j` (`TimeTravelSpec` pins the equivalence,
     * deletes included). Same key→partition contract as
-    * [[upsertPartitions]].
+    * [[upsertPartitionsAtomic]].
     */
   def applyChanges(spark: SparkSession, changes: DataFrame, tablePath: String,
                    partCol: String, keys: Seq[String], order: Seq[String],
@@ -600,9 +562,8 @@ object Upsert {
       else upserts.limit(0)
     val kept = existing.join(dels, keys, "left_anti")
     val merged = mergeByKey(kept, upserts, keys, order)
-    replacePartitionsAtomicImpl(spark, merged, tablePath, partCol, touched,
-      crashBeforeCommit = false, committer, extraMeta,
-      manifestRead = Some(manifest))
+    commitReplace(stageReplace(spark, merged, tablePath, partCol, touched,
+      committer, extraMeta, manifestRead = Some(manifest)), committer)
   }
 
   /** Manifest entries that reference data dirs — `__`-prefixed keys are
@@ -610,7 +571,7 @@ object Upsert {
     * batch id, the exactly-once ledger incremental dim maintenance needs):
     * readers skip them, GC treats their values as referencing nothing.
     */
-  private def dataEntries(m: Map[String, String]): Map[String, String] =
+  private[graft] def dataEntries(m: Map[String, String]): Map[String, String] =
     m.filterNot(_._1.startsWith("__"))
 
   /** SCHEMA EVOLUTION metadata key: every commit records the table schema
@@ -2214,8 +2175,8 @@ object Upsert {
     // only TRUE — a bare !predicate would silently drop null-evaluating
     // rows too)
     val kept = scoped.filter(coalesce(!predicate, lit(true)))
-    replacePartitionsAtomicImpl(spark, kept, tablePath, partCol, touched,
-      crashBeforeCommit = false, committer, manifestRead = Some(manifest))
+    commitReplace(stageReplace(spark, kept, tablePath, partCol, touched,
+      committer, manifestRead = Some(manifest)), committer)
     DeleteStats(touched, deleted)
   }
 
@@ -2230,7 +2191,7 @@ object Upsert {
     * against the pre-update row, so swaps like `a = b, b = a` see
     * consistent inputs). The partition column cannot be assigned — a
     * partition-moving update is an upsert-after-delete, not a rewrite in
-    * place (the [[upsertPartitions]] key→partition contract).
+    * place (the key→partition contract, see the object doc).
     */
   def updateWhere(spark: SparkSession, tablePath: String, partCol: String,
                   predicate: org.apache.spark.sql.Column,
@@ -2257,8 +2218,8 @@ object Upsert {
     val applied = scoped.select(scoped.columns.map { c =>
       set.get(c).fold(col(c))(e => when(predicate, e).otherwise(col(c)).as(c))
     }.toIndexedSeq: _*)
-    replacePartitionsAtomicImpl(spark, applied, tablePath, partCol, touched,
-      crashBeforeCommit = false, committer, manifestRead = Some(manifest))
+    commitReplace(stageReplace(spark, applied, tablePath, partCol, touched,
+      committer, manifestRead = Some(manifest)), committer)
     UpdateStats(touched, updated)
   }
 
@@ -2362,9 +2323,9 @@ object Upsert {
     val applied = joined.filter(!delF).select(targetCols.map { c =>
       set.get(c).fold(col(c))(e => when(updF, e).otherwise(col(c)).as(c))
     }.toIndexedSeq: _*)
-    replacePartitionsAtomicImpl(spark, applied.unionByName(insertRows),
-      tablePath, partCol, touched, crashBeforeCommit = false, committer,
-      manifestRead = Some(manifest))
+    commitReplace(stageReplace(spark, applied.unionByName(insertRows),
+      tablePath, partCol, touched, committer,
+      manifestRead = Some(manifest)), committer)
     MergeStats(touched, nUpd, nDel, nIns)
   }
 
@@ -2500,15 +2461,14 @@ object Upsert {
           meta.map { case (k, v) => s"__$k" -> v })
     }
 
-  /** `crashBeforeCommit` is the fault-injection seam: true returns after
-    * staging the merged data but BEFORE the manifest flip — the crash
-    * window the commit protocol must tolerate.
+  /** The staging half of [[upsertPartitionsAtomic]]: merge the delta into
+    * the committed state of its touched partitions and [[stageReplace]]
+    * the result. Nothing is visible until [[commitReplace]].
     */
-  private[graft] def upsertPartitionsAtomicImpl(
+  private[graft] def stageUpsert(
       spark: SparkSession, delta: DataFrame, tablePath: String,
       partCol: String, keys: Seq[String], order: Seq[String],
-      crashBeforeCommit: Boolean,
-      committer: SnapshotCommitter = AtomicRenameCommitter): UpsertStats = {
+      committer: SnapshotCommitter = AtomicRenameCommitter): StagedReplace = {
     val touched = touchedPartitionsOf(delta, partCol, keys)
     val manifest = committer.readManifest(tablePath)
     // evolution gate BEFORE the existing read: the pruned scan binds the
@@ -2537,11 +2497,8 @@ object Upsert {
           spark.read.schema(deltaPhysSchema).parquet(existingPaths: _*),
           manifest, tablePath, Some(touched.map(partKey).toSet)), manifest)
       else deltaW.limit(0)
-    val merged = mergeByKey(existing, deltaW, keys, order)
-    val committed = replacePartitionsAtomicImpl(spark, merged, tablePath,
-      partCol, touched, crashBeforeCommit, committer,
-      manifestRead = Some(manifest))
-    UpsertStats(touched, delta.count(), if (committed) merged.count() else -1L)
+    stageReplace(spark, mergeByKey(existing, deltaW, keys, order), tablePath,
+      partCol, touched, committer, manifestRead = Some(manifest))
   }
 
   /** Atomically REPLACE a set of partitions with `data` (which must
@@ -2550,8 +2507,8 @@ object Upsert {
     * cycle late. A partition in `parts` with no rows in `data` is
     * DROPPED from the table (its manifest entry is removed), which is
     * what makes this safe for rebuild-style refreshes where a
-    * partition's content can shrink to nothing. Shares the commit
-    * protocol (and its crash guarantees) with [[upsertPartitionsAtomic]].
+    * partition's content can shrink to nothing. It is [[stageReplace]]
+    * followed by [[commitReplace]], like [[upsertPartitionsAtomic]].
     */
   def replacePartitionsAtomic(spark: SparkSession, data: DataFrame,
                               tablePath: String, partCol: String,
@@ -2559,23 +2516,40 @@ object Upsert {
                               committer: SnapshotCommitter = AtomicRenameCommitter,
                               extraMeta: Map[String, String] = Map.empty): Unit =
     withOp(committer, tablePath, "replace_partitions") {
-      replacePartitionsAtomicImpl(spark, data, tablePath, partCol, parts,
-        crashBeforeCommit = false, committer, extraMeta)
+      commitReplace(stageReplace(spark, data, tablePath, partCol, parts,
+        committer, extraMeta), committer)
     }
 
-  /** Stage `data` and commit `(manifest -- parts) ++ written`. Returns
-    * true iff the commit happened (false = crash seam exercised). The
-    * initial GC collects a crashed predecessor's staging and data
-    * superseded by the previous commit (its one-cycle reader grace
-    * window ends here); `data` may lazily read manifest-referenced paths
-    * — the GC never deletes those.
+  /** A partition replace written under its own immutable batch dir but
+    * not yet visible: `parts` are the replaced (raw) partition values,
+    * `manifest` the committed state the staging was built against,
+    * `newManifest` the state [[commitReplace]] publishes.
     */
-  private def replacePartitionsAtomicImpl(
+  private[graft] final case class StagedReplace(
+      tablePath: String, parts: Seq[String], manifest: Map[String, String],
+      batchDirName: String, writtenParts: Set[String],
+      newManifest: Map[String, String]) {
+
+    /** Footer-proved rows of the staged partitions. */
+    def writtenRows: Long =
+      writtenParts.toSeq.map(p => newManifest(s"$RowsKeyPrefix$p").toLong).sum
+  }
+
+  /** The staging half of a partition replace: stage `data` under a fresh
+    * batch dir, run every check and stats job on the staged bytes, and
+    * build the new manifest `(manifest -- parts) ++ written`. Staging
+    * alone is the crash window the commit must tolerate, and it can run
+    * beside writes to other tables. The initial GC collects a crashed
+    * predecessor's staging and data superseded by the previous commit
+    * (its one-cycle reader grace window ends here); `data` may lazily
+    * read manifest-referenced paths — the GC never deletes those.
+    */
+  private[graft] def stageReplace(
       spark: SparkSession, data0: DataFrame, tablePath: String,
-      partCol0: String, parts: Seq[String], crashBeforeCommit: Boolean,
+      partCol0: String, parts: Seq[String],
       committer: SnapshotCommitter,
       extraMeta: Map[String, String] = Map.empty,
-      manifestRead: Option[Map[String, String]] = None): Boolean = {
+      manifestRead: Option[Map[String, String]] = None): StagedReplace = {
     require(extraMeta.keys.forall(_.startsWith("__")),
       "extraMeta entries are manifest METADATA and must be __-prefixed")
     // normalize RAW partition values to manifest keys up front: staged dir
@@ -2665,8 +2639,6 @@ object Upsert {
         }
       }
 
-      if (crashBeforeCommit) return false
-
       // zone-map entries for the rewritten partitions (empty unless enabled)
       val ranges = stagedDf.map(stagedRangeEntries(spark, manifest, _,
         data.columns.toSeq)).getOrElse(Map.empty[String, String])
@@ -2698,22 +2670,9 @@ object Upsert {
               .getOrElse(emptyState))
         }
 
-      // the post-staging jobs above can outlast a concurrent writer's GC
-      // grace window (the batch dir's mtime froze when staging finished):
-      // refresh the staging's age and VERIFY it survived before publishing
-      // references to it — a collected staging must fail loudly here, not
-      // surface later as dangling manifest entries
-      TableFs.touch(s"$tablePath/$batchDirName")
-      val missing = writtenParts.filterNot(p =>
-        TableFs.isDirectory(s"$tablePath/$batchDirName/__part=$p"))
-      if (missing.nonEmpty) throw new IllegalStateException(
-        s"staged partitions vanished before commit (concurrent GC passed " +
-          s"the grace window?): ${missing.toSeq.sorted.mkString(",")}")
-
       // replaced partitions re-point to the new batch dir (one with no rows
       // left drops out, and its stale zone map goes with it); untouched
-      // partitions keep their entries; then release superseded data one
-      // cycle late
+      // partitions keep their entries
       // a replaced partition's pending MoR deletes AND deltas are
       // MATERIALIZED by this rewrite (its source read was sidecar-aware)
       // — the sidecar entries drop with the same flip
@@ -2731,14 +2690,35 @@ object Upsert {
         extraMeta + // e.g. a tail cursor — atomic with the data it describes
         (SchemaKey -> data.schema.json) + // the schema rides the same flip
         (PartColKey -> partCol) // lets metadata DDL protect the partitioning
-      committer.commit(tablePath, newManifest)
-      SnapshotGc.gcUnreferenced(tablePath, manifest.values.toSet ++
-        newManifest.values ++ committer.retainedReferences(tablePath),
-        committer.gcGraceMs)
+      StagedReplace(tablePath, parts, manifest, batchDirName, writtenParts,
+        newManifest)
     } finally {
       if (consumers > 1) stagedDf.foreach(_.unpersist())
     }
-    true
+  }
+
+  /** The commit half of a partition replace: publish a [[stageReplace]]d
+    * manifest with one flip, then release superseded data one cycle late.
+    */
+  private[graft] def commitReplace(staged: StagedReplace,
+                                   committer: SnapshotCommitter): Unit = {
+    import staged._
+    // the time since staging (post-staging jobs, or a caller that commits
+    // only after other tables did) can outlast a concurrent writer's GC
+    // grace window (the batch dir's mtime froze when staging finished):
+    // refresh the staging's age and VERIFY it survived before publishing
+    // references to it — a collected staging must fail loudly here, not
+    // surface later as dangling manifest entries
+    TableFs.touch(s"$tablePath/$batchDirName")
+    val missing = writtenParts.filterNot(p =>
+      TableFs.isDirectory(s"$tablePath/$batchDirName/__part=$p"))
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"staged partitions vanished before commit (concurrent GC passed " +
+        s"the grace window?): ${missing.toSeq.sorted.mkString(",")}")
+    committer.commit(tablePath, newManifest)
+    SnapshotGc.gcUnreferenced(tablePath, manifest.values.toSet ++
+      newManifest.values ++ committer.retainedReferences(tablePath),
+      committer.gcGraceMs)
   }
 
   // ---- table lifecycle: RESTORE / shallow CLONE / DESCRIBE HISTORY ----
@@ -2839,13 +2819,13 @@ object Upsert {
       // the `cleaned` manifest deliberately hides the old layout's data
       // entries, so a change log staged against it would read as
       // all-inserts — garbage (repartition's true delta is EMPTY). Pull
-      // the enablement out of the impl's view and ride it back in via
+      // the enablement out of the staging's view and ride it back in via
       // extraMeta, so the feed stays ENABLED but this commit logs nothing
       // and tableChanges recomputes the (empty) pruned diff instead.
-      replacePartitionsAtomicImpl(spark, table, tablePath, newPartCol,
-        values.toSeq, crashBeforeCommit = false, committer,
+      commitReplace(stageReplace(spark, table, tablePath, newPartCol,
+        values.toSeq, committer,
         manifestRead = Some(dropCarriedCdf(cleaned) - CdfKeysKey),
-        extraMeta = cleaned.get(CdfKeysKey).map(CdfKeysKey -> _).toMap)
+        extraMeta = cleaned.get(CdfKeysKey).map(CdfKeysKey -> _).toMap), committer)
       RepartitionStats(newPartCol, values.length)
     }
 

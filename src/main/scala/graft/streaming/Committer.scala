@@ -1,6 +1,6 @@
 package graft.streaming
 
-/** Commit protocol seam for [[StreamDedup]]'s snapshot MANIFEST — the
+/** Commit protocol seam for a manifest table's MANIFEST — the
   * single pointer whose replacement makes a merge visible. Extracted so the
   * durability mechanism is swappable per storage system without touching
   * the merge protocol:
@@ -72,8 +72,8 @@ trait SnapshotCommitter {
   * rename on HDFS; see [[TableFs.renameOverwrite]]). A crash before the move leaves only a
   * GC-able temp; a crash after is a completed commit.
   */
-/** Shared staging GC for manifest-committed layouts ([[StreamDedup]]'s
-  * snapshot merge and [[graft.pipeline.Upsert.upsertPartitionsAtomic]]):
+/** Shared staging GC for manifest-committed layouts
+  * ([[graft.pipeline.Upsert]]'s tables, [[CuratedStore]]):
   * delete every `batch-⁎/<sub>` dir (and stale manifest temp) that
   * `liveRel` does not reference — crashed stagings and superseded
   * partitions. Safe under the single-writer assumption: the only

@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Dedup
+import graft.pipeline.Upsert
+
 /** Structured-Streaming form of the reference's incremental semantics
   * (SURVEY.md §2.9). The reference is cron-driven micro-batch: 10-minute
   * replication with a 20-minute lookback (deliberate overlap ⇒ duplicates,
@@ -17,6 +20,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale: dedup state is hash-partitioned on event_id across executors;
   * the watermark keeps per-executor state bounded by (rate × delay).
+  *
+  * The foreachBatch MERGE ([[mergeBatchIntoSnapshot]]) keeps its snapshot
+  * as an ordinary [[graft.pipeline.Upsert]] manifest table: this object
+  * owns only the merge's semantics (which days a batch can change, and
+  * keep-latest per key), no storage layout, commit or read code.
   */
 object StreamDedup {
 
@@ -152,9 +160,9 @@ object StreamDedup {
 
   /** foreachBatch MERGE analog (SURVEY.md §2.9 "streaming: dropDuplicates…
     * or foreachBatch + MERGE"): each micro-batch is merged into a
-    * day-partitioned parquet snapshot by key — existing rows are replaced
-    * by newer versions, keep-latest per key. This is the upsert shape for
-    * sinks without native MERGE; on a table format with MERGE INTO the same
+    * day-partitioned snapshot by key — existing rows are replaced by newer
+    * versions, keep-latest per key. This is the upsert shape for sinks
+    * without native MERGE; on a table format with MERGE INTO the same
     * foreachBatch body becomes one SQL statement.
     *
     * Rewrites are bounded to the day partitions the batch touches (plus the
@@ -165,39 +173,21 @@ object StreamDedup {
     * difference between a merge and a full-table rewrite on a growing
     * 100 TB snapshot.
     *
-    * Commit protocol (object-store-safe — the miniature of what Iceberg/
-    * Delta commits do, replacing the earlier local-rename day swap):
-    *
-    *  1. data is IMMUTABLE: each merge writes its output days under a
-    *     fresh `batch-<uuid>/day_part=<day>/` dir and nothing ever mutates
-    *     an existing data object;
-    *  2. visibility is ONE POINTER: the `MANIFEST` file maps each day to
-    *     the batch dir that currently owns it; readers
-    *     ([[readSnapshot]]) scan only manifest-referenced paths, so an
-    *     uncommitted or orphaned batch dir is invisible by construction;
-    *  3. commit is ONE ATOMIC REPLACE of that pointer (temp file +
-    *     `ATOMIC_MOVE` locally ≡ a single-object PUT on S3/GCS, which is
-    *     atomic-replace there);
-    *  4. GC runs AFTER commit with a ONE-CYCLE retention window: the
-    *     post-commit sweep keeps everything either manifest (old or new)
-    *     references, so a reader that resolved paths just before the flip
-    *     finishes its scan; a day dir superseded by merge N is deleted at
-    *     merge N+1's start, along with any crashed predecessor's
-    *     uncommitted staging.
-    *
-    * The pointer-flip mechanism itself is the [[SnapshotCommitter]] seam:
-    * atomic rename here, a conditional put on S3-class stores (see the
-    * trait doc for the contract and the fault-injection spec that pins it).
-    *
-    * A crash anywhere in the window between data write and pointer flip
-    * leaves the old manifest — and therefore exactly the old committed
-    * state — in force: no day is ever lost or doubled
-    * (`FileStreamSpec` kills a merge inside that window and proves both).
-    * Single writer assumed with the default committer (one foreachBatch
-    * sink); pass a [[CasCommitter]] to turn a concurrent writer's
-    * interleaved commit into a retryable [[ConcurrentCommitException]]
-    * instead — the conditional-put contract, as with any
-    * filesystem-pointer table format without a CAS service.
+    * The snapshot is an ordinary [[graft.pipeline.Upsert]] manifest table
+    * partitioned by `snap_day` (`yyyyMMdd` of `orderCol`): [[stageMerge]]
+    * stages the merged days, [[graft.pipeline.Upsert.commitReplace]] flips
+    * the manifest. Commit protocol, crash guarantees, schema metadata,
+    * per-day row counts, time travel and the readers
+    * ([[graft.pipeline.Upsert.readTable]],
+    * [[graft.pipeline.Upsert.readTablePartitions]]) are the ones every
+    * manifest table has. A crash between the two halves leaves the old
+    * manifest — and therefore exactly the old committed state — in force:
+    * no day is ever lost or doubled (`FileStreamSpec` stops a merge there
+    * and proves both). Single writer assumed with the default committer
+    * (one foreachBatch sink); pass a [[CasCommitter]] to turn a concurrent
+    * writer's interleaved commit into a retryable
+    * [[ConcurrentCommitException]] instead. Returns the days read, which
+    * are the days whose snapshot content could change.
     */
   def mergeBatchIntoSnapshot(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, snapshotPath: String,
@@ -206,8 +196,8 @@ object StreamDedup {
     val days = batchDays(batch, orderCol)
     if (days.isEmpty) return Seq.empty // empty micro-batch: nothing to commit
     val staged = stageMerge(spark, batch, snapshotPath, key, orderCol, days, committer)
-    commitMerge(staged, committer)
-    staged.readDays
+    Upsert.commitReplace(staged, committer)
+    staged.parts
   }
 
   /** The `yyyyMMdd` days present in `batch` by `orderCol` — partition
@@ -222,124 +212,38 @@ object StreamDedup {
       .collect().toSeq.distinct
   }
 
-  /** Read a snapshot's committed state: exactly the manifest-referenced
-    * data dirs (`snap_day` rides in the data columns, so no partition
-    * discovery is needed over the mixed batch-dir layout).
-    */
-  def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-                   snapshotPath: String,
-                   committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
-    val manifest = committer.readManifest(snapshotPath)
-    require(manifest.nonEmpty, s"no committed snapshot at $snapshotPath")
-    spark.read.parquet(manifest.values.map(rel => s"$snapshotPath/$rel").toSeq: _*)
-  }
-
-  /** The state of `days` under `manifest` alone: only those days' entries
-    * are resolved and listed, so the read is O(days), not O(snapshot) like
-    * [[readSnapshot]]. `None` when none of the days is committed; each
-    * caller decides what that means. The known schema spares a
-    * footer-sampling job per read (and prunes to its columns).
-    */
-  private[graft] def readSnapshotDays(spark: org.apache.spark.sql.SparkSession,
-                                      snapshotPath: String,
-                                      manifest: Map[String, String], days: Seq[String],
-                                      schema: org.apache.spark.sql.types.StructType)
-      : Option[DataFrame] = {
-    val paths = days.flatMap(manifest.get).map(rel => s"$snapshotPath/$rel")
-    if (paths.isEmpty) None
-    else Some(spark.read.schema(schema).parquet(paths: _*))
-  }
-
-  /** Manifest read via the default committer (spec/back-compat surface;
-    * the protocol impl lives in [[AtomicRenameCommitter]]).
-    */
-  private[graft] def readManifest(snapshotPath: String): Map[String, String] =
-    AtomicRenameCommitter.readManifest(snapshotPath)
-
-  /** Staging GC — shared with the atomic partition upsert; see
-    * [[SnapshotGc.gcUnreferenced]] for the retention contract.
-    */
-  private def gcUnreferenced(snapshotPath: String, liveRel: Set[String]): Unit =
-    SnapshotGc.gcUnreferenced(snapshotPath, liveRel)
-
-  /** A merge written under its own immutable batch dir but not yet
-    * visible: `manifest` is the committed state it was merged against,
-    * `schema` the schema of the rows it wrote, `readDays` the days it read
-    * (batch days + their predecessors) — exactly the days whose snapshot
-    * content could change, which downstream incremental maintenance
-    * ([[StreamStar]]) uses as its rebuild scope.
-    */
-  private[graft] final case class StagedMerge(
-      snapshotPath: String, manifest: Map[String, String],
-      schema: org.apache.spark.sql.types.StructType,
-      readDays: Seq[String], batchDirName: String, writtenDays: Set[String])
-
-  /** The data half of a merge: read the committed state of the batch's
-    * days and their predecessors, keep-latest it with the batch and write
-    * the result under a fresh `batch-<uuid>` dir. Nothing is visible until
-    * [[commitMerge]] flips the manifest, so staging alone is the crash
-    * window a durable commit must tolerate (`FileStreamSpec` stops there),
-    * and it can run beside writes to other tables. `batchDays` is
-    * [[batchDays]] of the batch, non-empty.
+  /** The data half of a merge: keep-latest the batch into the committed
+    * state of its days and their predecessors, and stage the result as a
+    * replace of exactly those days. Nothing is visible until
+    * [[graft.pipeline.Upsert.commitReplace]], so staging alone is the
+    * crash window a durable commit must tolerate (`FileStreamSpec` stops
+    * there), and it can run beside writes to other tables. The staged
+    * `parts` are the days read (batch days + their predecessors) — exactly
+    * the days whose snapshot content could change, which downstream
+    * incremental maintenance ([[StreamStar]]) uses as its rebuild scope.
+    * `batchDays` is [[batchDays]] of the batch, non-empty.
     */
   private[graft] def stageMerge(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, snapshotPath: String,
       key: String, orderCol: String, batchDays: Seq[String],
-      committer: SnapshotCommitter): StagedMerge = {
+      committer: SnapshotCommitter): Upsert.StagedReplace = {
     require(batchDays.nonEmpty, "an empty batch has nothing to stage")
     val dayFmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
     val withDay = batch.withColumn("snap_day", date_format(col(orderCol), "yyyyMMdd"))
     val readDays = (batchDays ++ batchDays.map(d =>
       java.time.LocalDate.parse(d, dayFmt).minusDays(1).format(dayFmt)))
       .distinct.sorted
-
+    // the read and the commit share one manifest read: a second read would
+    // reset a CAS committer's observation
     val manifest = committer.readManifest(snapshotPath)
-    // GC leftovers of a crashed predecessor (uncommitted batch dirs) and
-    // day dirs superseded by the PREVIOUS merge, whose one-cycle reader
-    // grace window ends here
-    gcUnreferenced(snapshotPath,
-      manifest.values.toSet ++ committer.retainedReferences(snapshotPath))
-
-    // manifest-level pruning — the object-store equivalent of partition
-    // pruning: only the touched days' committed paths are ever listed/read
-    val existing = readSnapshotDays(spark, snapshotPath, manifest, readDays,
-      withDay.schema).getOrElse(withDay.limit(0))
-    val merged = graft.operators.Dedup.keepLatestAgg(
-      existing.unionByName(withDay), Seq(key), Seq(col(orderCol)))
-
-    // stage into an immutable, uniquely-named batch dir; `day_part` is a
-    // COPY of snap_day because partitionBy strips its column from the data
-    // files, and readers of individual day dirs still need the value
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
-    val batchDir = s"$snapshotPath/$batchDirName"
-    merged.withColumn("day_part", col("snap_day"))
-      .write.mode("overwrite").partitionBy("day_part").parquet(batchDir)
-    val writtenDays = TableFs.list(batchDir)
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("day_part="))
-      .map(_.getPath.getName.stripPrefix("day_part=")).toSet
-    StagedMerge(snapshotPath, manifest, withDay.schema, readDays,
-      batchDirName, writtenDays)
-  }
-
-  /** The visibility half of a merge: touched days re-point to the staged
-    * batch dir (a read day whose rows were all superseded away simply
-    * drops out), untouched days keep their existing entries; then release
-    * superseded data. This merge stages no change log of its own, so a
-    * carried `__cdf` (a snapshot table someone enabled the feed on) is
-    * dropped like every non-logging commit does — see Upsert.dropCarriedCdf
-    */
-  private[graft] def commitMerge(staged: StagedMerge,
-                                 committer: SnapshotCommitter): Unit = {
-    import staged._
-    val newManifest = graft.pipeline.Upsert.dropCarriedCdf(
-      (manifest -- readDays)) ++
-      writtenDays.map(d => d -> s"$batchDirName/day_part=$d")
-    committer.commit(snapshotPath, newManifest)
-    // release superseded data ONE CYCLE LATE: keep everything either
-    // manifest references, so in-flight readers of the just-replaced
-    // snapshot never lose files mid-scan (see gcUnreferenced)
-    gcUnreferenced(snapshotPath, manifest.values.toSet ++
-      newManifest.values ++ committer.retainedReferences(snapshotPath))
+    val existing =
+      if (Upsert.dataEntries(manifest).isEmpty) withDay.limit(0)
+      else Upsert.readTablePartitions(spark, snapshotPath, readDays, manifest)
+    val merged = Dedup.keepLatestAgg(
+      existing.unionByName(withDay, allowMissingColumns = true),
+      Seq(key), Seq(col(orderCol)))
+    Upsert.stageReplace(spark, merged, snapshotPath, "snap_day", readDays,
+      committer, manifestRead = Some(manifest))
   }
 }

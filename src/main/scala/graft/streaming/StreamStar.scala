@@ -12,10 +12,11 @@ import graft.pipeline.{JoinAll, Upsert}
   * streaming program: a `foreachBatch` sink that, per micro-batch,
   *
   *  1. collects the batch's day set ONCE — the scope of every step below;
-  *  2. merges the batch into the keep-latest FACT snapshot, split into
-  *     staging (an immutable `batch-<uuid>` dir, invisible until its
-  *     manifest flip) and commit ([[StreamDedup.stageMerge]] /
-  *     [[StreamDedup.commitMerge]], O(touched days) I/O);
+  *  2. merges the batch into the keep-latest FACT snapshot, an ordinary
+  *     manifest table partitioned by `snap_day`, split into staging (an
+  *     immutable `batch-<uuid>` dir, invisible until its manifest flip)
+  *     and commit ([[StreamDedup.stageMerge]] /
+  *     [[Upsert.commitReplace]], O(touched days) I/O);
   *  3. maintains the DIMS through the same manifest protocol
   *     ([[Upsert.writeTableAtomic]]), so a crash mid-dim-write leaves the
   *     previous committed dim readable; dims land ON DISK before the star
@@ -32,11 +33,11 @@ import graft.pipeline.{JoinAll, Upsert}
   *     of O(distinct keys)) — written concurrently after the fact flip;
   *  4. rebuilds ONLY the touched days of the star — the day set the fact
   *     merge read (batch days + predecessors) is re-derived from just
-  *     those days' manifest entries of the merged fact and atomically
-  *     REPLACES those `date_key` partitions
-  *     ([[Upsert.replacePartitionsAtomic]]): per batch the star work is
-  *     O(touched days), not O(star), and a crash anywhere leaves the
-  *     previous committed star in force.
+  *     those days' partitions of the merged fact
+  *     ([[Upsert.readTablePartitions]]) and atomically REPLACES those
+  *     `date_key` partitions ([[Upsert.replacePartitionsAtomic]]): per
+  *     batch the star work is O(touched days), not O(star), and a crash
+  *     anywhere leaves the previous committed star in force.
   *
   * Late/duplicate tolerance comes from the fact merge (keep-latest with
   * previous-day read), and end-state equivalence with the batch pipeline
@@ -128,7 +129,7 @@ object StreamStar {
       else stageFact()
     // incremental: every dim has committed by now (see above for why the
     // fact must not flip first)
-    StreamDedup.commitMerge(staged, committer)
+    Upsert.commitReplace(staged, committer)
     if (!incremental) {
       // full rebuild (or first-batch seed): whole-rebuild dim snapshots of
       // the merged fact through the SAME manifest protocol as the fact and
@@ -136,7 +137,7 @@ object StreamStar {
       // force (plain SaveMode.Overwrite is delete-then-write: a crash in
       // that window leaves NO readable dim), so every table in the DAG
       // carries the commit guarantee
-      val fact = StreamDedup.readSnapshot(spark, p.factSnap, committer)
+      val fact = Upsert.readTable(spark, p.factSnap, committer)
       val meta = batchId.map(id => Map("batch" -> id.toString)).getOrElse(Map.empty)
       JoinAll(spark)(Seq(
         () => Upsert.writeTableAtomic(spark, Dims.dimUser(fact), p.dimUser, committer, meta),
@@ -151,12 +152,12 @@ object StreamStar {
     // those partitions. `readDays` (not just days with surviving rows) is
     // the replace set, so a day whose rows all moved forward is dropped,
     // not left stale.
-    val readDays = staged.readDays
-    val factTouched = StreamDedup.readSnapshotDays(spark, p.factSnap,
-      committer.readManifest(p.factSnap), readDays, staged.schema)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed day of ${readDays.mkString(",")} at ${p.factSnap}"))
-      .drop("snap_day")
+    val readDays = staged.parts
+    val factManifest = committer.readManifest(p.factSnap)
+    if (!readDays.exists(factManifest.contains)) throw new IllegalStateException(
+      s"no committed day of ${readDays.mkString(",")} at ${p.factSnap}")
+    val factTouched = Upsert.readTablePartitions(spark, p.factSnap, readDays,
+      factManifest).drop("snap_day")
     val starDelta = Star.factStar(
       factTouched,
       Upsert.readTable(spark, p.dimUser, committer),
@@ -181,12 +182,12 @@ object StreamStar {
   private def absorbBatchIntoDims(spark: SparkSession, batch: DataFrame,
                                   days: Seq[String], p: StarPaths, batchId: Long,
                                   committer: SnapshotCommitter,
-                                  stageFact: () => StreamDedup.StagedMerge)
-      : StreamDedup.StagedMerge = {
-    val ids = batch.select("event_id")
-    val oldIds = StreamDedup.readSnapshotDays(spark, p.factSnap,
-      committer.readManifest(p.factSnap), days, ids.schema)
-      .getOrElse(ids.limit(0))
+                                  stageFact: () => Upsert.StagedReplace)
+      : Upsert.StagedReplace = {
+    // the fact is committed: it flips before the seed's dims are written,
+    // and this path runs only once every dim exists
+    val oldIds = Upsert.readTablePartitions(spark, p.factSnap, days, committer)
+      .select("event_id")
     val newEvents = Dedup.keepLatestAgg(batch, Seq("event_id"), Seq(col("ts")))
       .join(oldIds, Seq("event_id"), "left_anti")
       .persist()
@@ -200,7 +201,7 @@ object StreamStar {
       absorb(p.dimUser, Dims.mergeDimUser),
       absorb(p.dimEventType, Dims.mergeDimEventType),
       absorb(p.dimDate, Dims.mergeDimDate)).flatten
-    val branches: Seq[() => Option[StreamDedup.StagedMerge]] =
+    val branches: Seq[() => Option[Upsert.StagedReplace]] =
       (() => Some(stageFact())) +: dimWrites.map(w => () => { w(); None })
     try JoinAll(spark)(branches).head.get
     finally newEvents.unpersist()

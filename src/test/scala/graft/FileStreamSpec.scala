@@ -7,12 +7,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.Upsert
 import graft.streaming.{AtomicRenameCommitter, StreamDedup}
 
 /** Production-shaped streaming: a file source discovered incrementally
-  * across restarts (checkpointed), merged into a keep-latest parquet
-  * snapshot via foreachBatch — the reference's replicate-then-repair loop
-  * as a continuous pipeline.
+  * across restarts (checkpointed), merged into a keep-latest snapshot
+  * manifest table via foreachBatch — the reference's replicate-then-repair
+  * loop as a continuous pipeline.
   */
 class FileStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -51,7 +52,7 @@ class FileStreamSpec extends AnyFunSuite {
     ).toDF("event_id", "ts", "event_type", "value")
     addBatch(src, 1, b1)
     runOnce(src, snap, ckpt, b1.schema)
-    val s1 = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val s1 = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(s1 == Map(1L -> 1.0, 2L -> 2.0))
 
@@ -63,7 +64,7 @@ class FileStreamSpec extends AnyFunSuite {
     ).toDF("event_id", "ts", "event_type", "value")
     addBatch(src, 2, b2)
     runOnce(src, snap, ckpt, b1.schema)
-    val s2 = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val s2 = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(s2 == Map(1L -> 1.0, 2L -> 22.0, 3L -> 3.0))
   }
@@ -82,12 +83,12 @@ class FileStreamSpec extends AnyFunSuite {
 
     // resolve a day's data files THROUGH the manifest (the committed view)
     def partFiles(day: String): Map[String, Long] = {
-      val rel = StreamDedup.readManifest(snap.toString)(day)
+      val rel = AtomicRenameCommitter.readManifest(snap.toString)(day)
       new java.io.File(snap.toFile, rel)
         .listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> f.lastModified()).toMap
     }
-    val day1EntryBefore = StreamDedup.readManifest(snap.toString)("20240101")
+    val day1EntryBefore = AtomicRenameCommitter.readManifest(snap.toString)("20240101")
     val day1Before = partFiles("20240101")
     assert(day1Before.nonEmpty)
 
@@ -98,9 +99,9 @@ class FileStreamSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "event_type", "value")
     addBatch(src, 2, b2)
     runOnce(src, snap, ckpt, b1.schema)
-    assert(StreamDedup.readManifest(snap.toString)("20240101") == day1EntryBefore)
+    assert(AtomicRenameCommitter.readManifest(snap.toString)("20240101") == day1EntryBefore)
     assert(partFiles("20240101") == day1Before)
-    assert(StreamDedup.readManifest(snap.toString).contains("20240104"))
+    assert(AtomicRenameCommitter.readManifest(snap.toString).contains("20240104"))
 
     // a cross-midnight re-delivery: event 2's newer version lands on 01-02,
     // the previous-day read removes the superseded row from 01-01
@@ -108,10 +109,10 @@ class FileStreamSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "event_type", "value")
     addBatch(src, 3, b3)
     runOnce(src, snap, ckpt, b1.schema)
-    val all = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val all = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(all == Map(1L -> 1.0, 2L -> 22.0, 3L -> 3.0, 4L -> 4.0))
-    val day1Rows = StreamDedup.readSnapshot(spark, snap.toString)
+    val day1Rows = Upsert.readTable(spark, snap.toString)
       .filter($"snap_day" === "20240101").collect()
     assert(day1Rows.map(_.getAs[Long]("event_id")).toSet == Set(1L)) // stale row gone
   }
@@ -123,7 +124,7 @@ class FileStreamSpec extends AnyFunSuite {
       (2L, ts("2024-01-02 08:00:00"), "b", 2.0)
     ).toDF("event_id", "ts", "event_type", "value")
     StreamDedup.mergeBatchIntoSnapshot(spark, b1, snap.toString, "event_id", "ts")
-    val committed = StreamDedup.readManifest(snap.toString)
+    val committed = AtomicRenameCommitter.readManifest(snap.toString)
 
     // kill merge #2 inside the commit window: stage without commit — its
     // batch dir is fully written but the manifest was never flipped
@@ -137,21 +138,21 @@ class FileStreamSpec extends AnyFunSuite {
     // the committed view is byte-for-byte the pre-crash state: the orphaned
     // batch dir is invisible to readers — day 01-01 neither lost (rows
     // still there) nor doubled (the staged copy of event 1 not visible)
-    assert(StreamDedup.readManifest(snap.toString) == committed,
+    assert(AtomicRenameCommitter.readManifest(snap.toString) == committed,
       "a crashed merge must not change the committed manifest")
-    val afterCrash = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val afterCrash = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(afterCrash == Map(1L -> 1.0, 2L -> 2.0),
       s"crash window must preserve exactly the committed state, got $afterCrash")
 
     // the retried merge commits normally AND garbage-collects the orphan
     StreamDedup.mergeBatchIntoSnapshot(spark, b2, snap.toString, "event_id", "ts")
-    val retried = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val retried = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(retried == Map(1L -> 11.0, 2L -> 2.0, 3L -> 3.0),
       s"retried merge must land the batch exactly once, got $retried")
-    val live = StreamDedup.readManifest(snap.toString).values
-      .map(_.split("/").head).toSet
+    val live = Upsert.dataEntries(AtomicRenameCommitter.readManifest(snap.toString))
+      .values.map(_.split("/").head).toSet
     val onDisk = snap.toFile.listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
       .map(_.getName).toSet
@@ -194,12 +195,12 @@ class FileStreamSpec extends AnyFunSuite {
     }
     // the lost put changed nothing a reader can see
     assert(committer.readManifest(snap.toString) == committed)
-    val afterFault = StreamDedup.readSnapshot(spark, snap.toString, committer).collect()
+    val afterFault = Upsert.readTable(spark, snap.toString, committer).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(afterFault == Map(1L -> 1.0, 2L -> 2.0))
     // retry (the stream's replayed micro-batch) commits exactly once
     StreamDedup.mergeBatchIntoSnapshot(spark, b2, snap.toString, "event_id", "ts", committer)
-    val retried = StreamDedup.readSnapshot(spark, snap.toString, committer).collect()
+    val retried = Upsert.readTable(spark, snap.toString, committer).collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(retried == Map(1L -> 11.0, 2L -> 2.0))
   }
@@ -231,7 +232,7 @@ class FileStreamSpec extends AnyFunSuite {
     StreamDedup.mergeBatchIntoSnapshot(spark, b3, snap.toString, "event_id", "ts")
     assert(gen1.intersect(dayDirs()).isEmpty,
       s"gen-1 dirs must be collected at the NEXT merge: ${dayDirs()}")
-    val live = StreamDedup.readSnapshot(spark, snap.toString).collect()
+    val live = Upsert.readTable(spark, snap.toString).collect()
       .map(r => r.getAs[Double]("value")).toSeq
     assert(live == Seq(111.0))
   }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dims
 import graft.pipeline.{Pipeline, Upsert}
 import graft.sources.Tables
-import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, StreamDedup, StreamStar}
+import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, StreamStar}
 
 /** Mergeable (incremental) dims: the O(dim + batch) refresh path that
   * replaces the O(fact) per-cycle rebuild at scale. Pinned here:
@@ -163,7 +163,7 @@ class IncrementalDimsSpec extends AnyFunSuite {
       // crash-replay of batch 2 with no fault converges to the pipeline
       StreamStar.upsertStarBatch(spark, c2, root, c, Some(2L), incrementalDims = true)
       assertEqualsPipeline(root)
-      assert(StreamDedup.readSnapshot(spark, p.factSnap, c).count() ==
+      assert(Upsert.readTable(spark, p.factSnap, c).count() ==
         Tables.events(spark, sf).select("event_id").distinct().count())
     }
   }
@@ -213,7 +213,6 @@ class IncrementalDimsSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(cnt == Seq(3L), s"duplicate event must count once: $cnt")
     // and the fact itself holds 3 rows (the dedup repaired the replay)
-    assert(graft.streaming.StreamDedup
-      .readSnapshot(spark, s"$root/fact_snap").count() == 3L)
+    assert(Upsert.readTable(spark, s"$root/fact_snap").count() == 3L)
   }
 }

@@ -182,14 +182,14 @@ object PropertySpec extends Properties("graft") {
     forAll(upsertGen) { case (base, delta) =>
       val dir = java.nio.file.Files.createTempDirectory("graft-upsert-prop").toString + "/t"
       def day(id: Long) = s"d${id % 4}"
-      base.map { case (id, v, ver) => (day(id), id, v, ver) }
-        .toDF("day", "id", "value", "version")
-        .write.mode("overwrite").partitionBy("day").parquet(dir)
-      graft.pipeline.Upsert.upsertPartitions(spark,
-        delta.map { case (id, v, ver) => (day(id), id, v, ver) }
-          .toDF("day", "id", "value", "version"),
-        dir, "day", keys = Seq("id"), order = Seq("version"))
-      val got = spark.read.parquet(dir)
+      def upsert(rows: List[(Long, Long, Long)]) =
+        graft.pipeline.Upsert.upsertPartitionsAtomic(spark,
+          rows.map { case (id, v, ver) => (day(id), id, v, ver) }
+            .toDF("day", "id", "value", "version"),
+          dir, "day", keys = Seq("id"), order = Seq("version"))
+      upsert(base) // seeds the table: base keys are distinct
+      upsert(delta)
+      val got = graft.pipeline.Upsert.readTable(spark, dir)
         .select("id", "value", "version").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val touched = delta.map(d => day(d._1)).toSet

@@ -245,11 +245,10 @@ class TimeTravelSpec extends AnyFunSuite {
       batch((1L, "2024-03-01 11:00:00", 2.0), (2L, "2024-03-02 09:00:00", 3.0)),
       path, "event_id", "ts", c)
     assert(c.versions(path) == Seq(1L, 2L))
-    val v1 = spark.read.parquet(
-        c.readManifestAsOf(path, 1L).values.map(r => s"$path/$r").toSeq: _*)
+    val v1 = Upsert.readTableAsOf(spark, path, 1L, c)
       .selectExpr("event_id", "value").as[(Long, Double)].collect().toSet
     assert(v1 == Set((1L, 1.0)), "version 1 must still be the pre-merge state")
-    val cur = graft.streaming.StreamDedup.readSnapshot(spark, path, c)
+    val cur = Upsert.readTable(spark, path, c)
       .selectExpr("event_id", "value").as[(Long, Double)].collect().toSet
     assert(cur == Set((1L, 2.0), (2L, 3.0)))
   }

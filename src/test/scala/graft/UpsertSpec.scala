@@ -2,35 +2,49 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Upsert
+import graft.streaming.AtomicRenameCommitter
 
-/** Partition-pruned incremental upsert: merge correctness (update wins,
-  * insert lands, delta beats existing on order ties), and the scale
-  * contract — untouched partition directories are byte-identical after
-  * the merge, touched ones are rewritten.
+/** Partition-pruned incremental upsert over a manifest table: merge
+  * correctness (update wins, insert lands, delta beats existing on order
+  * ties), and the scale contract — untouched partitions keep their
+  * manifest entries and data files after the merge, touched ones are
+  * rewritten.
   */
 class UpsertSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def upsert(path: String, delta: DataFrame): Upsert.UpsertStats =
+    Upsert.upsertPartitionsAtomic(spark, delta, path, "day",
+      keys = Seq("id"), order = Seq("version"))
+
   private def seedTable(path: String): Unit =
-    Seq(
+    upsert(path, Seq(
       ("d1", 1L, 10.0, 100L), ("d1", 2L, 20.0, 100L),
       ("d2", 3L, 30.0, 100L), ("d2", 4L, 40.0, 100L),
       ("d3", 5L, 50.0, 100L),
       ("d4", 6L, 60.0, 100L), ("d4", 7L, 70.0, 100L),
       ("d5", 8L, 80.0, 100L))
-      .toDF("day", "id", "value", "version")
-      .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(path)
+      .toDF("day", "id", "value", "version"))
 
+  /** Each committed partition's data files, resolved through the manifest. */
   private def partFiles(path: String): Map[String, Set[(String, Long)]] =
-    new java.io.File(path).listFiles().filter(_.getName.startsWith("day="))
-      .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet).toMap
+    AtomicRenameCommitter.readManifest(path).collect {
+      case (p, rel) if !p.startsWith("__") =>
+        p -> new java.io.File(s"$path/$rel").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => (s"$rel/${f.getName}", f.lastModified())).toSet
+    }
+
+  private def readAtomic(path: String): Set[(String, Long, Double, Long)] =
+    Upsert.readTable(spark, path)
+      .select("day", "id", "value", "version").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
 
   test("upsert rewrites only the touched partitions; merge keeps latest per key") {
     val path = Files.createTempDirectory("graft-upsert").toString + "/t"
@@ -44,25 +58,22 @@ class UpsertSpec extends AnyFunSuite {
       ("d6", 10L, 99.0, 101L)) // brand-new partition
       .toDF("day", "id", "value", "version")
 
-    val stats = Upsert.upsertPartitions(spark, delta, path, "day",
-      keys = Seq("id"), order = Seq("version"))
+    val stats = upsert(path, delta)
     assert(stats.touchedPartitions == Seq("d2", "d4", "d6"))
     assert(stats.deltaRows == 4)
 
     val after = partFiles(path)
     // the 100-TB contract: work scales with the delta — partitions the
     // batch never mentioned are not listed, read, or replaced
-    Seq("day=d1", "day=d3", "day=d5").foreach { p =>
+    Seq("d1", "d3", "d5").foreach { p =>
       assert(after(p) == before(p), s"untouched partition $p was rewritten")
     }
-    Seq("day=d2", "day=d4").foreach { p =>
+    Seq("d2", "d4").foreach { p =>
       assert(after(p) != before(p), s"touched partition $p was not rewritten")
     }
-    assert(after.contains("day=d6"), "new partition must be created")
+    assert(after.contains("d6"), "new partition must be created")
 
-    val rows = spark.read.parquet(path)
-      .select("day", "id", "value", "version").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    val rows = readAtomic(path)
     assert(rows == Set(
       ("d1", 1L, 10.0, 100L), ("d1", 2L, 20.0, 100L),
       ("d2", 3L, 31.0, 101L), ("d2", 4L, 40.0, 100L), ("d2", 9L, 90.0, 101L),
@@ -73,12 +84,8 @@ class UpsertSpec extends AnyFunSuite {
 
     // idempotency: replaying the same batch converges (delta wins its own
     // ties, so the rewrite produces identical content)
-    Upsert.upsertPartitions(spark, delta, path, "day",
-      keys = Seq("id"), order = Seq("version"))
-    val replay = spark.read.parquet(path)
-      .select("day", "id", "value", "version").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(replay == rows, "replaying the same delta must be a no-op on content")
+    upsert(path, delta)
+    assert(readAtomic(path) == rows, "replaying the same delta must be a no-op on content")
   }
 
   test("delta carrying two partition values for one key is rejected") {
@@ -87,18 +94,12 @@ class UpsertSpec extends AnyFunSuite {
     val relocating = Seq(("d1", 1L, 11.0, 101L), ("d2", 1L, 12.0, 102L))
       .toDF("day", "id", "value", "version")
     val e = intercept[IllegalArgumentException] {
-      Upsert.upsertPartitions(spark, relocating, path, "day",
-        keys = Seq("id"), order = Seq("version"))
+      upsert(path, relocating)
     }
     assert(e.getMessage.contains("functionally dependent"))
   }
 
-  // ---- manifest-committed atomic variant ----
-
-  private def readAtomic(path: String): Set[(String, Long, Double, Long)] =
-    Upsert.readTable(spark, path)
-      .select("day", "id", "value", "version").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+  // ---- manifest protocol ----
 
   test("atomic upsert: merge correctness and manifest-level pruning") {
     val path = Files.createTempDirectory("graft-upsert-atomic").toString + "/t"
@@ -151,8 +152,8 @@ class UpsertSpec extends AnyFunSuite {
     val delta = Seq(("d1", 1L, 11.0, 101L), ("d2", 3L, 31.0, 101L))
       .toDF("day", "id", "value", "version")
     // crash INSIDE the window: merged data staged, pointer never flipped
-    Upsert.upsertPartitionsAtomicImpl(spark, delta, path, "day",
-      keys = Seq("id"), order = Seq("version"), crashBeforeCommit = true)
+    Upsert.stageUpsert(spark, delta, path, "day",
+      keys = Seq("id"), order = Seq("version"))
 
     // readers see exactly the old committed state — not the new d1 with
     // the old d2 (the mixed state dynamic partition-overwrite can leave)
@@ -222,9 +223,8 @@ class UpsertSpec extends AnyFunSuite {
     val path = Files.createTempDirectory("graft-upsert-stale").toString + "/t"
     seedTable(path)
     val stale = Seq(("d1", 1L, -1.0, 99L)).toDF("day", "id", "value", "version")
-    Upsert.upsertPartitions(spark, stale, path, "day",
-      keys = Seq("id"), order = Seq("version"))
-    val v = spark.read.parquet(path).filter(col("id") === 1L)
+    upsert(path, stale)
+    val v = Upsert.readTable(spark, path).filter(col("id") === 1L)
       .select("value", "version").collect().map(r => (r.getDouble(0), r.getLong(1)))
     assert(v.toSeq == Seq((10.0, 100L)),
       "a lower-version delta row must not clobber the newer existing row")
