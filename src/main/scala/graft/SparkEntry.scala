@@ -2099,24 +2099,24 @@ object SparkEntry {
       pipeline.Upsert.readTable(s, out, c)
     }),
     // MANIFEST ZONE MAPS: the fact committed day-partitioned with
-    // per-partition ts_us ranges; the week-window read prunes by the
-    // committed stats BEFORE any listing, then applies the exact
-    // predicate. The oracle recomputes the window from `events` directly,
-    // so a zone map that wrongly SKIPS a partition (the dangerous failure
-    // — the exact filter can't restore rows never read) hash-mismatches;
-    // the superset/never-wrongly-skip mechanics are pinned in ZoneMapSpec.
+    // per-partition ts_us ranges; the week-window filter over readTable
+    // prunes by the committed stats BEFORE any listing (the fixture
+    // requires the index to skip day partitions). The oracle recomputes
+    // the window from `events` directly, so a zone map that wrongly SKIPS
+    // a partition (the dangerous failure — the exact filter can't restore
+    // rows never read) hash-mismatches; the superset/never-wrongly-skip
+    // mechanics are pinned in ZoneMapSpec.
     "table_zone_pruned" -> ((s, d) => {
       val (out, c, lo, hi) = zoneDemo(s, d)
-      pipeline.Upsert.readTableRangePruned(s, out, "ts_us", lo.toDouble,
-          hi.toDouble, c)
+      pipeline.Upsert.readTable(s, out, c)
         .filter(col("ts_us").between(lo, hi))
     }),
-    // the DECLARATIVE form of the same read: a plain .filter over the
-    // ManifestFileIndex relation — Catalyst pushes the range predicate
-    // into the custom FileIndex, which consults the committed zone maps
-    // during scan planning and never lists the skipped day partitions
-    // (numFiles-metric-asserted in ManifestIndexSpec). Same oracle as the
-    // explicit form: identical rows, pruning invisible to results.
+    // the same window through `readTableIndexed` with an explicit
+    // projection: Catalyst pushes the range predicate into the custom
+    // FileIndex, which consults the committed zone maps during scan
+    // planning and never lists the skipped day partitions
+    // (numFiles-metric-asserted in ManifestIndexSpec). Same oracle as
+    // `table_zone_pruned`: identical rows, pruning invisible to results.
     "table_zone_pruned_auto" -> ((s, d) => {
       val (out, c, lo, hi) = zoneDemo(s, d)
       sources.ManifestTable.readTableIndexed(s, out, c)
@@ -2483,14 +2483,14 @@ object SparkEntry {
     // lifecycle, and compaction carry-over are pinned in BloomSkipSpec.
     "table_bloom_pruned" -> ((s, d) => {
       val (out, c, target) = bloomDemo(s, d)
-      pipeline.Upsert.readTablePointPruned(s, out, "event_id", Seq(target), c)
+      pipeline.Upsert.readTable(s, out, c)
         .filter(col("event_id") === target)
     }),
-    // the DECLARATIVE form: a plain `=` filter over the ManifestFileIndex
-    // relation — Catalyst pushes the equality to the custom FileIndex,
+    // the same lookup through `readTableIndexed` with an explicit
+    // projection: Catalyst pushes the equality to the custom FileIndex,
     // which consults the committed bloom sidecars during scan planning and
     // never lists the rejected buckets (numFiles-asserted in
-    // BloomSkipSpec). Same oracle as the explicit form.
+    // BloomSkipSpec). Same oracle as `table_bloom_pruned`.
     "table_bloom_pruned_auto" -> ((s, d) => {
       val (out, c, target) = bloomDemo(s, d)
       sources.ManifestTable.readTableIndexed(s, out, c)
@@ -2710,6 +2710,16 @@ object SparkEntry {
       (out, c)
     })
 
+  /** Partition dirs the manifest index lists for `df`'s scans under the
+    * filters Catalyst pushed into them — how the pruning fixtures prove
+    * the planned read actually skips.
+    */
+  private def listedPartitions(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters).size
+    }.sum
+
   /** Process-level memo for the zone-map demo table (the deduped fact
     * committed day-partitioned with ts_us range stats): built once per
     * (session, dir) — it is immutable after build, and BOTH zone-pruning
@@ -2735,8 +2745,8 @@ object SparkEntry {
         committer = c)
       val lo = state.agg(min(col("ts_us"))).head().getLong(0)
       val hi = lo + 7L * 86400L * 1000000L
-      require(pipeline.Upsert.rangePrunedEntries(c.readManifest(out), "ts_us",
-          lo.toDouble, hi.toDouble).size < days.size,
+      require(listedPartitions(pipeline.Upsert.readTable(s, out, c)
+          .filter(col("ts_us").between(lo, hi))) < days.size,
         "the week window must actually prune day partitions")
       (out, c, lo, hi)
     })
@@ -2789,10 +2799,10 @@ object SparkEntry {
       pipeline.Upsert.replacePartitionsAtomic(s, state, out, "bucket",
         (0L until 8L).map(_.toString), committer = c)
       val target = state.agg(max(col("event_id"))).head().getLong(0)
-      val kept = pipeline.Upsert.bloomPrunedEntries(out,
-        c.readManifest(out), "event_id", Seq(target))
-      require(kept.nonEmpty && kept.size < 8,
-        s"the point lookup must actually prune user buckets (kept ${kept.size})")
+      val kept = listedPartitions(pipeline.Upsert.readTable(s, out, c)
+        .filter(col("event_id") === target))
+      require(kept > 0 && kept < 8,
+        s"the point lookup must actually prune user buckets (kept $kept)")
       (out, c, target)
     })
 

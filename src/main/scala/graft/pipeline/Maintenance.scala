@@ -24,12 +24,12 @@ import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, SnapshotGc}
   *    re-clustering, the OPTIMIZE ... ZORDER BY shape.
   *  - '''atomicity''': rewritten partitions land in a fresh immutable
   *    `batch-<uuid>/` staging dir; visibility is ONE manifest replace
-  *    covering every compacted partition at once (the
-  *    [[graft.streaming.SnapshotCommitter]] seam shared with the upsert
-  *    and streaming merges) — readers see the whole compaction or none of
-  *    it, never a mix, and a crash anywhere before the flip leaves the
-  *    previous manifest byte-identical ([[MaintenanceSpec]] kills a
-  *    compaction inside that window).
+  *    covering every compacted partition at once, published by
+  *    [[Upsert.commitReplace]] — the commit half the partition writes and
+  *    the streaming merge share — readers see the whole compaction or none
+  *    of it, never a mix, and a crash anywhere before the flip leaves the
+  *    previous manifest byte-identical ([[MaintenanceSpec]] stops a
+  *    compaction after its staging half).
   *  - '''time travel survives''': under a
   *    [[graft.streaming.VersionedCommitter]] the compaction is just the
   *    next version; pre-compaction versions keep their (immutable,
@@ -101,17 +101,23 @@ object Maintenance {
               zorderCols: Seq[String] = Nil,
               committer: SnapshotCommitter = AtomicRenameCommitter): CompactStats =
     Upsert.withOp(committer, tablePath, "compact") {
-      compactImpl(spark, tablePath, targetFileBytes, zorderCols,
-        crashBeforeCommit = false, committer)
+      val (stats, staged) = stageCompact(spark, tablePath, targetFileBytes,
+        zorderCols, committer)
+      staged.fold(stats) { st =>
+        Upsert.commitReplace(st, committer)
+        stats.copy(committed = true)
+      }
     }
 
-  /** `crashBeforeCommit` is the fault-injection seam (staging written, no
-    * manifest flip) — the window the commit protocol must tolerate.
+  /** The staging half of [[compact]]: rewrite the selected partitions
+    * under a fresh batch dir and build the manifest that re-points them
+    * (None when nothing needs compacting). Nothing is visible until
+    * [[Upsert.commitReplace]] publishes it; staging alone is the crash
+    * window the commit protocol must tolerate.
     */
-  private[graft] def compactImpl(spark: SparkSession, tablePath: String,
-                                 targetFileBytes: Long, zorderCols: Seq[String],
-                                 crashBeforeCommit: Boolean,
-                                 committer: SnapshotCommitter): CompactStats = {
+  private[graft] def stageCompact(spark: SparkSession, tablePath: String,
+                                  targetFileBytes: Long, zorderCols: Seq[String],
+                                  committer: SnapshotCommitter): (CompactStats, Option[Upsert.StagedReplace]) = {
     val manifest = committer.readManifest(tablePath)
     // data dirs AND pending deletion sidecars — both are on-disk refs
     val dataRefs = Upsert.liveDirRefs(manifest)
@@ -132,8 +138,8 @@ object Maintenance {
       p.nFiles > targetFiles(p.bytes, targetFileBytes) ||
         hasPendingSidecars(p.key))
     if (selected.isEmpty)
-      return CompactStats(Nil, stats.map(_.nFiles.toLong).sum,
-        stats.map(_.nFiles.toLong).sum, 0L, committed = false)
+      return (CompactStats(Nil, stats.map(_.nFiles.toLong).sum,
+        stats.map(_.nFiles.toLong).sum, 0L, committed = false), None)
 
     val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
     // partitions compact independently — run their rewrite jobs
@@ -183,11 +189,6 @@ object Maintenance {
     val untouchedFiles = stats.filterNot(p => selected.exists(_.key == p.key))
       .map(_.nFiles.toLong).sum
 
-    if (crashBeforeCommit)
-      return CompactStats(selected.map(_.key), stats.map(_.nFiles.toLong).sum,
-        untouchedFiles + afterSelected, selected.map(_.bytes).sum,
-        committed = false)
-
     // one flip re-points every compacted partition (materialized deletion
     // and delta sidecars drop with it); other `__` metadata rides along
     // untouched. Per-FILE stats are regenerated from the new dirs'
@@ -204,18 +205,17 @@ object Maintenance {
     }.toMap
     // dropCarriedCdf: compaction's logical delta is EMPTY — carrying the
     // predecessor's change log would serve a stale feed for this step
-    committer.commit(tablePath,
-      Upsert.dropCarriedCdf(manifest
+    val newManifest = Upsert.dropCarriedCdf(manifest
         -- rewritten.map { case (p, _) => s"__del.${p.key}" }
         -- rewritten.map { case (p, _) => s"__delta.${p.key}" }
         -- staleFileStats) ++
-        rewritten.map { case (p, rel) => p.key -> rel } ++ freshFileStats)
-    // release the superseded layout one merge cycle late (reader grace)
-    SnapshotGc.gcUnreferenced(tablePath, dataRefs ++ rewritten.map(_._2) ++
-      committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-    CompactStats(selected.map(_.key), stats.map(_.nFiles.toLong).sum,
+      rewritten.map { case (p, rel) => p.key -> rel } ++ freshFileStats
+    val keys = rewritten.map(_._1.key)
+    (CompactStats(keys, stats.map(_.nFiles.toLong).sum,
       untouchedFiles + afterSelected, selected.map(_.bytes).sum,
-      committed = true)
+      committed = false),
+      Some(Upsert.StagedReplace(tablePath,
+        keys.map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName),
+        manifest, batchDirName, keys.toSet, newManifest)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.sources.ManifestTable
 import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter, SnapshotGc, TableFs}
 
 /** Manifest tables: parquet data under immutable `batch-<uuid>` dirs,
@@ -114,38 +115,25 @@ object Upsert {
       UpsertStats(staged.parts, delta.count(), staged.writtenRows)
     }
 
-  /** Committed state of a manifest-table: exactly the manifest-referenced
-    * partition dirs. Returns an empty-schema-less error if nothing has
-    * ever been committed (callers seed via [[upsertPartitionsAtomic]] with
-    * the initial load as the delta).
+  /** Committed state of a manifest-table: a relation over a
+    * [[graft.sources.ManifestFileIndex]] of every data entry, so filters
+    * prune through the committed zone maps and bloom sidecars, and
+    * COUNT(*) and join order can use the committed row counts and stats
+    * ([[graft.sources.ManifestTable]]). Throws if nothing has ever been
+    * committed (callers seed via [[upsertPartitionsAtomic]] with the
+    * initial load as the delta).
     */
   def readTable(spark: SparkSession, tablePath: String,
                 committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
     val manifest = committer.readManifest(tablePath)
     val data = dataEntries(manifest)
     require(data.nonEmpty, s"no committed table at $tablePath")
-    readBound(spark, manifest, tablePath, data)
+    ManifestTable.read(spark, tablePath, manifest, data)
   }
 
-  /** Read `entries` (manifest partition key → rel) bound to the committed
-    * (logical-presented) schema, or — when pruning kept nothing — an
-    * EMPTY frame with the same logical schema (the one shared fallback
-    * for every pruned-read surface).
-    */
-  private def emptyOrBound(spark: SparkSession, manifest: Map[String, String],
-                           tablePath: String,
-                           entries: Map[String, String]): DataFrame =
-    if (entries.nonEmpty) readBound(spark, manifest, tablePath, entries)
-    else {
-      val schema = committedSchema(manifest).getOrElse(
-        spark.read.parquet(dataEntries(manifest).values.map(r => s"$tablePath/$r").toSeq: _*).schema)
-      toLogical(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), manifest)
-    }
-
-  /** Manifest-pruned partition read: ONLY the named partitions' committed
-    * dirs are listed/opened — the same O(touched) I/O the upsert's
-    * internal pruned scan does, as a public read surface. Unknown
+  /** Manifest-pruned partition read: the same relation as [[readTable]]
+    * over ONLY the named partitions' entries — no other dir is listed or
+    * opened, and a COUNT(*) of it counts those partitions alone. Unknown
     * partition values read nothing (not an error).
     */
   def readTablePartitions(spark: SparkSession, tablePath: String,
@@ -161,9 +149,7 @@ object Upsert {
                                          values: Seq[String],
                                          manifest: Map[String, String]): DataFrame = {
     require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
-    val entries = values.map(partKey)
-      .flatMap(k => manifest.get(k).map(k -> _)).toMap
-    emptyOrBound(spark, manifest, tablePath, entries)
+    ManifestTable.read(spark, tablePath, manifest, entriesOf(manifest, values))
   }
 
   /** TIME TRAVEL: the table exactly as committed at `version` (a
@@ -182,7 +168,7 @@ object Upsert {
     val manifest = committer.readManifestAsOfTag(tablePath, tagName)
     val data = dataEntries(manifest)
     require(data.nonEmpty, s"tag $tagName of $tablePath has no data entries")
-    readBound(spark, manifest, tablePath, data)
+    ManifestTable.read(spark, tablePath, manifest, data)
   }
 
   def readTableAsOf(spark: SparkSession, tablePath: String, version: Long,
@@ -190,7 +176,7 @@ object Upsert {
     val manifest = committer.readManifestAsOf(tablePath, version)
     val data = dataEntries(manifest)
     require(data.nonEmpty, s"version $version of $tablePath has no data entries")
-    readBound(spark, manifest, tablePath, data)
+    ManifestTable.read(spark, tablePath, manifest, data)
   }
 
   /** TIMESTAMP AS OF: the table as it stood at wall-clock `tsMs` — the
@@ -207,7 +193,7 @@ object Upsert {
     val data = dataEntries(manifest)
     require(data.nonEmpty,
       s"$tablePath as of timestamp $tsMs has no data entries")
-    readBound(spark, manifest, tablePath, data)
+    ManifestTable.read(spark, tablePath, manifest, data)
   }
 
   /** Keyed NET diff of two readable states — the engine-owned comparison
@@ -316,16 +302,16 @@ object Upsert {
       (dataEntries(mFrom).nonEmpty, dataEntries(mTo).nonEmpty) match {
         case (true, true) =>
           keyedDiff(
-            emptyOrBound(spark, mFrom, tablePath,
+            ManifestTable.read(spark, tablePath, mFrom,
               dataEntries(mFrom).filter(e => changed(e._1))),
-            emptyOrBound(spark, mTo, tablePath,
+            ManifestTable.read(spark, tablePath, mTo,
               dataEntries(mTo).filter(e => changed(e._1))), keys)
         case (false, true) =>
-          val post = emptyOrBound(spark, mTo, tablePath,
+          val post = ManifestTable.read(spark, tablePath, mTo,
             dataEntries(mTo).filter(e => changed(e._1)))
           keyedDiff(post.limit(0), post, keys)
         case (true, false) =>
-          val pre = emptyOrBound(spark, mFrom, tablePath,
+          val pre = ManifestTable.read(spark, tablePath, mFrom,
             dataEntries(mFrom).filter(e => changed(e._1)))
           keyedDiff(pre, pre.limit(0), keys)
         case (false, false) => throw new IllegalArgumentException(
@@ -548,18 +534,10 @@ object Upsert {
     val touched = touchedPartitionsOf(
       changes.drop("change_type"), partCol, keys)
     val manifest = committer.readManifest(tablePath)
-    val existingPaths = touched.flatMap(t => manifest.get(partKey(t)))
-      .map(rel => s"$tablePath/$rel")
-    val existing =
-      if (existingPaths.nonEmpty)
-        // read PHYSICAL (files never rename), apply the touched
-        // partitions' pending MoR sidecars, then present logical — the
-        // same seam the upsert path uses
-        toLogical(applyMor(spark,
-          spark.read.schema(toPhysical(upserts, manifest).schema)
-            .parquet(existingPaths: _*), manifest, tablePath,
-          Some(touched.map(partKey).toSet)), manifest)
-      else upserts.limit(0)
+    // bound to the feed's schema: the feed carries the newest shape
+    val existing = ManifestTable.read(spark, tablePath, manifest,
+      entriesOf(manifest, touched),
+      Some(toPhysical(upserts, manifest).schema))
     val kept = existing.join(dels, keys, "left_anti")
     val merged = mergeByKey(kept, upserts, keys, order)
     commitReplace(stageReplace(spark, merged, tablePath, partCol, touched,
@@ -598,6 +576,28 @@ object Upsert {
   private[graft] def committedSchemaOf(manifest: Map[String, String]): Option[org.apache.spark.sql.types.StructType] =
     committedSchema(manifest)
 
+  /** `schema` with every column, element and value nullable that is
+    * nullable in `other`. A commit that keeps older dirs records its schema
+    * through this with the committed one: reads bind the committed
+    * nullability, so a column may be declared non-null only while no
+    * committed dir can hold its nulls.
+    */
+  private def withNullsOf(schema: org.apache.spark.sql.types.StructType,
+                          other: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def merge(t: DataType, o: DataType): DataType = (t, o) match {
+      case (s: StructType, os: StructType) => StructType(s.fields.map(f =>
+        os.fields.find(_.name == f.name).fold(f)(g => f.copy(
+          dataType = merge(f.dataType, g.dataType), nullable = f.nullable || g.nullable))))
+      case (a: ArrayType, oa: ArrayType) =>
+        ArrayType(merge(a.elementType, oa.elementType), a.containsNull || oa.containsNull)
+      case (m: MapType, om: MapType) => MapType(merge(m.keyType, om.keyType),
+        merge(m.valueType, om.valueType), m.valueContainsNull || om.valueContainsNull)
+      case _ => t
+    }
+    merge(schema, other).asInstanceOf[StructType]
+  }
+
   /** Manifest partition KEY for a raw partition value — the key must match
     * the staged directory name, which `partitionBy` writes Hive-ESCAPED
     * (':', '%', ' ', '#', … encoded). Every lookup from a raw value goes
@@ -606,6 +606,13 @@ object Upsert {
     */
   private def partKey(raw: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(raw)
+
+  /** The committed entries (manifest key → rel) of raw partition values;
+    * a value with no entry reads nothing.
+    */
+  private def entriesOf(manifest: Map[String, String],
+                        values: Seq[String]): Map[String, String] =
+    values.map(partKey).flatMap(k => manifest.get(k).map(k -> _)).toMap
 
   /** Names of `prefix`-named subdirectories of `dir`, prefix stripped —
     * the staged-partition discovery idiom (`__part=`/`__dp=` dirs of a
@@ -688,7 +695,7 @@ object Upsert {
   // (the same contract as `__schema`). Internal machinery — committed
   // schema, zone maps, bloom sidecars, CHECK constraints, the declarative
   // FileIndex — operates on physical names throughout and is untouched by
-  // renames (`readTableIndexed` composes the logical projection ABOVE its
+  // renames (`ManifestTable.read` composes the logical projection ABOVE its
   // relation, so pushed filters still reach the physical stats).
 
   private val ColMapKey = "__colmap"
@@ -955,21 +962,6 @@ object Upsert {
         .join(delta.select(joinCols.map(col): _*), joinCols, "left_anti")
         .unionByName(delta.select(afterDel.columns.map(col).toIndexedSeq: _*))
     }
-  }
-
-  /** Committed-schema read of `entries` (manifest partition key → rel):
-    * bind the manifest's schema when one was recorded (pre-schema-metadata
-    * tables fall back to file inference), presented under the LOGICAL
-    * column names, pending MoR sidecars of exactly these partitions
-    * applied.
-    */
-  private def readBound(spark: SparkSession, manifest: Map[String, String],
-                        tablePath: String,
-                        entries: Map[String, String]): DataFrame = {
-    val r = committedSchema(manifest).fold(spark.read)(s => spark.read.schema(s))
-    val paths = entries.values.map(rel => s"$tablePath/$rel").toSeq
-    toLogical(applyMor(spark, r.parquet(paths: _*), manifest, tablePath,
-      Some(entries.keySet)), manifest)
   }
 
   /** The table's partition column under its LOGICAL (presented) name, if
@@ -1355,20 +1347,25 @@ object Upsert {
     } finally reader.close()
   }
 
-  /** Exact row count from manifest metadata alone, when it is PROVABLY
-    * the presented count: every data partition carries a committed
-    * `__rows` entry and no MoR sidecar pends (a sidecar changes the
-    * presented count without touching base entries). None = count by
-    * scanning; never a wrong number.
+  /** Exact row count of the partitions `parts` from manifest metadata
+    * alone, when it is PROVABLY the presented count: each carries a
+    * committed `__rows` entry and no MoR sidecar pends on it (a sidecar
+    * changes the presented count without touching base entries). None =
+    * count by scanning; never a wrong number.
     */
-  private[graft] def metadataRowCount(manifest: Map[String, String]): Option[Long] = {
-    val data = dataEntries(manifest)
-    if (data.isEmpty) return None
-    if (manifest.keys.exists(k => k.startsWith(DelKeyPrefix) ||
-        k.startsWith(DeltaKeyPrefix))) return None
-    val counts = data.keys.toSeq.map(p => manifest.get(s"$RowsKeyPrefix$p"))
+  private[graft] def metadataRowCount(manifest: Map[String, String],
+                                      parts: Set[String]): Option[Long] = {
+    if (parts.exists(p => manifest.contains(s"$DelKeyPrefix$p") ||
+        manifest.contains(s"$DeltaKeyPrefix$p"))) return None
+    val counts = parts.toSeq.map(p => manifest.get(s"$RowsKeyPrefix$p"))
     if (counts.exists(_.isEmpty)) None
     else Some(counts.flatten.map(_.toLong).sum)
+  }
+
+  /** [[metadataRowCount]] of the whole table (None when it has no data). */
+  private[graft] def metadataRowCount(manifest: Map[String, String]): Option[Long] = {
+    val data = dataEntries(manifest)
+    if (data.isEmpty) None else metadataRowCount(manifest, data.keySet)
   }
 
   /** Footer-proved row count of a manifest-relative dir — one local
@@ -1427,40 +1424,17 @@ object Upsert {
     } catch { case _: IllegalArgumentException => None }
 
   /** COUNT(*) metadata-first: the committed `__rows` sum when provable,
-    * else one scan. The declarative read path gets the same answer
-    * automatically through [[graft.plans.MetadataOnlyCount]].
+    * else one scan. `readTable(...).count()` gets the same answer through
+    * [[graft.plans.MetadataOnlyCount]] in a session running the graft
+    * extensions.
     */
   def countRows(spark: SparkSession, tablePath: String,
                 committer: SnapshotCommitter = AtomicRenameCommitter): Long = {
     val manifest = committer.readManifest(tablePath)
-    require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
-    metadataRowCount(manifest)
-      .getOrElse(readBound(spark, manifest, tablePath, dataEntries(manifest)).count())
-  }
-
-  /** Data entries surviving range pruning on `column` ∩ [lo, hi]:
-    * a partition is skipped only when its committed range PROVES no row
-    * can match; missing stats keep it (pruning is a superset).
-    */
-  private[graft] def rangePrunedEntries(manifest: Map[String, String],
-                                           column: String, lo: Double,
-                                           hi: Double): Map[String, String] =
-    dataEntries(manifest).filter { case (p, _) =>
-      rangeOf(manifest, p, column).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-
-  /** Range-pruned read: partitions whose committed zone map cannot
-    * intersect [lo, hi] on `column` are skipped without being listed or
-    * opened. The result is a SUPERSET of the matching rows — callers
-    * still apply their exact predicate (same contract as any zone map).
-    */
-  def readTableRangePruned(spark: SparkSession, tablePath: String,
-                           column: String, lo: Double, hi: Double,
-                           committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
-    val manifest = committer.readManifest(tablePath)
-    require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
-    val kept = rangePrunedEntries(manifest, physicalName(manifest, column), lo, hi)
-    emptyOrBound(spark, manifest, tablePath, kept)
+    val data = dataEntries(manifest)
+    require(data.nonEmpty, s"no committed table at $tablePath")
+    metadataRowCount(manifest, data.keySet)
+      .getOrElse(ManifestTable.read(spark, tablePath, manifest, data).count())
   }
 
   /** Per-written-partition `__range.<p>` entries over the staged dirs
@@ -1666,7 +1640,7 @@ object Upsert {
     // physical ones (stable under later renames, like zone maps)
     val srcLog = toLogicalName(manifest, srcPhys)
     val pcLog = toLogicalName(manifest, pcPhys)
-    val drifted = readBound(spark, manifest, tablePath, dataEntries(manifest))
+    val drifted = ManifestTable.read(spark, tablePath, manifest, dataEntries(manifest))
       .select(srcLog, pcLog)
       .filter(!(t.column(col(srcLog)).cast("string") <=>
         col(pcLog).cast("string")))
@@ -1819,51 +1793,6 @@ object Upsert {
     case _ => true
   }
 
-  /** Data entries surviving a point-lookup probe: a partition is skipped
-    * only when its committed filter PROVES none of `values` can be
-    * present; a missing sidecar keeps it.
-    */
-  private[graft] def bloomPrunedEntries(tablePath: String,
-                                        manifest: Map[String, String],
-                                        column: String,
-                                        values: Seq[Any]): Map[String, String] = {
-    if (!bloomStatsCols(manifest).contains(column)) return dataEntries(manifest)
-    dataEntries(manifest).filter { case (p, rel) =>
-      val baseMay = bloomOf(tablePath, rel, column) match {
-        case None     => true
-        case Some(bf) => values.exists(bloomMightContain(bf, _))
-      }
-      // a pending MoR delta may carry values the base filter has never
-      // seen: the partition is only skippable when the DELTA's own
-      // sidecar filter also proves absence (delta dirs get filters at
-      // upsert time; a missing one keeps the partition; no pending delta
-      // leaves the base verdict alone)
-      lazy val deltaMay = manifest.get(s"$DeltaKeyPrefix$p").exists { dRel =>
-        bloomOf(tablePath, dRel, column) match {
-          case None     => true
-          case Some(bf) => values.exists(bloomMightContain(bf, _))
-        }
-      }
-      baseMay || deltaMay
-    }
-  }
-
-  /** Point-lookup read: partitions whose committed bloom filter cannot
-    * contain any of `values` on `column` are skipped without being listed
-    * or opened. The result is a SUPERSET of the matching rows (bloom
-    * false positives keep whole partitions) — callers still apply their
-    * exact predicate, the same contract as [[readTableRangePruned]].
-    */
-  def readTablePointPruned(spark: SparkSession, tablePath: String,
-                           column: String, values: Seq[Any],
-                           committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
-    val manifest = committer.readManifest(tablePath)
-    require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
-    val kept = bloomPrunedEntries(tablePath, manifest,
-      physicalName(manifest, column), values)
-    emptyOrBound(spark, manifest, tablePath, kept)
-  }
-
   case class DeleteStats(touchedPartitions: Seq[String], deletedRows: Long)
 
   /** MERGE-ON-READ point delete: retire `keyRows` — (partition column +
@@ -1966,12 +1895,12 @@ object Upsert {
     // the staged sidecar files already exist, so reading through the
     // uncommitted manifest is exact. O(touched), the cost the delete's
     // own sidecar rewrite already paid.
-    val touchedEntries = touchedEsc.flatMap(p => manifest.get(p).map(p -> _)).toMap
+    val touchedEntries = entriesOf(manifest, touched)
     val cdfEntry =
       if (!manifest.contains(CdfKeysKey)) Map.empty[String, String]
       else stageCdf(manifest, tablePath, batchDirName,
-        emptyOrBound(spark, manifest, tablePath, touchedEntries),
-        emptyOrBound(spark, newManifest0, tablePath, touchedEntries))
+        ManifestTable.read(spark, tablePath, manifest, touchedEntries),
+        ManifestTable.read(spark, tablePath, newManifest0, touchedEntries))
     val newManifest = dropCarriedCdf(newManifest0) ++ cdfEntry
     committer.commit(tablePath, newManifest)
     SnapshotGc.gcUnreferenced(tablePath, manifest.values.toSet ++
@@ -2000,9 +1929,8 @@ object Upsert {
     * a plain insert — the rewrite path handles it at the same O(delta)
     * cost, nothing existing to merge with); CHECK constraints are
     * enforced against the sidecar before the flip. Zone maps of touched
-    * partitions WIDEN by the delta's ranges and delta dirs carry their
-    * own bloom sidecars, so the pruned-read surfaces stay exact while a
-    * delta is pending.
+    * partitions WIDEN by the delta's ranges, so they stay sound once
+    * compaction folds the delta into the base.
     */
   def upsertKeysMor(spark: SparkSession, tablePath: String, partCol: String,
                     keys: Seq[String], order: Seq[String], delta: DataFrame,
@@ -2073,34 +2001,37 @@ object Upsert {
         throw new CheckViolationException(bad, checks)
       }
     }
-    // pruned-read stats stay exact while the delta is pending: committed
-    // zone maps WIDEN by the delta's ranges (a sidecar can only add value
-    // range, never shrink it), and the delta dirs get their own bloom
-    // sidecars for the point-lookup probe
+    // committed zone maps WIDEN by the delta's ranges (a sidecar can only
+    // add value range, never shrink it). A read needs no help while the
+    // delta pends — its rows union in above the pruned base scan — but
+    // compaction folds the delta into the base WITHOUT recomputing
+    // `__range.<p>`, so the widened range is what keeps the zone map
+    // sound afterwards. Delta dirs get no bloom sidecars: nothing prunes
+    // a delta, and compaction drops the base filter of a partition whose
+    // delta it materializes
     val deltaRanges = stagedRangeEntries(spark, manifest, staged,
       combined.columns.toSeq)
     val mergedRanges = widenRangeEntries(manifest, deltaRanges)
-    if (bloomStatsCols(manifest).nonEmpty)
-      writeStagedBloomSidecars(spark, manifest, s"$tablePath/$batchDirName",
-        staged, combined.columns.toSeq)
     val pending = combined.count()
     val newManifest0 = manifest ++
       writtenParts.map(p => s"$DeltaKeyPrefix$p" -> s"$batchDirName/__part=$p") ++
       mergedRanges ++
       // e.g. a stream's batch ledger — atomic with the sidecars it describes
       meta.map { case (k, v) => s"__$k" -> v } +
+      // the sidecar may hold nulls in a column committed non-null
+      (SchemaKey -> withNullsOf(committed, deltaC.schema).json) +
       (UpKeysKey -> keysPhys.mkString(",")) +
       (UpOrderKey -> orderPhys.mkString(",")) +
       (PartColKey -> pcPhys)
     // write-time change feed (no-op unless enabled): touched partitions'
     // pre state vs their post state under the new delta sidecars — the
     // staged files exist, so the uncommitted-manifest read is exact
-    val touchedEntries = touchedEsc.flatMap(p => manifest.get(p).map(p -> _)).toMap
+    val touchedEntries = entriesOf(manifest, touched)
     val cdfEntry =
       if (!manifest.contains(CdfKeysKey)) Map.empty[String, String]
       else stageCdf(manifest, tablePath, batchDirName,
-        emptyOrBound(spark, manifest, tablePath, touchedEntries),
-        emptyOrBound(spark, newManifest0, tablePath, touchedEntries))
+        ManifestTable.read(spark, tablePath, manifest, touchedEntries),
+        ManifestTable.read(spark, tablePath, newManifest0, touchedEntries))
     val newManifest = dropCarriedCdf(newManifest0) ++ cdfEntry
     committer.commit(tablePath, newManifest)
     SnapshotGc.gcUnreferenced(tablePath, liveDirRefs(manifest) ++
@@ -2167,9 +2098,8 @@ object Upsert {
       .select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (touched.isEmpty) return DeleteStats(Nil, 0L)
-    val touchedEntries = touched.map(partKey)
-      .flatMap(k => manifest.get(k).map(k -> _)).toMap
-    val scoped = readBound(spark, manifest, tablePath, touchedEntries)
+    val scoped = ManifestTable.read(spark, tablePath, manifest,
+      entriesOf(manifest, touched))
     val deleted = scoped.filter(predicate).count()
     // keep rows where the predicate is FALSE or NULL (SQL DELETE deletes
     // only TRUE — a bare !predicate would silently drop null-evaluating
@@ -2210,9 +2140,8 @@ object Upsert {
       .select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (touched.isEmpty) return UpdateStats(Nil, 0L)
-    val touchedEntries = touched.map(partKey)
-      .flatMap(k => manifest.get(k).map(k -> _)).toMap
-    val scoped = readBound(spark, manifest, tablePath, touchedEntries)
+    val scoped = ManifestTable.read(spark, tablePath, manifest,
+      entriesOf(manifest, touched))
     val updated = scoped.filter(predicate).count()
     // one select evaluates every assignment against the PRE-update row
     val applied = scoped.select(scoped.columns.map { c =>
@@ -2271,10 +2200,8 @@ object Upsert {
     val manifest = committer.readManifest(tablePath)
     require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
     val touched = touchedPartitionsOf(source, partCol, keys)
-    val touchedEntries = touched.map(partKey)
-      .flatMap(k => manifest.get(k).map(k -> _)).toMap
-    val scoped = emptyOrBound(spark, manifest, tablePath, touchedEntries)
-      .localCheckpoint(true)
+    val scoped = ManifestTable.read(spark, tablePath, manifest,
+      entriesOf(manifest, touched)).localCheckpoint(true)
     val targetCols = scoped.columns.toSeq
     val missing = targetCols.filterNot(source.columns.contains)
     require(missing.isEmpty,
@@ -2376,7 +2303,7 @@ object Upsert {
       if (!manifest.contains(CdfKeysKey) || dataEntries(manifest).isEmpty)
         Map.empty[String, String]
       else stageCdf(manifest, tablePath, batchDirName,
-        emptyOrBound(spark, manifest, tablePath, dataEntries(manifest)),
+        ManifestTable.read(spark, tablePath, manifest, dataEntries(manifest)),
         toLogical(spark.read.parquet(s"$tablePath/$rel"), manifest))
     // metadata rides the SAME manifest flip — one atomic commit covers the
     // new snapshot and (e.g.) the batch-id ledger, which is what makes
@@ -2453,7 +2380,8 @@ object Upsert {
       }
       committer.commit(tablePath,
         dropCarriedCdf(manifest) + (s"append-$id" -> rel) +
-          (SchemaKey -> data.schema.json) ++
+          (SchemaKey -> committedSchema(manifest)
+            .fold(data.schema)(withNullsOf(data.schema, _)).json) ++
           // footer-proved row count for the new entry: existing entries
           // keep their stamps, so the metadata COUNT(*) stays provable
           // across appends (and INSERT INTO's inserted_rows is exact)
@@ -2485,18 +2413,12 @@ object Upsert {
     val deltaW = toLogical(castToMerged(deltaPhys, deltaPhysSchema), manifest)
 
     // manifest-level pruning: only the touched partitions' committed
-    // paths are listed/read — I/O is O(delta partitions), not O(table)
-    val existingPaths = touched.flatMap(t => manifest.get(partKey(t)))
-      .map(rel => s"$tablePath/$rel")
-    val existing =
-      if (existingPaths.nonEmpty)
-        // sidecar-aware: pending MoR deletes must not resurrect — and
-        // pending MoR deltas must not vanish — through the merge (the
-        // rewrite below materializes both for good)
-        toLogical(applyMor(spark,
-          spark.read.schema(deltaPhysSchema).parquet(existingPaths: _*),
-          manifest, tablePath, Some(touched.map(partKey).toSet)), manifest)
-      else deltaW.limit(0)
+    // entries are listed/read — I/O is O(delta partitions), not O(table).
+    // The read is sidecar-aware: pending MoR deletes must not resurrect —
+    // and pending MoR deltas must not vanish — through the merge (the
+    // rewrite below materializes both for good)
+    val existing = ManifestTable.read(spark, tablePath, manifest,
+      entriesOf(manifest, touched), Some(deltaPhysSchema))
     stageReplace(spark, mergeByKey(existing, deltaW, keys, order), tablePath,
       partCol, touched, committer, manifestRead = Some(manifest))
   }
@@ -2523,7 +2445,8 @@ object Upsert {
   /** A partition replace written under its own immutable batch dir but
     * not yet visible: `parts` are the replaced (raw) partition values,
     * `manifest` the committed state the staging was built against,
-    * `newManifest` the state [[commitReplace]] publishes.
+    * `newManifest` the state [[commitReplace]] publishes; its data entries
+    * under `batchDirName` are the staged dirs.
     */
   private[graft] final case class StagedReplace(
       tablePath: String, parts: Seq[String], manifest: Map[String, String],
@@ -2663,7 +2586,7 @@ object Upsert {
           // slice is that state
           val emptyState = toLogical(data.limit(0), manifest)
           val pre =
-            if (preEntries.nonEmpty) emptyOrBound(spark, manifest, tablePath, preEntries)
+            if (preEntries.nonEmpty) ManifestTable.read(spark, tablePath, manifest, preEntries)
             else emptyState
           stageCdf(manifest, tablePath, batchDirName, pre,
             stagedDf.map(st => toLogical(st.drop("__part"), manifest))
@@ -2688,7 +2611,9 @@ object Upsert {
         writtenParts.map(v => v -> s"$batchDirName/__part=$v") ++ ranges ++
         fileRanges ++ cdfEntry ++
         extraMeta + // e.g. a tail cursor — atomic with the data it describes
-        (SchemaKey -> data.schema.json) + // the schema rides the same flip
+        // the schema rides the same flip
+        (SchemaKey -> committedSchema(manifest)
+          .fold(data.schema)(withNullsOf(data.schema, _)).json) +
         (PartColKey -> partCol) // lets metadata DDL protect the partitioning
       StagedReplace(tablePath, parts, manifest, batchDirName, writtenParts,
         newManifest)
@@ -2710,8 +2635,9 @@ object Upsert {
     // references to it — a collected staging must fail loudly here, not
     // surface later as dangling manifest entries
     TableFs.touch(s"$tablePath/$batchDirName")
-    val missing = writtenParts.filterNot(p =>
-      TableFs.isDirectory(s"$tablePath/$batchDirName/__part=$p"))
+    val missing = dataEntries(newManifest).filter { case (_, rel) =>
+      rel.startsWith(s"$batchDirName/") && !TableFs.isDirectory(s"$tablePath/$rel")
+    }.keySet
     if (missing.nonEmpty) throw new IllegalStateException(
       s"staged partitions vanished before commit (concurrent GC passed " +
         s"the grace window?): ${missing.toSeq.sorted.mkString(",")}")
@@ -3256,7 +3182,7 @@ object Upsert {
       val data = dataEntries(m)
       val nRows =
         if (data.isEmpty) 0L
-        else readBound(spark, m, tablePath, data).count()
+        else ManifestTable.read(spark, tablePath, m, data).count()
       (v, ops.getOrElse(v, "commit"), data.size.toLong, nRows)
     }
     rows.toDF("version", "operation", "n_partitions", "n_rows")

@@ -6,23 +6,27 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftshim.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.pipeline.Upsert
 import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter}
 
-/** DECLARATIVE manifest-table reads — the committed manifest (and its zone
-  * maps) surfaced to Catalyst as a custom [[FileIndex]], so pruning needs
-  * no special read API: `readTable(...).filter(ts between lo and hi)`
-  * plans a scan whose `listFiles` receives the PUSHED data filters and
-  * answers with only the partitions whose committed [min,max] can
-  * intersect them. This is the brief's "custom plumbing only where
-  * built-ins can't express it" applied to the storage seam: the
-  * DataFrame stays fully declarative (pushdown, pruning, codegen all
-  * apply), and the skipping decision that `Upsert.readTableRangePruned`
-  * exposes imperatively happens inside scan planning instead — the same
-  * division of labor Delta/Iceberg use (their DataSourceV2 scan builders
-  * consult table metadata; this engine's tables speak DataSourceV1's
-  * `FileIndex`, the seam the parquet relation already planned through).
+/** The one read path of manifest tables: the committed manifest (and its
+  * zone maps and bloom sidecars) surfaced to Catalyst as a custom
+  * [[FileIndex]], so pruning needs no special read API:
+  * `readTable(...).filter(ts between lo and hi)` plans a scan whose
+  * `listFiles` receives the PUSHED data filters and answers with only the
+  * partitions whose committed [min,max] can intersect them. Every reader
+  * of committed state — current, partition-scoped, as-of, the change
+  * feed and the mutators' scoped reads — builds its relation through
+  * [[read]], so pruning, [[graft.plans.MetadataOnlyCount]] and
+  * [[graft.plans.StatsJoinReorder]] apply to all of them. The DataFrame
+  * stays fully declarative (pushdown, pruning, codegen all apply) — the
+  * same division of labor Delta/Iceberg use (their DataSourceV2 scan
+  * builders consult table metadata; this engine's tables speak
+  * DataSourceV1's `FileIndex`, the seam the parquet relation already
+  * planned through).
   *
   * Conservative by construction: only BARE-column comparisons against
   * foldable numeric literals prune (conjunctions split; cast-wrapped
@@ -33,18 +37,38 @@ import graft.streaming.{AtomicRenameCommitter, SnapshotCommitter}
 object ManifestTable {
 
   /** The committed table as a Catalyst-planned relation over a
-    * [[ManifestFileIndex]] — schema bound from the manifest (falls back
-    * to footer inference only for pre-schema-metadata tables).
+    * [[ManifestFileIndex]] — the same relation as
+    * [[Upsert.readTable]].
     */
   def readTableIndexed(spark: SparkSession, tablePath: String,
-                       committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame = {
-    val index = new ManifestFileIndex(spark, tablePath, committer)
-    val schema = index.committedSchema.getOrElse(
-      spark.read.parquet(index.dataPaths: _*).schema)
+                       committer: SnapshotCommitter = AtomicRenameCommitter): DataFrame =
+    Upsert.readTable(spark, tablePath, committer)
+
+  /** Read `entries` (manifest partition key → rel) of the state `manifest`
+    * describes: a relation over a [[ManifestFileIndex]] restricted to
+    * those entries, bound to `schema` (physical names, read all-nullable
+    * like any file-source read with a user schema) or by default to the
+    * committed schema with its committed nullability (footer inference
+    * only for tables committed before schema metadata existed), with the
+    * entries' pending MoR sidecars applied and the LOGICAL column names on
+    * top. Empty `entries` is a zero-file scan under the same schema.
+    */
+  private[graft] def read(spark: SparkSession, tablePath: String,
+                          manifest: Map[String, String],
+                          entries: Map[String, String],
+                          schema: Option[StructType] = None): DataFrame = {
+    val dataSchema = schema.map(SchemaBridge.asNullable)
+        .orElse(Upsert.committedSchemaOf(manifest)).getOrElse {
+      val from = if (entries.nonEmpty) entries else Upsert.dataEntries(manifest)
+      spark.read.parquet(from.values.map(rel => s"$tablePath/$rel").toSeq: _*).schema
+    }
     val physical = spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = index,
+      location = new ManifestFileIndex(spark, tablePath, manifest, entries),
       partitionSchema = new StructType(),
-      dataSchema = schema,
+      // a committed non-null column stays non-null (count(col) folds to
+      // count(*)): every commit records a column nullable once any
+      // committed dir may hold its nulls (Upsert.withNullsOf)
+      dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(spark))
@@ -54,9 +78,8 @@ object ManifestTable {
     // the FileIndex keeps consulting its physical-named zone maps and
     // bloom sidecars for the BASE files while pending delta rows answer
     // the same filters directly
-    graft.pipeline.Upsert.toLogical(
-      graft.pipeline.Upsert.applyMor(spark, physical, index.manifest,
-        tablePath), index.manifest)
+    Upsert.toLogical(Upsert.applyMor(spark, physical, manifest, tablePath,
+      Some(entries.keySet)), manifest)
   }
 
   /** Allowed interval [lo, hi] a single comparison conjunct imposes on a
@@ -145,39 +168,26 @@ object ManifestTable {
   }
 }
 
-/** [[FileIndex]] over a committed manifest: `listFiles` resolves the data
-  * entries, consults the committed zone maps against the pushed data
-  * filters, and lists ONLY the surviving partitions' dirs — unpruned
-  * partitions are never listed, the manifest-level skipping contract.
+/** [[FileIndex]] over `entries` of the committed state `manifest`:
+  * `listFiles` consults the committed zone maps and bloom sidecars against
+  * the pushed data filters and lists ONLY the surviving entries' dirs —
+  * unpruned partitions are never listed, the manifest-level skipping
+  * contract. Sizes, input files and row counts cover exactly `entries`;
+  * table-wide planner stats are offered only when `entries` is the whole
+  * table.
   */
 final class ManifestFileIndex(spark: SparkSession, tablePath: String,
-                              committer: SnapshotCommitter) extends FileIndex {
+                              manifest: Map[String, String],
+                              entries: Map[String, String]) extends FileIndex {
 
-  private[graft] val manifest: Map[String, String] = committer.readManifest(tablePath)
-  private val entries: Map[String, String] =
-    manifest.filterNot(_._1.startsWith("__"))
-  require(entries.nonEmpty, s"no committed table at $tablePath")
-
-  // one schema-metadata contract: the write path's helper, not a re-parse
-  private[sources] def committedSchema: Option[StructType] =
-    graft.pipeline.Upsert.committedSchemaOf(manifest)
-
-  /** Committed ANALYZE stats for the planner seam ((rowcount, col→NDV);
-    * see [[graft.plans.StatsJoinReorder]]) — None gates cost-based
-    * rewrites off for never-ANALYZEd tables.
+  /** Committed ANALYZE stats with null counts and min/max — the inputs
+    * [[graft.plans.StatsJoinReorder]]'s cost-based rewrite reads. None
+    * gates it off for never-ANALYZEd tables and for reads of a subset of
+    * the table's partitions, which the table-wide stats do not describe.
     */
-  private[graft] lazy val cboStats: Option[(Long, Map[String, Long])] =
-    graft.pipeline.Upsert.cboStatsOf(manifest)
-
-  /** [[cboStats]] extended with null counts and min/max — the inputs
-    * [[graft.plans.StatsJoinReorder]]'s filter-selectivity estimates
-    * read.
-    */
-  private[graft] lazy val cboColStats: Option[(Long, Map[String, graft.pipeline.Upsert.CboColStats])] =
-    graft.pipeline.Upsert.cboColStatsOf(manifest)
-
-  private[sources] def dataPaths: Seq[String] =
-    entries.values.map(rel => s"$tablePath/$rel").toSeq
+  private[graft] lazy val cboColStats: Option[(Long, Map[String, Upsert.CboColStats])] =
+    if (entries == Upsert.dataEntries(manifest)) Upsert.cboColStatsOf(manifest)
+    else None
 
   private def isDataFile(name: String): Boolean =
     !name.startsWith(".") && !name.startsWith("_")
@@ -188,8 +198,8 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
   private lazy val allFiles: Array[org.apache.hadoop.fs.FileStatus] = {
     val fs = new Path(tablePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    dataPaths.flatMap { d =>
-      fs.listStatus(new Path(d)).filter(st =>
+    entries.values.toSeq.flatMap { rel =>
+      fs.listStatus(new Path(s"$tablePath/$rel")).filter(st =>
         st.isFile && isDataFile(st.getPath.getName))
     }.toArray
   }
@@ -201,12 +211,12 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
   // committed bloom sidecars, loaded lazily per (dir, col) and memoized
   // for the index's (immutable-snapshot) lifetime — repeated listFiles
   // calls never re-read a sidecar
-  private val bloomCols = graft.pipeline.Upsert.bloomStatsCols(manifest).toSet
+  private val bloomCols = Upsert.bloomStatsCols(manifest).toSet
   private val bloomCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), Option[org.apache.spark.util.sketch.BloomFilter]]
   private def bloomFor(rel: String, colName: String) =
     bloomCache.getOrElseUpdate((rel, colName),
-      graft.pipeline.Upsert.bloomOf(tablePath, rel, colName))
+      Upsert.bloomOf(tablePath, rel, colName))
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -216,21 +226,21 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
       .filter { case (c, _) => bloomCols.contains(c) }
     // generated-partition declaration: bounds on the SOURCE column become
     // exact intervals on the partition value (monotone transform image)
-    val genPart = graft.pipeline.Upsert.genPartOf(manifest)
+    val genPart = Upsert.genPartOf(manifest)
     val genBounds = genPart.map { case (_, srcPhys, t) =>
       (t, bounds.filter(_._1 == srcPhys))
     }.filter(_._2.nonEmpty)
     val kept = entries.filter { case (p, rel) =>
       bounds.forall { case (colName, lo, hi) =>
-        graft.pipeline.Upsert.rangeOf(manifest, p, colName)
+        Upsert.rangeOf(manifest, p, colName)
           .forall { case (mn, mx) => mx >= lo && mn <= hi }
       } && genBounds.forall { case (t, bs) =>
         bs.forall { case (_, lo, hi) =>
-          graft.pipeline.Upsert.genPartKeeps(p, t, lo, hi)
+          Upsert.genPartKeeps(p, t, lo, hi)
         }
       } && points.forall { case (colName, vs) =>
         bloomFor(rel, colName).forall(bf =>
-          vs.exists(graft.pipeline.Upsert.bloomMightContain(bf, _)))
+          vs.exists(Upsert.bloomMightContain(bf, _)))
       }
     }
     val fs = new Path(tablePath)
@@ -243,12 +253,12 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
       // never listed into the scan (absent/stale entry = keep)
       val fstats =
         if (bounds.isEmpty) Map.empty[String, String]
-        else graft.pipeline.Upsert.fileStatsOf(tablePath, manifest, p)
+        else Upsert.fileStatsOf(tablePath, manifest, p)
       val files = fs.listStatus(dir).filter { st =>
         st.isFile && isDataFile(st.getPath.getName) &&
           bounds.forall { case (colName, lo, hi) =>
             fstats.get(st.getPath.getName)
-              .flatMap(graft.pipeline.Upsert.parseRangeJson(_, colName))
+              .flatMap(Upsert.parseRangeJson(_, colName))
               .forall { case (mn, mx) => mx >= lo && mn <= hi }
           }
       }
@@ -256,12 +266,12 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
     }
   }
 
-  /** Exact base row count from committed `__rows` metadata, when provable
-    * (every data partition stamped, no pending MoR sidecars) — what lets
-    * [[graft.plans.MetadataOnlyCount]] answer COUNT(*) without a scan.
+  /** Exact row count of `entries` from committed `__rows` metadata, when
+    * provable (every entry stamped, none with pending MoR sidecars) — what
+    * lets [[graft.plans.MetadataOnlyCount]] answer COUNT(*) without a scan.
     */
   private[graft] def metadataRowCount: Option[Long] =
-    graft.pipeline.Upsert.metadataRowCount(manifest)
+    Upsert.metadataRowCount(manifest, entries.keySet)
 
   override def inputFiles: Array[String] = allFiles.map(_.getPath.toString)
 

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Maintenance, Upsert}
@@ -32,34 +31,42 @@ class BloomSkipSpec extends AnyFunSuite {
   private def rows(d: org.apache.spark.sql.DataFrame): Set[(String, Long, String)] =
     d.selectExpr("bucket", "id", "name").as[(String, Long, String)].collect().toSet
 
+  /** The rows an `id` point lookup returns and the files its scan read. */
+  private def lookup(path: String, id: Long): (Set[(String, Long, String)], Long) = {
+    val q = Upsert.readTable(spark, path).filter(col("id") === id)
+    (rows(q), TestSpark.scannedFiles(q))
+  }
+
   test("point-pruned reads skip partitions whose bloom proves absence; never lose a match") {
     val path = Files.createTempDirectory("graft-bl").toString + "/t"
     build(path)
-    val m = AtomicRenameCommitter.readManifest(path)
+    val t = Upsert.readTable(spark, path)
 
     // id=7 lives only in bucket b1 (7 % 3) — the two other buckets' blooms
     // prove absence (no false positive at this size), so exactly one
-    // partition survives, despite every bucket's id range covering 7
-    assert(Upsert.bloomPrunedEntries(path, m, "id", Seq(7L)).keySet == Set("b1"))
-    assert(rows(Upsert.readTablePointPruned(spark, path, "id", Seq(7L))
-      .filter(col("id") === 7L)) == Set(("b1", 7L, "name-7")))
+    // partition's file is scanned, despite every bucket's id range
+    // covering 7
+    assert(lookup(path, 7L) == ((Set(("b1", 7L, "name-7")), 1L)))
 
-    // the superset contract holds for EVERY id: pruned ∪ exact ≡ full scan
+    // the superset contract holds for EVERY id: pruning never loses a row
     (0L until 24L).foreach { i =>
-      val pruned = rows(Upsert.readTablePointPruned(spark, path, "id", Seq(i))
-        .filter(col("id") === i))
-      assert(pruned == Set((s"b${i % 3}", i, s"name-$i")), s"lost id $i")
+      assert(rows(t.filter(col("id") === i)) == Set((s"b${i % 3}", i, s"name-$i")),
+        s"lost id $i")
     }
 
     // string column lookups prune identically (UTF-8 membership)
-    assert(Upsert.bloomPrunedEntries(path, m, "name", Seq("name-8")).keySet == Set("b2"))
+    val s = t.filter(col("name") === "name-8")
+    assert(rows(s) == Set(("b2", 8L, "name-8")) && TestSpark.scannedFiles(s) == 1L)
 
     // an IN-list keeps the union of its members' partitions
-    assert(Upsert.bloomPrunedEntries(path, m, "id", Seq(3L, 4L)).keySet == Set("b0", "b1"))
+    val in = t.filter(col("id").isin(3L, 4L))
+    assert(rows(in) == Set(("b0", 3L, "name-3"), ("b1", 4L, "name-4")))
+    assert(TestSpark.scannedFiles(in) == 2L)
 
     // a value present nowhere prunes everything; the read stays schema-ful
-    val none = Upsert.readTablePointPruned(spark, path, "id", Seq(999L))
+    val none = t.filter(col("id") === 999L)
     assert(none.count() == 0 && none.columns.contains("name"))
+    assert(TestSpark.scannedFiles(none) == 0L)
   }
 
   test("missing sidecars and undeclared columns never wrongly skip") {
@@ -75,9 +82,12 @@ class BloomSkipSpec extends AnyFunSuite {
     assert(Upsert.bloomOf(path, m("b9"), "id").isEmpty)
     assert(Upsert.bloomOf(path, m("b1"), "id").isDefined)
     // a lookup that b1's bloom rejects still keeps sidecar-less b9
-    assert(Upsert.bloomPrunedEntries(path, m, "id", Seq(900L)).keySet == Set("b9"))
+    assert(lookup(path, 900L) ==
+      ((Set(("b9", 900L, "old")), TestSpark.filesOf(path, "b9"))))
     // a column with no declared stats keeps everything
-    assert(Upsert.bloomPrunedEntries(path, m, "name", Seq("zzz")).keySet == Set("b1", "b9"))
+    val n = Upsert.readTable(spark, path).filter(col("name") === "zzz")
+    assert(n.count() == 0L)
+    assert(TestSpark.scannedFiles(n) == TestSpark.filesOf(path, "b1", "b9"))
   }
 
   test("rewrites recompute sidecars; compaction carries them into the new layout") {
@@ -91,50 +101,45 @@ class BloomSkipSpec extends AnyFunSuite {
     val m1 = AtomicRenameCommitter.readManifest(path)
     // the rewrite recomputed b0's bloom: its old ids (0,3,..,21 — which
     // lived nowhere else) now prove absent EVERYWHERE, new ids present
-    assert(Upsert.bloomPrunedEntries(path, m1, "id", Seq(0L)).isEmpty)
-    assert(Upsert.bloomPrunedEntries(path, m1, "id", Seq(1L)).keySet == Set("b1"))
-    assert(Upsert.bloomPrunedEntries(path, m1, "id", Seq(105L)).keySet == Set("b0"))
+    assert(lookup(path, 0L) == ((Set.empty, 0L)))
+    assert(lookup(path, 1L) == ((Set(("b1", 1L, "name-1")), 1L)))
+    assert(lookup(path, 105L) ==
+      ((Set(("b0", 105L, "name-105")), TestSpark.filesOf(path, "b0"))))
 
     val stats = Maintenance.compact(spark, path, targetFileBytes = 1L << 30)
     assert(stats.committed && stats.filesAfter < stats.filesBefore)
     val m2 = AtomicRenameCommitter.readManifest(path)
     assert(m2("b0") != m1("b0"), "compaction must have re-pointed b0")
     // the carried sidecar still prunes — and still proves the same absences
-    assert(Upsert.bloomPrunedEntries(path, m2, "id", Seq(105L)).keySet == Set("b0"))
-    assert(Upsert.bloomPrunedEntries(path, m2, "id", Seq(0L)).isEmpty)
-    assert(Upsert.bloomPrunedEntries(path, m2, "id", Seq(2L)).keySet == Set("b2"))
+    assert(lookup(path, 105L) == ((Set(("b0", 105L, "name-105")), 1L)))
+    assert(lookup(path, 0L) == ((Set.empty, 0L)))
+    assert(lookup(path, 2L) == ((Set(("b2", 2L, "name-2")), 1L)))
   }
 
   test("declarative reads push equality and IN filters into the FileIndex") {
     val path = Files.createTempDirectory("graft-bl").toString + "/t"
     build(path)
 
-    def scanFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      TestSpark.fileScanNodes(df.queryExecution.executedPlan)
-        .map(_.metrics("numFiles").value).sum
-    }
-
     val t = ManifestTable.readTableIndexed(spark, path)
-    assert(scanFiles(t) == 3L) // one file per partition, no filter
+    assert(TestSpark.scannedFiles(t) == 3L) // one file per partition, no filter
 
     val eq = t.filter(col("id") === 7L)
     assert(rows(eq) == Set(("b1", 7L, "name-7")))
-    assert(scanFiles(eq) == 1L, "equality lookup must list only b1")
+    assert(TestSpark.scannedFiles(eq) == 1L, "equality lookup must list only b1")
 
     val in = t.filter(col("id").isin(3L, 4L))
     assert(rows(in) == Set(("b0", 3L, "name-3"), ("b1", 4L, "name-4")))
-    assert(scanFiles(in) == 2L, "IN-list must list only its members' buckets")
+    assert(TestSpark.scannedFiles(in) == 2L, "IN-list must list only its members' buckets")
 
     val s = t.filter(col("name") === "name-8")
     assert(rows(s) == Set(("b2", 8L, "name-8")))
-    assert(scanFiles(s) == 1L, "string equality must prune through the bloom")
+    assert(TestSpark.scannedFiles(s) == 1L, "string equality must prune through the bloom")
 
     // a cast-wrapped attribute must NOT prune (conservatism shared with
     // zone maps): the raw column's bloom can't speak for the casted value
     val casted = t.filter(col("id").cast("string") === "7")
     assert(rows(casted) == Set(("b1", 7L, "name-7")))
-    assert(scanFiles(casted) == 3L, "cast-wrapped lookups read everything")
+    assert(TestSpark.scannedFiles(casted) == 3L, "cast-wrapped lookups read everything")
   }
 
   test("enabling validates column types against the committed schema") {

@@ -74,8 +74,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val preManifest = c.readManifest(path)
     val pre = rows(Upsert.readTable(spark, path, c))
 
-    val s = Maintenance.compactImpl(spark, path, 128L * 1024 * 1024, Nil,
-      crashBeforeCommit = true, c)
+    val (s, _) = Maintenance.stageCompact(spark, path, 128L * 1024 * 1024, Nil, c)
     assert(!s.committed && s.compacted.nonEmpty)
     assert(c.readManifest(path) == preManifest)
     assert(rows(Upsert.readTable(spark, path, c)) == pre)

@@ -4,10 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Upsert
-import graft.sources.ManifestTable
+import graft.sources.{ManifestFileIndex, ManifestTable}
+import graft.streaming.VersionedCommitter
 
 /** Declarative manifest reads: a plain `.filter(...)` over the indexed
   * relation pushes its predicates into the custom FileIndex, which skips
@@ -91,6 +93,70 @@ class ManifestIndexSpec extends AnyFunSuite {
     // the bare form still derives its interval
     assert(ManifestTable.boundOf(
       LessThanOrEqual(x, Literal(5.0))).contains(("x", Double.MinValue, 5.0)))
+  }
+
+  test("partition-scoped and as-of reads count and list only their own entries") {
+    val path = Files.createTempDirectory("graft-mfi").toString + "/t"
+    val c = new VersionedCommitter
+    def day(d: String, n: Long, v: Long) = (1L to n).map(i => (d, i, v))
+    Upsert.replacePartitionsAtomic(spark,
+      (day("d1", 3L, 1L) ++ day("d2", 5L, 1L)).toDF("day", "id", "version"),
+      path, "day", Seq("d1", "d2"), committer = c) // v1: 8 rows
+    Upsert.replacePartitionsAtomic(spark,
+      day("d3", 7L, 2L).toDF("day", "id", "version"),
+      path, "day", Seq("d3"), committer = c) // v2: 15 rows
+    val m = c.readManifest(path)
+    assert(Seq("d1", "d2", "d3").forall(p => m.contains(s"__rows.$p")))
+
+    val d2 = Upsert.readTablePartitions(spark, path, Seq("d2"), c)
+    // answered from d2's own `__rows` stamp, not the table's sum
+    assert(d2.groupBy().count().queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(d2.count() == 5L)
+    assert(d2.inputFiles.nonEmpty && d2.inputFiles.forall(_.contains(s"/${m("d2")}/")),
+      s"only d2's files may be listed: ${d2.inputFiles.mkString(",")}")
+    assert(Upsert.readTableAsOf(spark, path, 1L, c).count() == 8L)
+    assert(Upsert.readTable(spark, path, c).count() == 15L)
+  }
+
+  test("readTable, readTablePartitions and readTableAsOf plan through a ManifestFileIndex") {
+    val path = Files.createTempDirectory("graft-mfi").toString + "/t"
+    val c = new VersionedCommitter
+    Upsert.replacePartitionsAtomic(spark,
+      Seq(("d1", 1L, 5L), ("d2", 3L, 100L)).toDF("day", "id", "version"),
+      path, "day", Seq("d1", "d2"), committer = c)
+    def indexLeaves(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectLeaves().count {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.isInstanceOf[ManifestFileIndex]
+          case _ => false
+        }
+        case _ => false
+      }
+    assert(indexLeaves(Upsert.readTable(spark, path, c)) == 1)
+    assert(indexLeaves(Upsert.readTablePartitions(spark, path, Seq("d2"), c)) == 1)
+    assert(indexLeaves(Upsert.readTableAsOf(spark, path, 1L, c)) == 1)
+  }
+
+  test("a column reads non-null only while no committed dir holds its nulls") {
+    val path = Files.createTempDirectory("graft-mfi").toString + "/t"
+    Upsert.replacePartitionsAtomic(spark,
+      Seq(("d1", Option(1L)), ("d1", Option.empty[Long])).toDF("day", "v"),
+      path, "day", Seq("d1"))
+    // d2's batch is provably non-null; d1 still holds a null
+    Upsert.replacePartitionsAtomic(spark, Seq(("d2", 2L)).toDF("day", "v"),
+      path, "day", Seq("d2"))
+    assert(Upsert.readTable(spark, path).filter(col("v").isNull).count() == 1L)
+
+    // a MoR delta carrying a null into a column committed non-null
+    val mor = Files.createTempDirectory("graft-mfi").toString + "/t"
+    Upsert.replacePartitionsAtomic(spark, Seq(("d1", 1L, 10L)).toDF("day", "id", "v"),
+      mor, "day", Seq("d1"))
+    assert(!Upsert.readTable(spark, mor).schema("v").nullable)
+    Upsert.upsertKeysMor(spark, mor, "day", Seq("id"), Seq("id"),
+      Seq(("d1", 2L, Option.empty[Long])).toDF("day", "id", "v"))
+    assert(Upsert.readTable(spark, mor).filter(col("v").isNull)
+      .selectExpr("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("stat-less tables read everything and answer correctly") {

@@ -145,12 +145,25 @@ class MorUpsertSpec extends AnyFunSuite {
     // brand-new id=77 into it WITHOUT a rewrite
     Upsert.upsertKeysMor(spark, path, "day", Seq("id"), Seq("v"),
       df(("d1", 77L, 99L)), c)
-    assert(Upsert.readTableRangePruned(spark, path, "v", 95.0, 100.0, c)
-      .filter(col("v") >= 95L).selectExpr("id").as[Long].collect().toSet ==
-      Set(77L), "the widened zone map must admit the delta's range")
-    assert(Upsert.readTablePointPruned(spark, path, "id", Seq(77L), c)
-      .filter(col("id") === 77L).selectExpr("v").as[Long].collect().toSet ==
-      Set(99L), "the delta dir's bloom sidecar must admit its new key")
+    val t = Upsert.readTable(spark, path, c)
+    val all = TestSpark.scannedFiles(t)
+    // the delta's rows union in above the pruned base scan: they surface
+    // under a range filter that skips d2's base...
+    val hi = t.filter(col("v") >= 95L)
+    assert(hi.selectExpr("id").as[Long].collect().toSet == Set(77L),
+      "a pending delta's rows must surface under a range filter")
+    assert(TestSpark.scannedFiles(hi) < all, "d2's base must be skipped")
+    // ...and under a point lookup that both base blooms reject
+    val pt = t.filter(col("id") === 77L)
+    assert(pt.selectExpr("v").as[Long].collect().toSet == Set(99L),
+      "a pending delta's new key must surface under a point lookup")
+    assert(TestSpark.scannedFiles(pt) < all, "the base blooms must prune")
+    // compaction folds the delta into d1's base; the zone map WIDENED at
+    // upsert time is what still admits the folded row
+    assert(Maintenance.compact(spark, path, committer = c).committed)
+    assert(Upsert.readTable(spark, path, c).filter(col("v") >= 95L)
+      .selectExpr("id").as[Long].collect().toSet == Set(77L),
+      "the widened zone map must admit the compacted delta's range")
   }
 
   test("contracts: fixed keys/order, no schema evolution, no new partitions") {

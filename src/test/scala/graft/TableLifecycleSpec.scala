@@ -87,7 +87,7 @@ class TableLifecycleSpec extends AnyFunSuite {
     assert(Maintenance.tableFileStats(path, c).forall(_.nFiles == 1))
     val m = c.readManifest(path)
     assert(Upsert.rangeOf(m, "d1", "version").contains((100.0, 200.0)))
-    assert(rows(Upsert.readTableRangePruned(spark, path, "version", 150, 250, c)
+    assert(rows(Upsert.readTable(spark, path, c)
         .filter(col("version").between(150, 250))) ==
       Set(("d1", 2L, 200L, None)))
 

@@ -74,12 +74,14 @@ class TableRenameSpec extends AnyFunSuite {
     Upsert.renameColumn(path, "v", "version")
     Upsert.renameColumn(path, "id", "key")
 
-    // imperative pruned reads accept LOGICAL column names
-    val r = Upsert.readTableRangePruned(spark, path, "version", 90, 150)
+    // filters on LOGICAL column names prune through the physical stats
+    val r = Upsert.readTable(spark, path).filter(col("version").between(90, 150))
     assert(r.columns.toSeq == Seq("day", "key", "version"))
     assert(r.selectExpr("key").as[Long].collect().toSet == Set(2L))
-    val p = Upsert.readTablePointPruned(spark, path, "key", Seq(3L))
+    assert(TestSpark.scannedFiles(r) == 1L, "the logical-name range must zone-prune")
+    val p = Upsert.readTable(spark, path).filter(col("key") === 3L)
     assert(p.selectExpr("key").as[Long].collect().toSet == Set(3L))
+    assert(TestSpark.scannedFiles(p) == 1L, "the logical-name lookup must bloom-prune")
 
     // declarative: logical filter prunes through to the physical stats
     val t = ManifestTable.readTableIndexed(spark, path)
@@ -131,10 +133,10 @@ class TableRenameSpec extends AnyFunSuite {
     // superset contract: pre-enable partitions lack stats and are kept;
     // the exact predicate lands on top (and must find the new partition,
     // proving the post-rename declarations bound the right column)
-    val r = Upsert.readTableRangePruned(spark, path, "version", 150, 250)
+    val r = Upsert.readTable(spark, path)
       .filter(col("version").between(150, 250))
     assert(r.selectExpr("id").as[Long].collect().toSet == Set(3L))
-    val p2 = Upsert.readTablePointPruned(spark, path, "id", Seq(3L))
+    val p2 = Upsert.readTable(spark, path)
       .filter(col("id") === 3L)
     assert(p2.selectExpr("id").as[Long].collect().toSet == Set(3L))
   }

@@ -26,6 +26,17 @@ object TestSpark {
     case f: FileSourceScanExec    => Seq(f)
     case p                        => p.children.flatMap(fileScanNodes)
   }
+
+  /** Files the scans of `df` read (their numFiles metrics), collecting it. */
+  def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    fileScanNodes(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+  }
+
+  /** Data files committed under `parts` of the manifest table at `path`. */
+  def filesOf(path: String, parts: String*): Long =
+    graft.pipeline.Maintenance.tableFileStats(path)
+      .filter(p => parts.contains(p.key)).map(_.nFiles.toLong).sum
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -9,7 +9,7 @@ import graft.pipeline.{Maintenance, Upsert}
 import graft.streaming.AtomicRenameCommitter
 
 /** Manifest-level zone maps: per-partition [min,max] ranges committed with
-  * the data let a range-pruned read skip partitions without listing or
+  * the data let a range-filtered read skip partitions without listing or
   * opening them; missing stats never wrongly skip; rewrites recompute;
   * compaction preserves entries verbatim (content unchanged).
   */
@@ -33,13 +33,14 @@ class ZoneMapSpec extends AnyFunSuite {
 
     val m = AtomicRenameCommitter.readManifest(path)
     assert(Upsert.rangeOf(m, "d2", "version").contains((100.0, 110.0)))
-    assert(Upsert.rangePrunedEntries(m, "version", 100, 150).keySet == Set("d2"))
-    // the pruned read returns a superset of matches from d2 only...
-    assert(rows(Upsert.readTableRangePruned(spark, path, "version", 100, 150)) ==
-      Set(("d2", 3L, 100L), ("d2", 4L, 110L)))
-    // ...and the empty-intersection read is an empty frame with the schema
-    val none = Upsert.readTableRangePruned(spark, path, "version", 1000, 2000)
+    // the filtered read scans d2's files only...
+    val q = Upsert.readTable(spark, path).filter(col("version").between(100L, 150L))
+    assert(rows(q) == Set(("d2", 3L, 100L), ("d2", 4L, 110L)))
+    assert(TestSpark.scannedFiles(q) == TestSpark.filesOf(path, "d2"))
+    // ...and the empty-intersection read scans nothing, schema intact
+    val none = Upsert.readTable(spark, path).filter(col("version").between(1000L, 2000L))
     assert(none.count() == 0 && none.columns.contains("version"))
+    assert(TestSpark.scannedFiles(none) == 0L)
   }
 
   test("partitions without recorded stats are always read (never wrongly skipped)") {
@@ -52,7 +53,9 @@ class ZoneMapSpec extends AnyFunSuite {
     val m = AtomicRenameCommitter.readManifest(path)
     assert(Upsert.rangeOf(m, "d9", "version").isEmpty)
     // pruning to d1's range keeps stat-less d9 (superset contract)
-    assert(Upsert.rangePrunedEntries(m, "version", 0, 10).keySet == Set("d1", "d9"))
+    val q = Upsert.readTable(spark, path).filter(col("version").between(0L, 10L))
+    assert(rows(q) == Set(("d1", 1L, 5L)))
+    assert(TestSpark.scannedFiles(q) == TestSpark.filesOf(path, "d1", "d9"))
   }
 
   test("rewrites recompute the zone map; compaction preserves it; a dropped partition loses it") {
@@ -71,8 +74,9 @@ class ZoneMapSpec extends AnyFunSuite {
     Maintenance.compact(spark, path)
     val m2 = AtomicRenameCommitter.readManifest(path)
     assert(Upsert.rangeOf(m2, "d2", "version").contains((700.0, 700.0)))
-    assert(rows(Upsert.readTableRangePruned(spark, path, "version", 600, 800)) ==
-      Set(("d2", 3L, 700L)))
+    val q = Upsert.readTable(spark, path).filter(col("version").between(600L, 800L))
+    assert(rows(q) == Set(("d2", 3L, 700L)))
+    assert(TestSpark.scannedFiles(q) == TestSpark.filesOf(path, "d2"))
 
     // deleting all of d2 drops both its data entry and its zone map
     Upsert.deleteWhere(spark, path, "day", col("version") === 700L)
