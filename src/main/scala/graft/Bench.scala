@@ -68,6 +68,14 @@ object Bench {
     * reconstructible from the run output alone.
     */
   private[graft] def resolveReference(name: String, envKey: String): Option[java.nio.file.Path] = {
+    val won = (sys.env.get(envKey).map(java.nio.file.Paths.get(_)).toSeq ++
+      inRepo(name)).find(java.nio.file.Files.isRegularFile(_))
+    won.foreach(p => System.err.println(s"[bench] reference $name resolved to $p"))
+    won
+  }
+
+  /** Candidate paths of the repo-relative `name`, file or directory. */
+  private def inRepo(name: String): Seq[java.nio.file.Path] = {
     val walkUp = Iterator
       .iterate(java.nio.file.Paths.get("").toAbsolutePath.normalize)(_.getParent)
       .takeWhile(_ != null).take(6)
@@ -75,11 +83,17 @@ object Bench {
     val repoRoot = sys.props.get("graft.repo.root")
       .orElse(sys.env.get("SPARK_GRAFT_REPO_ROOT"))
       .map(r => java.nio.file.Paths.get(r, name)).toSeq
-    val won = (sys.env.get(envKey).map(java.nio.file.Paths.get(_)).toSeq ++
-      walkUp ++ repoRoot)
-      .find(java.nio.file.Files.isRegularFile(_))
-    won.foreach(p => System.err.println(s"[bench] reference $name resolved to $p"))
-    won
+    walkUp ++ repoRoot
+  }
+
+  /** The committed `fixtures/<name>` dir as an absolute path, resolved
+    * like [[resolveReference]]; when absent, the cwd candidate, so the
+    * failing read names the path it looked for.
+    */
+  private[graft] def fixtureDir(name: String): String = {
+    val candidates = inRepo(s"fixtures/$name")
+    candidates.find(java.nio.file.Files.isDirectory(_))
+      .getOrElse(candidates.head).toString
   }
 
   /** The queries whose measured min is suspect against the committed

@@ -21,15 +21,15 @@ object SparkEntry {
 
   /** Committed genuine-container media fixture (gen.MediaGen) — absolute so
     * both the Spark queries and the DuckDB oracle resolve it regardless of
-    * the harness's working directory.
+    * the harness's working directory ([[Bench.fixtureDir]]).
     */
-  val MediaFixture = "/root/repo/fixtures/media"
+  val MediaFixture = Bench.fixtureDir("media")
 
   /** Committed nested run-log fixture (gen.RunLogGen) — `day_partition=`
     * sharded parquet standing in for the reference's date-suffixed log
     * export tables.
     */
-  val RunLogFixture = "/root/repo/fixtures/runlog"
+  val RunLogFixture = Bench.fixtureDir("runlog")
 
   /** Committed ANN quantizer fixture (gen.AnnIndexGen): coarse IVF
     * centroids + PQ codebooks trained once on the sf0.01 corpus — the
@@ -38,7 +38,7 @@ object SparkEntry {
     * queries exactly oracle-able: DuckDB replays assignment, probing, ADC
     * and the exact re-rank from the same parquet models.
     */
-  val AnnIndexFixture = "/root/repo/fixtures/annidx"
+  val AnnIndexFixture = Bench.fixtureDir("annidx")
 
   /** Committed PCA rotation fixture (gen.PcaGen): eigenvalue-descending,
     * sign-pinned components of the sf0.01 embedding covariance, with the
@@ -46,7 +46,7 @@ object SparkEntry {
     * the projection with the identical float op order
     * (`list_inner_product(emb, w) − mu_dot_w`).
     */
-  val PcaFixture = "/root/repo/fixtures/pca"
+  val PcaFixture = Bench.fixtureDir("pca")
 
   /** Committed token→xxhash64(seed 42) dictionary (gen.SimHashDictGen)
     * over the fixture corpora's document vocabulary — DuckDB cannot
@@ -54,13 +54,13 @@ object SparkEntry {
     * replays the entire SimHash operator (bit votes → majority pack →
     * band join → Hamming refine) exactly.
     */
-  val SimHashFixture = "/root/repo/fixtures/simhash"
+  val SimHashFixture = Bench.fixtureDir("simhash")
 
   /** Committed vitals-generator snapshot (gen.VitalsGen.main): pins the
     * generator's determinism contract — regeneration in the current session
     * must bit-match this parquet, read independently by DuckDB.
     */
-  val VitalsFixture = "/root/repo/fixtures/vitalsgen"
+  val VitalsFixture = Bench.fixtureDir("vitalsgen")
 
   /** Ensure the ns-timestamp parquet reader conf is set (Tables normalizes
     * `events.ts` ns→µs, matching DuckDB's cast — see Tables.events), and

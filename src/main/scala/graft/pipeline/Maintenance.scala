@@ -119,14 +119,7 @@ object Maintenance {
                                   targetFileBytes: Long, zorderCols: Seq[String],
                                   committer: SnapshotCommitter): (CompactStats, Option[Upsert.StagedReplace]) = {
     val manifest = committer.readManifest(tablePath)
-    // data dirs AND pending deletion sidecars — both are on-disk refs
-    val dataRefs = Upsert.liveDirRefs(manifest)
-    // collect a crashed predecessor's staging and data superseded by the
-    // previous commit (its one-cycle reader grace window ends here)
-    SnapshotGc.gcUnreferenced(tablePath,
-      dataRefs ++ committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-
+    val batchDirName = Upsert.startStaging(tablePath, manifest, committer)
     val stats = tableFileStats(tablePath, committer)
     // compaction is also the MoR materialization pass: a partition with a
     // pending deletion or delta sidecar rewrites even when its file count
@@ -141,7 +134,6 @@ object Maintenance {
       return (CompactStats(Nil, stats.map(_.nFiles.toLong).sum,
         stats.map(_.nFiles.toLong).sum, 0L, committed = false), None)
 
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
     // partitions compact independently — run their rewrite jobs
     // CONCURRENTLY (JoinAll caps the driver threads at 4; the cluster
     // parallelizes within each job) so a long tail of small-file
@@ -214,8 +206,7 @@ object Maintenance {
     (CompactStats(keys, stats.map(_.nFiles.toLong).sum,
       untouchedFiles + afterSelected, selected.map(_.bytes).sum,
       committed = false),
-      Some(Upsert.StagedReplace(tablePath,
-        keys.map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName),
-        manifest, batchDirName, keys.toSet, newManifest)))
+      Some(Upsert.StagedReplace(tablePath, manifest, batchDirName, newManifest,
+        keys.map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName))))
   }
 }

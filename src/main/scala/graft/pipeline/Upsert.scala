@@ -898,16 +898,16 @@ object Upsert {
   private def upKeysOf(manifest: Map[String, String]): Seq[String] =
     manifest.get(UpKeysKey).map(_.split(",").toSeq).getOrElse(Nil)
 
-  /** Every manifest value that references an on-disk dir the GC must keep:
-    * data entries, deletion sidecars, and delta sidecars (most `__`
-    * metadata values are inline — schema JSON, column lists — but
-    * `__del.`/`__delta.` values are paths).
+  /** True for a key whose value is an on-disk dir: data entries and the
+    * `__del.`/`__delta.`/`__cdf` sidecars (other `__` values are inline).
     */
+  private def isDirRef(k: String): Boolean =
+    !k.startsWith("__") || k.startsWith(DelKeyPrefix) ||
+      k.startsWith(DeltaKeyPrefix) || k == CdfRelKey
+
+  /** The dirs a manifest references — the live set of every staging GC. */
   private[graft] def liveDirRefs(manifest: Map[String, String]): Set[String] =
-    manifest.collect {
-      case (k, v) if !k.startsWith("__") || k.startsWith(DelKeyPrefix) ||
-        k.startsWith(DeltaKeyPrefix) || k == CdfRelKey => v
-    }.toSet
+    manifest.collect { case (k, v) if isDirRef(k) => v }.toSet
 
   /** Sidecar rels committed for `prefix`, restricted to `parts` when a
     * pruned read supplies the partition set it actually lists (None = the
@@ -996,7 +996,10 @@ object Upsert {
   /** The table's committed CHECK constraints (name → SQL expression). */
   def constraints(tablePath: String,
                   committer: SnapshotCommitter = AtomicRenameCommitter): Map[String, String] =
-    committer.readManifest(tablePath).collect {
+    checksOf(committer.readManifest(tablePath))
+
+  private def checksOf(manifest: Map[String, String]): Map[String, String] =
+    manifest.collect {
       case (k, v) if k.startsWith(CheckPrefix) => k.stripPrefix(CheckPrefix) -> v
     }
 
@@ -1813,10 +1816,25 @@ object Upsert {
     * — run compaction (or let organic rewrites happen) to return to
     * sidecar-free scans. Keys never present in the table are harmless
     * (the anti-join simply matches nothing).
+    * It is [[stageDeleteMor]] followed by [[commitReplace]].
     */
   def deleteKeysMor(spark: SparkSession, tablePath: String, partCol: String,
                     keys: Seq[String], keyRows: DataFrame,
                     committer: SnapshotCommitter = AtomicRenameCommitter): DeleteStats = withOp(committer, tablePath, "delete_mor") {
+    stageDeleteMor(spark, tablePath, partCol, keys, keyRows, committer)
+      .fold(DeleteStats(Nil, 0L)) { case (staged, pending) =>
+        commitReplace(staged, committer)
+        DeleteStats(staged.parts, pending)
+      }
+  }
+
+  /** The staging half of [[deleteKeysMor]] and its pending key count;
+    * None when no key touches a committed partition.
+    */
+  private[graft] def stageDeleteMor(spark: SparkSession, tablePath: String,
+                                    partCol: String, keys: Seq[String],
+                                    keyRows: DataFrame,
+                                    committer: SnapshotCommitter): Option[(StagedReplace, Long)] = {
     require(keys.nonEmpty, "MoR delete needs key columns")
     val manifest = committer.readManifest(tablePath)
     require(dataEntries(manifest).nonEmpty, s"no committed table at $tablePath")
@@ -1835,7 +1853,7 @@ object Upsert {
     val touched = rows.select(col(pcPhys).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
       .filter(t => manifest.contains(partKey(t)))
-    if (touched.isEmpty) return DeleteStats(Nil, 0L)
+    if (touched.isEmpty) return None
     val touchedEsc = touched.map(partKey)
     val newKeys = rows.filter(
       col(pcPhys).cast("string").isin(touched: _*))
@@ -1848,7 +1866,7 @@ object Upsert {
         spark.read.parquet(priorRels.map(r => s"$tablePath/$r"): _*)
           .select((pcPhys +: keysPhys).map(col): _*))
     val combined = combined0.distinct()
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
+    val batchDirName = startStaging(tablePath, manifest, committer)
     // same dir protocol as data staging: a `__dp` COPY keeps the real
     // partition column in the sidecar files for the read-side anti-join
     combined.withColumn("__dp", col(pcPhys).cast("string"))
@@ -1890,23 +1908,9 @@ object Upsert {
       (DelKeysKey -> keysPhys.mkString(",")) +
       (PartColKey -> pcPhys) // pre-PartColKey tables gain it here — the
       // read-side anti-join resolves its join columns through it
-    // write-time change feed (no-op unless enabled): the touched
-    // partitions' pre state vs their post state under the new sidecars —
-    // the staged sidecar files already exist, so reading through the
-    // uncommitted manifest is exact. O(touched), the cost the delete's
-    // own sidecar rewrite already paid.
-    val touchedEntries = entriesOf(manifest, touched)
-    val cdfEntry =
-      if (!manifest.contains(CdfKeysKey)) Map.empty[String, String]
-      else stageCdf(manifest, tablePath, batchDirName,
-        ManifestTable.read(spark, tablePath, manifest, touchedEntries),
-        ManifestTable.read(spark, tablePath, newManifest0, touchedEntries))
-    val newManifest = dropCarriedCdf(newManifest0) ++ cdfEntry
-    committer.commit(tablePath, newManifest)
-    SnapshotGc.gcUnreferenced(tablePath, manifest.values.toSet ++
-      newManifest.values ++ committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-    DeleteStats(touched, pending)
+    Some((StagedReplace(tablePath, manifest, batchDirName, withMorCdf(spark,
+      tablePath, batchDirName, manifest, newManifest0, touched),
+      parts = touched), pending))
   }
 
   /** MERGE-ON-READ upsert: merge `delta` (full logical schema) into the
@@ -1930,12 +1934,25 @@ object Upsert {
     * cost, nothing existing to merge with); CHECK constraints are
     * enforced against the sidecar before the flip. Zone maps of touched
     * partitions WIDEN by the delta's ranges, so they stay sound once
-    * compaction folds the delta into the base.
+    * compaction folds the delta into the base. It is [[stageUpsertMor]]
+    * followed by [[commitReplace]].
     */
   def upsertKeysMor(spark: SparkSession, tablePath: String, partCol: String,
                     keys: Seq[String], order: Seq[String], delta: DataFrame,
                     committer: SnapshotCommitter = AtomicRenameCommitter,
                     meta: Map[String, String] = Map.empty): UpsertStats = withOp(committer, tablePath, "upsert_mor") {
+    val (staged, pending) = stageUpsertMor(spark, tablePath, partCol, keys,
+      order, delta, committer, meta)
+    commitReplace(staged, committer)
+    UpsertStats(staged.parts, delta.count(), pending)
+  }
+
+  /** The staging half of [[upsertKeysMor]] and its pending row count. */
+  private[graft] def stageUpsertMor(spark: SparkSession, tablePath: String,
+                                    partCol: String, keys: Seq[String],
+                                    order: Seq[String], delta: DataFrame,
+                                    committer: SnapshotCommitter,
+                                    meta: Map[String, String] = Map.empty): (StagedReplace, Long) = {
     require(keys.nonEmpty, "MoR upsert needs key columns")
     val touched = touchedPartitionsOf(delta, partCol, keys)
     val manifest = committer.readManifest(tablePath)
@@ -1957,19 +1974,17 @@ object Upsert {
       s"MoR upsert targets partitions with no committed data " +
         s"(${missingParts.mkString(",")}) — a new partition is a plain " +
         "insert; stage it through upsertPartitionsAtomic")
-    // schema gate: the sidecar must carry EXACTLY the committed physical
-    // schema — an evolving delta would leave base dirs and sidecar dirs
-    // answering different schemas under one manifest
-    val deltaPhys = toPhysical(delta, manifest)
     val committed = committedSchema(manifest).getOrElse(
       throw new IllegalStateException(
         s"no committed schema at $tablePath — MoR upsert needs schema metadata"))
-    val evolved = validateEvolution(committed, deltaPhys.schema)
-    require(evolved.fields.map(f => (f.name, f.dataType)).toSeq ==
-      committed.fields.map(f => (f.name, f.dataType)).toSeq,
+    // schema gate: the sidecar must carry EXACTLY the committed physical
+    // schema (narrow columns upcast) — an evolving delta would leave base
+    // dirs and sidecar dirs answering different schemas under one manifest
+    val deltaC = evolvedPhysical(delta, manifest)
+    require(deltaC.schema.fields.map(f => (f.name, f.dataType)).toSet ==
+      committed.fields.map(f => (f.name, f.dataType)).toSet,
       "MoR upsert cannot evolve the schema — stage the widening commit " +
         "through upsertPartitionsAtomic first")
-    val deltaC = castToMerged(deltaPhys, committed)
 
     val touchedEsc = touched.map(partKey)
     // pre-merge against the touched partitions' pending sidecars so one
@@ -1981,26 +1996,13 @@ object Upsert {
         spark.read.schema(committed)
           .parquet(priorRels.map(r => s"$tablePath/$r"): _*),
         deltaC, keysPhys, orderPhys)
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
+    val batchDirName = startStaging(tablePath, manifest, committer)
     val staged = combined.withColumn("__part", col(pcPhys).cast("string"))
     staged.write.mode(SaveMode.Overwrite).partitionBy("__part")
       .parquet(s"$tablePath/$batchDirName")
     val writtenParts = stagedDirNames(s"$tablePath/$batchDirName", "__part=")
-    // CHECK enforcement against the staged sidecar (what would become
-    // visible) — a violation abandons the staging, previous manifest
-    // intact
-    val checks = manifest.collect {
-      case (k, v) if k.startsWith(CheckPrefix) => k.stripPrefix(CheckPrefix) -> v
-    }
-    if (checks.nonEmpty) {
-      val bad = violationCounts(toLogical(
-        spark.read.schema(committed).parquet(s"$tablePath/$batchDirName"),
-        manifest), checks)
-      if (bad.nonEmpty) {
-        TableFs.delete(s"$tablePath/$batchDirName")
-        throw new CheckViolationException(bad, checks)
-      }
-    }
+    enforceChecks(manifest, tablePath, batchDirName,
+      spark.read.schema(committed).parquet(s"$tablePath/$batchDirName"))
     // committed zone maps WIDEN by the delta's ranges (a sidecar can only
     // add value range, never shrink it). A read needs no help while the
     // delta pends — its rows union in above the pruned base scan — but
@@ -2023,21 +2025,22 @@ object Upsert {
       (UpKeysKey -> keysPhys.mkString(",")) +
       (UpOrderKey -> orderPhys.mkString(",")) +
       (PartColKey -> pcPhys)
-    // write-time change feed (no-op unless enabled): touched partitions'
-    // pre state vs their post state under the new delta sidecars — the
-    // staged files exist, so the uncommitted-manifest read is exact
+    (StagedReplace(tablePath, manifest, batchDirName, withMorCdf(spark,
+      tablePath, batchDirName, manifest, newManifest0, touched),
+      parts = touched), pending)
+  }
+
+  /** A MoR write's manifest with its change feed (no-op unless enabled):
+    * touched partitions before vs under the staged sidecars — O(touched).
+    */
+  private def withMorCdf(spark: SparkSession, tablePath: String,
+                         batchDirName: String, manifest: Map[String, String],
+                         newManifest: Map[String, String],
+                         touched: Seq[String]): Map[String, String] = {
     val touchedEntries = entriesOf(manifest, touched)
-    val cdfEntry =
-      if (!manifest.contains(CdfKeysKey)) Map.empty[String, String]
-      else stageCdf(manifest, tablePath, batchDirName,
-        ManifestTable.read(spark, tablePath, manifest, touchedEntries),
-        ManifestTable.read(spark, tablePath, newManifest0, touchedEntries))
-    val newManifest = dropCarriedCdf(newManifest0) ++ cdfEntry
-    committer.commit(tablePath, newManifest)
-    SnapshotGc.gcUnreferenced(tablePath, liveDirRefs(manifest) ++
-      newManifest.values ++ committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-    UpsertStats(touched, delta.count(), pending)
+    dropCarriedCdf(newManifest) ++ stageCdf(manifest, tablePath, batchDirName,
+      ManifestTable.read(spark, tablePath, manifest, touchedEntries),
+      ManifestTable.read(spark, tablePath, newManifest, touchedEntries))
   }
 
   /** Widen committed `__range.<p>` entries by a pending delta's ranges.
@@ -2266,74 +2269,52 @@ object Upsert {
     * and readers ([[readTable]]) never see staging. The unpartitioned
     * companion to [[replacePartitionsAtomic]] for small whole-rebuild
     * tables (dims); partitioned facts want the partition-granular forms.
+    * It is [[stageTableWrite]] followed by [[commitReplace]].
     */
   def writeTableAtomic(spark: SparkSession, data0: DataFrame,
                        tablePath: String,
                        committer: SnapshotCommitter = AtomicRenameCommitter,
                        meta: Map[String, String] = Map.empty): Unit = withOp(committer, tablePath, "write") {
+    commitReplace(stageTableWrite(spark, data0, tablePath, committer, meta),
+      committer)
+  }
+
+  /** The staging half of [[writeTableAtomic]]. */
+  private[graft] def stageTableWrite(spark: SparkSession, data0: DataFrame,
+                                     tablePath: String,
+                                     committer: SnapshotCommitter,
+                                     meta: Map[String, String] = Map.empty): StagedReplace = {
     val manifest = committer.readManifest(tablePath)
-    val dataRaw = toPhysical(data0, manifest)
-    val data = committedSchema(manifest)
-      .map(old => castToMerged(dataRaw, validateEvolution(old, dataRaw.schema)))
-      .getOrElse(dataRaw)
-    SnapshotGc.gcUnreferenced(tablePath,
-      liveDirRefs(manifest) ++ committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
+    val data = evolvedPhysical(data0, manifest)
+    val batchDirName = startStaging(tablePath, manifest, committer)
     val rel = s"$batchDirName/data"
     data.write.mode(SaveMode.Overwrite).parquet(s"$tablePath/$rel")
-    val checks = manifest.collect {
-      case (k, v) if k.startsWith(CheckPrefix) => k.stripPrefix(CheckPrefix) -> v
-    }
-    if (checks.nonEmpty) {
-      // constraints speak logical names (same contract as the partition
-      // staging path)
-      val bad = violationCounts(
-        toLogical(spark.read.parquet(s"$tablePath/$rel"), manifest), checks)
-      if (bad.nonEmpty) {
-        TableFs.delete(
-          s"$tablePath/${rel.split('/').dropRight(1).mkString("/")}")
-        throw new CheckViolationException(bad, checks)
-      }
-    }
+    enforceChecks(manifest, tablePath, batchDirName,
+      spark.read.parquet(s"$tablePath/$rel"))
     // write-time change feed across the overwrite (no-op unless enabled):
     // a whole-table rebuild's change set is inherently O(table) — the
     // same order as the write itself
     val cdfEntry =
-      if (!manifest.contains(CdfKeysKey) || dataEntries(manifest).isEmpty)
-        Map.empty[String, String]
+      if (dataEntries(manifest).isEmpty) Map.empty[String, String]
       else stageCdf(manifest, tablePath, batchDirName,
         ManifestTable.read(spark, tablePath, manifest, dataEntries(manifest)),
         toLogical(spark.read.parquet(s"$tablePath/$rel"), manifest))
     // metadata rides the SAME manifest flip — one atomic commit covers the
     // new snapshot and (e.g.) the batch-id ledger, which is what makes
     // replay-skip decisions crash-consistent with the data they describe
-    committer.commit(tablePath,
-      Map("all" -> rel, SchemaKey -> data.schema.json) ++
+    // declarations carry over (dropped names too: retained old VERSIONS
+    // still carry data dirs with those physical names); per-partition and
+    // `__stats.*` entries describe the replaced data and drop
+    val carried = Set(CdfKeysKey, RangeColsKey, BloomColsKey, BloomItemsKey,
+      BloomFppKey, ColMapKey, DropColsKey)
+    StagedReplace(tablePath, manifest, batchDirName,
+      manifest.filter { case (k, _) => k.startsWith(CheckPrefix) || carried(k) } +
+        ("all" -> rel) + (SchemaKey -> data.schema.json) ++
         // footer-proved row count: metadata COUNT(*) / DESCRIBE DETAIL /
         // INSERT accounting work on snapshot tables like on partitioned
         // ones (one footer read per staged file, already-written bytes)
         footerEntriesForDir(spark, Nil, tablePath, "all", rel) ++ cdfEntry ++
-        // change-feed enablement survives a full rebuild like the checks
-        manifest.get(CdfKeysKey).map(CdfKeysKey -> _) ++
-        checks.map { case (n, e) => s"$CheckPrefix$n" -> e } ++
-        // the stats declarations survive a whole-table overwrite like the
-        // checks do (per-partition __range entries / bloom sidecars don't
-        // apply to the single "all" snapshot and are rebuilt by later
-        // partition commits)
-        manifest.get(RangeColsKey).map(RangeColsKey -> _) ++
-        manifest.get(BloomColsKey).map(BloomColsKey -> _) ++
-        manifest.get(BloomItemsKey).map(BloomItemsKey -> _) ++
-        manifest.get(BloomFppKey).map(BloomFppKey -> _) ++
-        manifest.get(ColMapKey).map(ColMapKey -> _) ++
-        // dropped names stay retired across a full rebuild — retained old
-        // VERSIONS still carry data dirs with those physical names
-        manifest.get(DropColsKey).map(DropColsKey -> _) ++
         meta.map { case (k, v) => s"__$k" -> v })
-    SnapshotGc.gcUnreferenced(tablePath,
-      liveDirRefs(manifest) + rel ++ cdfEntry.values ++
-        committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
   }
 
   /** INSERT INTO for the manifest stack: stage `data` under an immutable
@@ -2346,48 +2327,43 @@ object Upsert {
     * by the partition-keyed mutators (their manifest keys are partition
     * values; mixing the two key families makes partition surgery
     * ill-defined) — an appended table is read whole or time-traveled.
+    * It is [[stageAppend]] followed by [[commitReplace]].
     */
   def appendTableAtomic(spark: SparkSession, data0: DataFrame,
                         tablePath: String,
                         committer: SnapshotCommitter = AtomicRenameCommitter,
                         meta: Map[String, String] = Map.empty): Unit =
     withOp(committer, tablePath, "append") {
-      val manifest = committer.readManifest(tablePath)
-      require(!manifest.contains("all") &&
-        manifest.keys.forall(k => k.startsWith("__") || k.startsWith("append-")),
-        s"append target $tablePath is managed by a non-append write path")
-      val dataRaw = toPhysical(data0, manifest)
-      val data = committedSchema(manifest)
-        .map(old => castToMerged(dataRaw, validateEvolution(old, dataRaw.schema)))
-        .getOrElse(dataRaw)
-      SnapshotGc.gcUnreferenced(tablePath,
-        liveDirRefs(manifest) ++ committer.retainedReferences(tablePath),
-        committer.gcGraceMs)
-      val id = java.util.UUID.randomUUID().toString.take(8)
-      val rel = s"batch-$id/data"
-      data.write.mode(SaveMode.Overwrite).parquet(s"$tablePath/$rel")
-      val checks = manifest.collect {
-        case (k, v) if k.startsWith(CheckPrefix) => k.stripPrefix(CheckPrefix) -> v
-      }
-      if (checks.nonEmpty) {
-        val bad = violationCounts(
-          toLogical(spark.read.parquet(s"$tablePath/$rel"), manifest), checks)
-        if (bad.nonEmpty) {
-          TableFs.delete(
-            s"$tablePath/${rel.split('/').dropRight(1).mkString("/")}")
-          throw new CheckViolationException(bad, checks)
-        }
-      }
-      committer.commit(tablePath,
-        dropCarriedCdf(manifest) + (s"append-$id" -> rel) +
-          (SchemaKey -> committedSchema(manifest)
-            .fold(data.schema)(withNullsOf(data.schema, _)).json) ++
-          // footer-proved row count for the new entry: existing entries
-          // keep their stamps, so the metadata COUNT(*) stays provable
-          // across appends (and INSERT INTO's inserted_rows is exact)
-          footerEntriesForDir(spark, Nil, tablePath, s"append-$id", rel) ++
-          meta.map { case (k, v) => s"__$k" -> v })
+      commitReplace(stageAppend(spark, data0, tablePath, committer, meta),
+        committer)
     }
+
+  /** The staging half of [[appendTableAtomic]]. */
+  private[graft] def stageAppend(spark: SparkSession, data0: DataFrame,
+                                 tablePath: String,
+                                 committer: SnapshotCommitter,
+                                 meta: Map[String, String] = Map.empty): StagedReplace = {
+    val manifest = committer.readManifest(tablePath)
+    require(!manifest.contains("all") &&
+      manifest.keys.forall(k => k.startsWith("__") || k.startsWith("append-")),
+      s"append target $tablePath is managed by a non-append write path")
+    val data = evolvedPhysical(data0, manifest)
+    val batchDirName = startStaging(tablePath, manifest, committer)
+    val entry = s"append-${batchDirName.stripPrefix("batch-")}"
+    val rel = s"$batchDirName/data"
+    data.write.mode(SaveMode.Overwrite).parquet(s"$tablePath/$rel")
+    enforceChecks(manifest, tablePath, batchDirName,
+      spark.read.parquet(s"$tablePath/$rel"))
+    StagedReplace(tablePath, manifest, batchDirName,
+      dropCarriedCdf(manifest) + (entry -> rel) +
+        (SchemaKey -> committedSchema(manifest)
+          .fold(data.schema)(withNullsOf(data.schema, _)).json) ++
+        // footer-proved row count for the new entry: existing entries
+        // keep their stamps, so the metadata COUNT(*) stays provable
+        // across appends (and INSERT INTO's inserted_rows is exact)
+        footerEntriesForDir(spark, Nil, tablePath, entry, rel) ++
+        meta.map { case (k, v) => s"__$k" -> v })
+  }
 
   /** The staging half of [[upsertPartitionsAtomic]]: merge the delta into
     * the committed state of its touched partitions and [[stageReplace]]
@@ -2442,30 +2418,68 @@ object Upsert {
         committer, extraMeta), committer)
     }
 
-  /** A partition replace written under its own immutable batch dir but
-    * not yet visible: `parts` are the replaced (raw) partition values,
-    * `manifest` the committed state the staging was built against,
-    * `newManifest` the state [[commitReplace]] publishes; its data entries
-    * under `batchDirName` are the staged dirs.
+  /** A write staged under its own batch dir, not yet visible: `manifest`
+    * is the committed state it was built against, `newManifest` what
+    * [[commitReplace]] publishes; `parts` are the raw partition values a
+    * partition write replaces or touches.
     */
   private[graft] final case class StagedReplace(
-      tablePath: String, parts: Seq[String], manifest: Map[String, String],
-      batchDirName: String, writtenParts: Set[String],
-      newManifest: Map[String, String]) {
+      tablePath: String, manifest: Map[String, String], batchDirName: String,
+      newManifest: Map[String, String], parts: Seq[String] = Nil) {
 
     /** Footer-proved rows of the staged partitions. */
-    def writtenRows: Long =
-      writtenParts.toSeq.map(p => newManifest(s"$RowsKeyPrefix$p").toLong).sum
+    def writtenRows: Long = dataEntries(newManifest).collect {
+      case (p, rel) if rel.startsWith(s"$batchDirName/") =>
+        newManifest(s"$RowsKeyPrefix$p").toLong
+    }.sum
+  }
+
+  /** The start of every staging half: collect crashed stagings and data
+    * the previous commit superseded (its one-cycle reader grace ends
+    * here; manifest-referenced dirs stay), then name a fresh batch dir.
+    */
+  private[graft] def startStaging(tablePath: String,
+                                  manifest: Map[String, String],
+                                  committer: SnapshotCommitter): String = {
+    SnapshotGc.gcUnreferenced(tablePath,
+      liveDirRefs(manifest) ++ committer.retainedReferences(tablePath),
+      committer.gcGraceMs)
+    s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
+  }
+
+  /** The write seam: a LOGICAL frame in PHYSICAL names (files never
+    * rename), gated add-only+widening against the committed schema, with
+    * narrow columns upcast before staging.
+    */
+  private def evolvedPhysical(data0: DataFrame,
+                              manifest: Map[String, String]): DataFrame = {
+    val dataRaw = toPhysical(data0, manifest)
+    committedSchema(manifest)
+      .map(old => castToMerged(dataRaw, validateEvolution(old, dataRaw.schema)))
+      .getOrElse(dataRaw)
+  }
+
+  /** CHECK enforcement on the physical-named STAGED bytes, in the
+    * logical names constraints are authored in: a violation deletes the
+    * staging and throws, the previous manifest untouched.
+    */
+  private def enforceChecks(manifest: Map[String, String], tablePath: String,
+                            batchDirName: String, staged: => DataFrame): Unit = {
+    val checks = checksOf(manifest)
+    if (checks.nonEmpty) {
+      val bad = violationCounts(toLogical(staged, manifest), checks)
+      if (bad.nonEmpty) {
+        TableFs.delete(s"$tablePath/$batchDirName")
+        throw new CheckViolationException(bad, checks)
+      }
+    }
   }
 
   /** The staging half of a partition replace: stage `data` under a fresh
-    * batch dir, run every check and stats job on the staged bytes, and
-    * build the new manifest `(manifest -- parts) ++ written`. Staging
-    * alone is the crash window the commit must tolerate, and it can run
-    * beside writes to other tables. The initial GC collects a crashed
-    * predecessor's staging and data superseded by the previous commit
-    * (its one-cycle reader grace window ends here); `data` may lazily
-    * read manifest-referenced paths — the GC never deletes those.
+    * batch dir ([[startStaging]]), run every check and stats job on the
+    * staged bytes, and build the new manifest `(manifest -- parts) ++
+    * written`. Staging alone is the crash window the commit must
+    * tolerate, and it can run beside writes to other tables.
     */
   private[graft] def stageReplace(
       spark: SparkSession, data0: DataFrame, tablePath: String,
@@ -2484,21 +2498,9 @@ object Upsert {
     // interleaved between the two reads — the lost-update window the CAS
     // precondition exists to close
     val manifest = manifestRead.getOrElse(committer.readManifest(tablePath))
-    // the write seam of the column-mapping contract: incoming frames are
-    // LOGICAL-named; files and committed schema stay PHYSICAL forever
-    val dataRaw = toPhysical(data0, manifest)
+    val data = evolvedPhysical(data0, manifest)
     val partCol = physicalName(manifest, partCol0)
-    // the add-only+widening evolution gate: a commit may widen the
-    // committed schema but never drop or narrow a column old data dirs
-    // still carry; narrow incoming frames upcast before staging
-    val data = committedSchema(manifest)
-      .map(old => castToMerged(dataRaw, validateEvolution(old, dataRaw.schema)))
-      .getOrElse(dataRaw)
-    SnapshotGc.gcUnreferenced(tablePath,
-      manifest.values.toSet ++ committer.retainedReferences(tablePath),
-      committer.gcGraceMs)
-
-    val batchDirName = s"batch-${java.util.UUID.randomUUID().toString.take(8)}"
+    val batchDirName = startStaging(tablePath, manifest, committer)
     data.withColumn("__part", col(partCol).cast("string"))
       .write.mode(SaveMode.Overwrite).partitionBy("__part")
       .parquet(s"$tablePath/$batchDirName")
@@ -2510,9 +2512,7 @@ object Upsert {
     // (CHECK validation, zone maps, bloom filters) — persisted when more
     // than one consumer runs, so the write path scans the staging once,
     // not once per concern
-    val checks = manifest.collect {
-      case (k, v) if k.startsWith(CheckPrefix) => k.stripPrefix(CheckPrefix) -> v
-    }
+    val checks = checksOf(manifest)
     val statCols = (rangeStatsCols(manifest) ++ bloomStatsCols(manifest))
       .filter(data.columns.contains)
     // a declared generated partition column is an invariant, enforced on
@@ -2533,19 +2533,8 @@ object Upsert {
     if (consumers > 1) stagedDf.foreach(
       _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-      // CHECK enforcement against the STAGED bytes (what would become
-      // visible), before the flip; a violation abandons the staging with
-      // the previous manifest untouched
-      if (checks.nonEmpty) stagedDf.foreach { staged =>
-        // constraints are authored against the PRESENTED (logical) schema
-        // — addConstraint validates them on readTable — so the staged
-        // physical frame maps to logical names before evaluation
-        val bad = violationCounts(toLogical(staged.drop("__part"), manifest), checks)
-        if (bad.nonEmpty) {
-          TableFs.delete(s"$tablePath/$batchDirName")
-          throw new CheckViolationException(bad, checks)
-        }
-      }
+      stagedDf.foreach(st =>
+        enforceChecks(manifest, tablePath, batchDirName, st.drop("__part")))
       // generated-partition invariant on the staged bytes (physical
       // names): a row whose partition value isn't transform(src) would
       // make later interval pruning skip live data — refuse the commit
@@ -2615,15 +2604,15 @@ object Upsert {
         (SchemaKey -> committedSchema(manifest)
           .fold(data.schema)(withNullsOf(data.schema, _)).json) +
         (PartColKey -> partCol) // lets metadata DDL protect the partitioning
-      StagedReplace(tablePath, parts, manifest, batchDirName, writtenParts,
-        newManifest)
+      StagedReplace(tablePath, manifest, batchDirName, newManifest, parts)
     } finally {
       if (consumers > 1) stagedDf.foreach(_.unpersist())
     }
   }
 
-  /** The commit half of a partition replace: publish a [[stageReplace]]d
-    * manifest with one flip, then release superseded data one cycle late.
+  /** The commit half of every staged write: check the staging survived,
+    * publish its manifest with one flip, then release superseded data one
+    * cycle late.
     */
   private[graft] def commitReplace(staged: StagedReplace,
                                    committer: SnapshotCommitter): Unit = {
@@ -2631,19 +2620,20 @@ object Upsert {
     // the time since staging (post-staging jobs, or a caller that commits
     // only after other tables did) can outlast a concurrent writer's GC
     // grace window (the batch dir's mtime froze when staging finished):
-    // refresh the staging's age and VERIFY it survived before publishing
-    // references to it — a collected staging must fail loudly here, not
-    // surface later as dangling manifest entries
-    TableFs.touch(s"$tablePath/$batchDirName")
-    val missing = dataEntries(newManifest).filter { case (_, rel) =>
-      rel.startsWith(s"$batchDirName/") && !TableFs.isDirectory(s"$tablePath/$rel")
-    }.keySet
+    // refresh the staging's age and VERIFY every reference into it — data
+    // entries and sidecars alike — survived before publishing it; a
+    // collected staging must fail loudly here, not surface later as
+    // dangling manifest entries
+    val batchDir = s"$tablePath/$batchDirName"
+    if (TableFs.isDirectory(batchDir)) TableFs.touch(batchDir)
+    val missing = newManifest.collect { case (k, rel) if isDirRef(k) &&
+      rel.startsWith(s"$batchDirName/") && !TableFs.isDirectory(s"$tablePath/$rel") => k }
     if (missing.nonEmpty) throw new IllegalStateException(
-      s"staged partitions vanished before commit (concurrent GC passed " +
+      s"staged dirs vanished before commit (concurrent GC passed " +
         s"the grace window?): ${missing.toSeq.sorted.mkString(",")}")
     committer.commit(tablePath, newManifest)
-    SnapshotGc.gcUnreferenced(tablePath, manifest.values.toSet ++
-      newManifest.values ++ committer.retainedReferences(tablePath),
+    SnapshotGc.gcUnreferenced(tablePath, liveDirRefs(manifest) ++
+      liveDirRefs(newManifest) ++ committer.retainedReferences(tablePath),
       committer.gcGraceMs)
   }
 
@@ -2792,10 +2782,8 @@ object Upsert {
     val dstAbs = java.nio.file.Paths.get(dstPath).toAbsolutePath.normalize
     require(srcAbs != dstAbs, "cannot clone a table onto itself")
     val rewritten = m.map { case (k, v) =>
-      val isPathValue = !k.startsWith("__") || k.startsWith(DelKeyPrefix) ||
-        k.startsWith(DeltaKeyPrefix) || k.startsWith(FileStatsKeyPrefix) ||
-        k == CdfRelKey
-      if (isPathValue) k -> dstAbs.relativize(srcAbs.resolve(v)).toString
+      if (isDirRef(k) || k.startsWith(FileStatsKeyPrefix))
+        k -> dstAbs.relativize(srcAbs.resolve(v)).toString
       else k -> v
     }
     withOp(dstCommitter, dstPath, s"clone($srcPath@v$srcVersion)") {

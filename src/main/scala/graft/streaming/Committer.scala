@@ -88,16 +88,6 @@ trait SnapshotCommitter {
   */
 private[graft] object SnapshotGc {
 
-  /** The data references a manifest pins for GC purposes: data-partition
-    * entries plus the `__del.`/`__delta.` sidecar dirs an as-of read
-    * still applies and `__cdf` (the staged change log) — shared by every
-    * history-keeping committer's [[SnapshotCommitter.retainedReferences]].
-    */
-  def dataRefs(manifest: Map[String, String]): Set[String] =
-    manifest.collect { case (k, rel)
-      if !k.startsWith("__") || k.startsWith("__del.") ||
-        k.startsWith("__delta.") || k == "__cdf" => rel }.toSet
-
   def gcUnreferenced(snapshotPath: String, liveRel: Set[String],
                      minAgeMs: Long = 0L): Unit = {
     val cutoff = System.currentTimeMillis() - minAgeMs
@@ -452,7 +442,7 @@ final class VersionedCommitter(inner: SnapshotCommitter = AtomicRenameCommitter,
     versionFiles(snapshotPath).flatMap { case (_, p) =>
       // `__del.`/`__delta.`/`__cdf` values are sidecar dirs an as-of read
       // still applies — a retained version keeps them alive like data
-      SnapshotGc.dataRefs(parse(TableFs.readString(p)))
+      graft.pipeline.Upsert.liveDirRefs(parse(TableFs.readString(p)))
     }.toSet ++ inner.retainedReferences(snapshotPath)
 }
 
@@ -776,7 +766,7 @@ final class ConditionalPutCommitter(retainSlots: Int = 10,
   override def retainedReferences(snapshotPath: String): Set[String] =
     slotSeqs(snapshotPath).flatMap { n =>
       readSlotOpt(snapshotPath, n).toSeq.flatMap(body =>
-        SnapshotGc.dataRefs(AtomicRenameCommitter.parseManifest(body)))
+        graft.pipeline.Upsert.liveDirRefs(AtomicRenameCommitter.parseManifest(body)))
     }.toSet
 
   override def gcGraceMs: Long = graceMs

@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, DedupIndex}
-import graft.pipeline.Curation
+import graft.pipeline.{Curation, Upsert}
 
 /** MANIFEST-COMMITTED curated-corpus store — the exactly-once form of
   * continuous curation (the r19 verdict's top finding): one admission
   * batch extends FOUR tables (admitted rows, exact survivors, the dedup
   * index, the exact-hash index) plus the bloom sidecar, and all of it
   * becomes visible through ONE [[SnapshotCommitter]] manifest flip with
-  * the batch id recorded IN the manifest. A crash anywhere before the
-  * flip leaves only unreferenced staging (idempotently re-staged on
+  * the batch id recorded IN the manifest, published by
+  * [[graft.pipeline.Upsert.commitReplace]] like every manifest write (a
+  * fragment dir lost before the flip fails the commit). A crash anywhere
+  * before the flip leaves only unreferenced staging (idempotently re-staged on
   * replay — deterministic per-batch dir names, Overwrite mode — then
   * collected by the staging GC); a crash after the flip is a completed
   * batch whose replay is skipped by the in-manifest ledger. Duplicate
@@ -122,21 +124,29 @@ object CuratedStore {
 
   /** ADMIT one micro-batch and commit everything it extends through one
     * manifest flip; a batch whose `__batch.<id>` ledger entry is already
-    * committed is skipped whole (the idempotent-replay contract).
-    * `crashBeforeCommit` is the fault-injection seam: stage everything,
-    * return before the flip — the crash window the protocol must absorb.
+    * committed is skipped whole (the idempotent-replay contract). It is
+    * [[stageAdmit]] followed by [[Upsert.commitReplace]].
     */
   def admitCommit(spark: SparkSession, root: String, batchId: Long,
                   batch: DataFrame,
                   committer: SnapshotCommitter = AtomicRenameCommitter,
-                  minQuality: Double = 0.3,
-                  crashBeforeCommit: Boolean = false): Unit = {
+                  minQuality: Double = 0.3): Unit =
+    stageAdmit(spark, root, batchId, batch, committer, minQuality)
+      .foreach(Upsert.commitReplace(_, committer))
+
+  /** The staging half of [[admitCommit]], under the batch's deterministic
+    * `batch-b<id>` dir; None when the batch is already committed.
+    */
+  private[graft] def stageAdmit(spark: SparkSession, root: String,
+                                batchId: Long, batch: DataFrame,
+                                committer: SnapshotCommitter,
+                                minQuality: Double): Option[Upsert.StagedReplace] = {
     val m = committer.readManifest(root)
     require(m.nonEmpty, s"curated store at $root is not seeded")
-    if (m.contains(s"__batch.$batchId")) return // fully committed — skip
+    if (m.contains(s"__batch.$batchId")) return None // fully committed — skip
     // collect crashed stagings / superseded dirs one cycle late
     SnapshotGc.gcUnreferenced(root,
-      SnapshotGc.dataRefs(m) ++ committer.retainedReferences(root),
+      Upsert.liveDirRefs(m) ++ committer.retainedReferences(root),
       committer.gcGraceMs)
     val threshold = m("__meta.threshold").toDouble
     val view = indexView(spark, root, m)
@@ -194,12 +204,7 @@ object CuratedStore {
       admittedRows.write.mode(SaveMode.Overwrite).parquet(s"$dir/curated")
       entries += s"curated-$tag" -> s"batch-$tag/curated"
     }
-    if (crashBeforeCommit) return // staged, unreferenced, invisible
-    committer.commit(root, entries) // THE commit point — all-or-nothing
-    SnapshotGc.gcUnreferenced(root,
-      SnapshotGc.dataRefs(m) ++ SnapshotGc.dataRefs(entries) ++
-        committer.retainedReferences(root),
-      committer.gcGraceMs)
+    Some(Upsert.StagedReplace(root, m, s"batch-$tag", entries))
   }
 
   /** OPTIMIZE: rewrite every multi-fragment family into ONE fragment per
@@ -260,13 +265,9 @@ object CuratedStore {
           changed = true
         }
     }
-    if (changed) {
-      committer.commit(root, entries)
-      SnapshotGc.gcUnreferenced(root,
-        SnapshotGc.dataRefs(m) ++ SnapshotGc.dataRefs(entries) ++
-          committer.retainedReferences(root),
-        committer.gcGraceMs)
-    }
+    if (changed)
+      Upsert.commitReplace(Upsert.StagedReplace(root, m, s"batch-$tag", entries),
+        committer)
   }
 
   /** All committed ADMITTED rows (the streamed curation output; the seed

@@ -14,7 +14,7 @@ object AdaptiveSpillSweep {
     spark.sparkContext.setLogLevel("WARN")
     for (sf <- Seq("sf0.001", "sf0.01")) {
       val emb = graft.sources.Tables.embeddings(spark, s"/root/testdata/$sf")
-      val cents = Ann.loadCentroids(spark, "/root/repo/fixtures/annidx")
+      val cents = Ann.loadCentroids(spark, SparkEntry.AnnIndexFixture)
       val corpus = Ann.emb(emb)
       val truth = Ann.embeddingNearDup(emb, 0.4).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -313,7 +313,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("semantic dedup: bucket-local groups, min-id survivors, full cover") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cents = Ann.loadCentroids(spark, "/root/repo/fixtures/annidx")
+    val cents = Ann.loadCentroids(spark, SparkEntry.AnnIndexFixture)
     val out = Ann.semanticDedup(emb, cents, 0.4).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("bucket"),
         r.getAs[Long]("group_id"), r.getAs[Long]("n_members"),
@@ -347,7 +347,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("semantic dedup spill: strictly more duplicates found, never false ones") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cents = Ann.loadCentroids(spark, "/root/repo/fixtures/annidx")
+    val cents = Ann.loadCentroids(spark, SparkEntry.AnnIndexFixture)
     def dropped(df: org.apache.spark.sql.DataFrame) = df.collect()
       .filter(!_.getAs[Boolean]("keep")).map(_.getAs[Long]("vec_id")).toSet
     val d1 = dropped(Ann.semanticDedup(emb, cents, 0.4))
@@ -376,7 +376,7 @@ class AnnSpec extends AnyFunSuite {
     // diffuse-threshold fixture (the negative result is deliberate
     // documentation, see the operator's scaladoc)
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cents = Ann.loadCentroids(spark, "/root/repo/fixtures/annidx")
+    val cents = Ann.loadCentroids(spark, SparkEntry.AnnIndexFixture)
     val corpus = Ann.emb(emb)
     def candPairs(asg: org.apache.spark.sql.DataFrame): Long =
       asg.select(org.apache.spark.sql.functions.col("bucket"),
@@ -414,7 +414,7 @@ class AnnSpec extends AnyFunSuite {
     // round-trips IEEE doubles exactly), so the shipped query and the
     // in-code default stay one algorithm
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val loaded = Ann.loadPlanes(spark, "/root/repo/fixtures/annidx")
+    val loaded = Ann.loadPlanes(spark, SparkEntry.AnnIndexFixture)
     val seeded = Ann.lshPlanes(16, 64, 7L)
     assert(loaded.length == seeded.length)
     assert(loaded.zip(seeded).forall { case (a, b) => a.sameElements(b) },

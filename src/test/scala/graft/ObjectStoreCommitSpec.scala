@@ -202,7 +202,7 @@ class ObjectStoreCommitSpec extends AnyFunSuite {
     // another writer's IN-FLIGHT staging: unreferenced by design until
     // its commit flips — exactly what gcGraceMs exists to protect
     TableFs.writeString(s"$path/batch-b/data/g.parquet", "in-flight")
-    val live = graft.streaming.SnapshotGc.dataRefs(c.readManifest(path)) ++
+    val live = graft.pipeline.Upsert.liveDirRefs(c.readManifest(path)) ++
       c.retainedReferences(path)
     graft.streaming.SnapshotGc.gcUnreferenced(path, live, c.gcGraceMs)
     assert(TableFs.exists(s"$path/batch-b/data/g.parquet"),

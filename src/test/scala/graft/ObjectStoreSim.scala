@@ -55,8 +55,14 @@ class AtomicPutStoreFs extends RawLocalFileSystem {
             throw new FileAlreadyExistsException(
               s"$f exists — simulated conditional-put precondition " +
                 "(If-None-Match: *) failed at PUT completion")
-          val out = rawCreate(f, bufferSize, replication, blockSize, progress)
+          // readers never take the store lock: land the bytes under a
+          // hidden name and move them into place, so the object appears
+          // whole (a direct write is visible empty, then partial)
+          val tmp = new Path(f.getParent, s".naf-put-${java.util.UUID.randomUUID()}")
+          val out = rawCreate(tmp, bufferSize, replication, blockSize, progress)
           try out.write(buf.toByteArray) finally out.close()
+          java.nio.file.Files.move(pathToFile(tmp).toPath, pathToFile(f).toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
       }
     }

@@ -211,7 +211,7 @@ class RetrievalSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, dir)
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val cents = graft.operators.Ann.loadCentroids(spark,
-      "/root/repo/fixtures/annidx")
+      SparkEntry.AnnIndexFixture)
     val bmIdx = java.nio.file.Files.createTempDirectory("graft-hyb-bm").toString
     val ivfIdx = java.nio.file.Files.createTempDirectory("graft-hyb-ivf").toString
     Retrieval.buildTextIndex(docs, bmIdx)
@@ -253,7 +253,7 @@ class RetrievalSpec extends AnyFunSuite {
     val exact = Retrieval.hybridRrfTopK(docs, emb, Retrieval.DefaultQueries, 10)
       .select("q_id", "doc_id").as[(Long, Long)].collect().toSet
     val cents = graft.operators.Ann.loadCentroids(spark2,
-      "/root/repo/fixtures/annidx")
+      SparkEntry.AnnIndexFixture)
     val approx = Retrieval.rrfFuse(
       Retrieval.bm25TopK(docs, Retrieval.DefaultQueries, 10),
       graft.operators.Ann.ivfTopKWithCentroids(emb, cents,

@@ -110,8 +110,8 @@ class StreamCurationSpec extends AnyFunSuite {
     // the injected crash: batch 0 stages EVERYTHING (curated rows, exact
     // survivors, index + hash fragments, merged bloom) and dies before
     // the flip
-    CuratedStore.admitCommit(spark, root, 0L, batch0,
-      minQuality = 0.0, crashBeforeCommit = true)
+    CuratedStore.stageAdmit(spark, root, 0L, batch0, AtomicRenameCommitter,
+      minQuality = 0.0)
     assert(CuratedStore.committedBatches(root).isEmpty,
       "a crash before the flip must leave NOTHING committed")
     assert(curatedIds(root).isEmpty && exactIds(root) == Set(1L, 2L),
