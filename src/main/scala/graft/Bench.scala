@@ -122,16 +122,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // warm the session (executor threads, codegen, parquet footer caches)
     // so per-query numbers measure the queries, not JVM startup
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
@@ -272,7 +263,7 @@ object Bench {
     val refJson =
       s""""reference_entries":${reference.size},"reference_source":"$refSource","reference_calibration_sec":${refCalibration.map(r3).getOrElse("null")},"reference_missing":${reference.isEmpty}"""
     val detailJson =
-      s"""{"sf":"$sfDir","cpus":$cpus,"total_sec":${r3(total)},"build_total_sec":${r3(buildTotal)},"plan_total_sec":${r3(planTotal)},"exec_total_sec":${r3(total - buildTotal - planTotal)},"calibration_sec":${r3(calibrationSec)},"end_calibration_sec":${r3(endCalibrationSec)},"retried":$retriedJson,"retried_total_sec":${r3(total)},"preretry_total_sec":${r3(minTotals.values.sum)},"calib_ratio_vs_reference":${r3(calibRatio)},$refJson,
+      s"""{"sf":"$sfDir","cpus":${Session.Cpus},"total_sec":${r3(total)},"build_total_sec":${r3(buildTotal)},"plan_total_sec":${r3(planTotal)},"exec_total_sec":${r3(total - buildTotal - planTotal)},"calibration_sec":${r3(calibrationSec)},"end_calibration_sec":${r3(endCalibrationSec)},"retried":$retriedJson,"retried_total_sec":${r3(total)},"preretry_total_sec":${r3(minTotals.values.sum)},"calib_ratio_vs_reference":${r3(calibRatio)},$refJson,
          |"per_query":${results.map { case (n, rs) =>
              "\"" + n + "\":" + (if (rs.isEmpty) "null" else {
                val b = rs.minBy(_.totalSec)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dims
@@ -15,13 +14,7 @@ import graft.operators.Dims
   */
 object DimProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(32)
     val n = sys.env.getOrElse("DIM_PROBE_N", "10000000").toLong
     val users = 100000L
     val base = "/tmp/dim_probe"

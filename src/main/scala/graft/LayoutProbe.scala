@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Layout
@@ -15,13 +14,7 @@ import graft.pipeline.Layout
   */
 object LayoutProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(32)
     val n = sys.env.getOrElse("LAYOUT_PROBE_N", "20000000").toLong
     val files = sys.env.getOrElse("LAYOUT_PROBE_FILES", "256").toInt
     val base = "/tmp/layout_probe"

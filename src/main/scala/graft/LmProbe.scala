@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
@@ -18,13 +17,7 @@ import graft.operators.TextOps
   */
 object LmProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(32)
     val n = sys.env.getOrElse("LM_PROBE_N", "100000").toLong
 
     // deterministic synthetic corpus: ~48 tokens/doc from an 8192-word

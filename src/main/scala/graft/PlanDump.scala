@@ -1,32 +1,32 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.LinkedBlockingQueue
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Generates PLANS.md: `explain("formatted")` for the headline queries at
-  * sf0.1 — the plan-shape evidence (PushedFilters, broadcast joins, partial
-  * aggregation, partition pruning) referenced from README.md.
+/** Plan dumper: `explain("formatted")` of named `SparkEntry` queries, for
+  * human reading. Runs under the bench's session ([[Session]] at
+  * `SPARK_GRAFT_CPUS`, data from `SPARK_GRAFT_SF_DIR`, default sf0.1).
+  * Each query is materialized through the noop SINK — the bench's own
+  * action — and that write's QueryExecution is dumped, so adaptive plans
+  * are FINAL (isFinalPlan=true): which joins AQE chose to broadcast at
+  * runtime (the TPC-H joins carry no hints since the round-5 sweep — the
+  * planner/AQE picks the build side from measured sizes), AQEShuffleRead
+  * coalescing, and runtime skew splits.
   *
-  * Each query is EXECUTED first and its own QueryExecution's adaptive plan
-  * dumped, so the file shows the FINAL plans (isFinalPlan=true): which
-  * joins AQE chose to broadcast at runtime (the TPC-H joins carry no hints
-  * since the round-5 sweep — the planner/AQE picks the build side from
-  * measured sizes), AQEShuffleRead coalescing, and runtime skew splits.
+  * Usage: `runMain graft.PlanDump [q1,q2,... [out.md]]`. With no arguments
+  * it writes PLANS.md from the headline list plus the skew probe; with a
+  * query list it writes those queries to `out.md` (default PLANS.md).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = "/root/testdata/sf0.1"
+    val spark = Session()
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val headline = Seq(
       "q1_pricing", "q6_forecast", "q2_min_balance", "q3_top_orders",
       "q5_region_revenue", "q10_returns", "q17_small_qty", "q19_brand_revenue",
@@ -142,10 +142,12 @@ object PlanDump {
       // GraphSpec)
       "retrieval_hybrid_persisted", "retrieval_hybrid_weighted",
       "graph_pagerank_warm_delta")
+    val names = args.headOption.fold(headline)(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val out = args.lift(1).getOrElse("PLANS.md")
     val sb = new StringBuilder
-    sb ++= "# PLANS — FINAL physical plans of the headline queries (sf0.1)\n\n"
-    sb ++= "Generated by `graft.PlanDump` at HEAD. Every query is executed and its\n"
-    sb ++= "own QueryExecution dumped, so these are the FINAL adaptive plans\n"
+    sb ++= s"# PLANS — FINAL physical plans ($dir)\n\n"
+    sb ++= "Generated by `graft.PlanDump`. Every query is run through the noop sink\n"
+    sb ++= "and that write's QueryExecution dumped, so these are the FINAL adaptive plans\n"
     sb ++= "(isFinalPlan=true): broadcast sides on the hint-free TPC-H joins are\n"
     sb ++= "AQE's runtime choices from measured sizes, not forced hints (the only\n"
     sb ++= "surviving `broadcast()` hints sit over nation/region, 1-row aggregates,\n"
@@ -154,18 +156,23 @@ object PlanDump {
     sb ++= "scan, `BroadcastHashJoin` on every dim/small side, paired\n"
     sb ++= "partial/final `HashAggregate`s, `AQEShuffleRead` coalescing, and no\n"
     sb ++= "`Exchange` a layout choice could have avoided.\n"
-    headline.foreach { name =>
+    // the noop write runs its own QueryExecution (df's stays unexecuted,
+    // its adaptive plan never final), delivered to a listener afterwards
+    val written = new LinkedBlockingQueue[QueryExecution]
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) written.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
-      // finalize THIS QueryExecution's adaptive plan (count()/write would
-      // plan a fresh one and leave df's adaptive plan unfinalized)
-      df.queryExecution.toRdd.count()
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      df.write.format("noop").mode("overwrite").save()
+      val plan = written.take().explainString(FormattedMode)
       sb ++= s"\n## $name\n\n```\n$plan```\n"
     }
-    sb ++= skewProbeSection(spark)
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"[plandump] wrote PLANS.md (${headline.size} queries + skew probe)")
+    if (args.isEmpty) sb ++= skewProbeSection(spark)
+    Files.writeString(Paths.get(out), sb.toString)
+    println(s"[plandump] wrote $out (${names.size} queries)")
     spark.stop()
   }
 

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the training-data curation pipeline:
   * `runMain graft.RunCuration <srcDir> <outDir>`.
   */
 object RunCuration {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     graft.pipeline.Curation.run(spark, srcDir, outDir).foreach { s =>
       println(f"[curation] ${s.stage}%-16s docs=${s.docs}")
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the dependency-ordered pipeline build:
   * `runMain graft.RunPipeline <srcDir> <outDir>` — lands events, builds the
   * deduped fact, dimensions, partitioned star, registers monitoring views,
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(conf = Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     graft.pipeline.Pipeline.run(spark, srcDir, outDir).foreach { s =>
       println(f"[pipeline] ${s.stage}%-20s rows=${s.rows}%-8d ${s.path}")
     }

@@ -62,19 +62,6 @@ object SparkEntry {
     */
   val VitalsFixture = Bench.fixtureDir("vitalsgen")
 
-  /** Ensure the ns-timestamp parquet reader conf is set (Tables normalizes
-    * `events.ts` ns→µs, matching DuckDB's cast — see Tables.events), and
-    * install the engine's optimizer extensions: RewriteRankOneToMaxBy turns
-    * any QUALIFY-style rank-1 window dedup — ours or a user's — into the
-    * map-side-combining max_by aggregate.
-    */
-  private def prep(spark: SparkSession): SparkSession = {
-    spark.conf.set(Tables.NanosAsLongConf, "true")
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.RewriteRankOneToMaxBy, graft.plans.RewriteAggregateToMv)
-    spark
-  }
-
   /** Analyze-once cache for the fact-family subtrees: ~15 queries build on
     * the dedup→dims tree, and re-deriving it per query made Catalyst
     * planning a visible share of the bench (r8 verdict: 16.5 s plan of
@@ -87,7 +74,7 @@ object SparkEntry {
 
   private def fact(spark: SparkSession, dir: String): DataFrame =
     subtreeCache.computeIfAbsent((spark, dir, "fact"),
-      _ => Dedup.latestEvents(Tables.events(prep(spark), dir)))
+      _ => Dedup.latestEvents(Tables.events(spark, dir)))
 
   /** Pin `df` for the duration of `body` — the table-lifecycle demos
     * drive MANY eager write actions off one derived fact frame (staging,
@@ -107,7 +94,7 @@ object SparkEntry {
     */
   private def runLogNested(spark: SparkSession): DataFrame = {
     val schema = gen.RunLogGen.runLog(spark, 1, 1704067200L).schema
-    prep(spark).read.schema(schema).parquet(RunLogFixture + "/run_log")
+    spark.read.schema(schema).parquet(RunLogFixture + "/run_log")
   }
 
   /** Staged copy of the normalized events table for the §2.9 streaming
@@ -119,7 +106,7 @@ object SparkEntry {
     */
   private def stagedEvents(spark: SparkSession, dir: String,
                            numFiles: Int = 1): String =
-    streaming.StreamOracle.stage(prep(spark),
+    streaming.StreamOracle.stage(spark,
       Tables.events(spark, dir), s"events_${Integer.toHexString(dir.hashCode)}",
       numFiles)
 
@@ -133,7 +120,7 @@ object SparkEntry {
     */
   private def starOf(spark: SparkSession, dir: String): DataFrame =
     subtreeCache.computeIfAbsent((spark, dir, "star"), _ => {
-      val raw = Tables.events(prep(spark), dir)
+      val raw = Tables.events(spark, dir)
       Star.factStar(Dedup.latestEvents(raw),
         Dims.dimUser(raw), Dims.dimEventType(raw), Dims.dimDate(raw))
     })
@@ -143,7 +130,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val raw = Tables.events(prep(spark), dir)
+    val raw = Tables.events(spark, dir)
     Star.dailyUserActivity(starOf(spark, dir), Dims.dimDate(raw), Dims.dimUser(raw))
   }
 
@@ -157,7 +144,7 @@ object SparkEntry {
     "dim_date" -> ((s, d) => Dims.dimDate(fact(s, d))),
     "fact_star" -> ((s, d) => starOf(s, d)),
     "star_daily_user" -> ((s, d) => {
-      val raw = Tables.events(prep(s), d)
+      val raw = Tables.events(s, d)
       Star.dailyUserActivity(starOf(s, d), Dims.dimDate(raw), Dims.dimUser(raw))
     }),
     // SCD Type-2 history: AS-OF-queryable attribute runs per user — the
@@ -176,7 +163,7 @@ object SparkEntry {
     "pipeline_star_disk" -> ((s, d) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_star_disk_" +
         Integer.toHexString(d.hashCode)
-      pipeline.Pipeline.run(prep(s), d, out)
+      pipeline.Pipeline.run(s, d, out)
       val dayFmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
       val maxKey = new java.io.File(s"$out/fact_events_star").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("date_key="))
@@ -198,14 +185,14 @@ object SparkEntry {
     // the zero-shuffle plan shape is asserted in BucketingSpec.
     "star_bucketed_disk" -> ((s, d) => {
       val out = cachedTempDir("graft_bkt_")
-      pipeline.Pipeline.runBucketedStar(prep(s), d, out)
+      pipeline.Pipeline.runBucketedStar(s, d, out)
     }),
     // ---- monitoring views (SURVEY §2 monitoring suite) ----
-    "mon_results" -> ((s, d) => Monitoring.results(Tables.events(prep(s), d))),
-    "mon_last_status" -> ((s, d) => Monitoring.lastStatus(Tables.events(prep(s), d))),
-    "mon_daily_summary" -> ((s, d) => Monitoring.dailySummary(Tables.events(prep(s), d))),
-    "mon_7d_summary" -> ((s, d) => Monitoring.sevenDaySummary(Tables.events(prep(s), d))),
-    "mon_errors" -> ((s, d) => Monitoring.errors(Tables.events(prep(s), d))),
+    "mon_results" -> ((s, d) => Monitoring.results(Tables.events(s, d))),
+    "mon_last_status" -> ((s, d) => Monitoring.lastStatus(Tables.events(s, d))),
+    "mon_daily_summary" -> ((s, d) => Monitoring.dailySummary(Tables.events(s, d))),
+    "mon_7d_summary" -> ((s, d) => Monitoring.sevenDaySummary(Tables.events(s, d))),
+    "mon_errors" -> ((s, d) => Monitoring.errors(Tables.events(s, d))),
     // The reference's monitoring views over the REAL nested run-log shape
     // (P2 dot-path projection + S6 shard pruning): the committed fixture
     // (gen.RunLogGen, day_partition=-sharded parquet) is read with an
@@ -241,7 +228,7 @@ object SparkEntry {
     "q_zorder_scan" -> ((s, d) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_" +
         Integer.toHexString(d.hashCode)
-      pipeline.Layout.zorderWrite(Tables.events(prep(s), d), out,
+      pipeline.Layout.zorderWrite(Tables.events(s, d), out,
         Seq("user_id", "value"), numFiles = 64)
       s.read.parquet(out)
         .filter(col("user_id").between(3, 7) &&
@@ -254,7 +241,7 @@ object SparkEntry {
     // COMMITTED day_partition-sharded files — the same contract as
     // gen_vitals_replay, on the nested-struct export shape
     "gen_runlog_replay" -> ((s, _) =>
-      gen.RunLogGen.runLog(prep(s), 12 * 144, 1704067200L)
+      gen.RunLogGen.runLog(s, 12 * 144, 1704067200L)
         .select(unix_micros(col("timestamp")).as("ts_us"),
           col("resource.labels.job_id").as("job_name"),
           col("httpRequest.status").as("status_raw"),
@@ -270,7 +257,7 @@ object SparkEntry {
     "sink_append" -> ((s, _) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_append_sink"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
-      val oltp = gen.VitalsGen.vitals(prep(s), gen.VitalsGen.FixtureRows,
+      val oltp = gen.VitalsGen.vitals(s, gen.VitalsGen.FixtureRows,
         gen.VitalsGen.FixtureStartEpochSec)
       (1 to 3).foreach { i =>
         gen.VitalsGen.extractBatch(oltp,
@@ -290,7 +277,7 @@ object SparkEntry {
     "partition_introspection" -> ((s, d) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_partintro_" +
         Integer.toHexString(d.hashCode)
-      Tables.events(prep(s), d)
+      Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
       s.read.parquet(out).select(col("event_date")).distinct()
@@ -300,13 +287,13 @@ object SparkEntry {
     // projection; each rollup must match the parquet oracle exactly, so a
     // format round-trip that bends one value fails the hash ----
     "source_csv_daily" -> ((s, d) =>
-      sources.Formats.dailyRollup(sources.Formats.csvEvents(prep(s), d))),
+      sources.Formats.dailyRollup(sources.Formats.csvEvents(s, d))),
     "source_jsonl_daily" -> ((s, d) =>
-      sources.Formats.dailyRollup(sources.Formats.jsonlEvents(prep(s), d))),
+      sources.Formats.dailyRollup(sources.Formats.jsonlEvents(s, d))),
     // ORC keeps parquet-class pushdown (SourcesSpec asserts the pushed
     // filter) — the pruned error-scan shape, not just a full rollup
     "source_orc_pruned" -> ((s, d) =>
-      sources.Formats.orcEvents(prep(s), d)
+      sources.Formats.orcEvents(s, d)
         .filter(col("event_type") === "error" && col("value_cents") >= 1000L)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_errors"),
@@ -317,7 +304,7 @@ object SparkEntry {
     // raw table. Exercises view resolution + the star's key joins round-
     // tripping back to natural keys.
     "view_sql_daily_type" -> ((s, d) => {
-      pipeline.Views.registerAll(prep(s), d)
+      pipeline.Views.registerAll(s, d)
       s.sql("""SELECT d.date_id, t.event_type, count(*) AS n_events
                FROM fact_events_star f
                JOIN dim_date d ON f.date_key = d.date_key
@@ -336,7 +323,7 @@ object SparkEntry {
     // of a duplicated event_id is IDENTICAL and keep-first is
     // order-independent — the oracle is DISTINCT over the same windows.
     "stream_dedup" -> ((s, _) => {
-      val in = streaming.StreamOracle.stage(prep(s), {
+      val in = streaming.StreamOracle.stage(s, {
         val oltp = gen.VitalsGen.vitals(s, gen.VitalsGen.FixtureRows,
           gen.VitalsGen.FixtureStartEpochSec)
         (1 to 3).map(i => gen.VitalsGen.extractBatch(oltp,
@@ -449,7 +436,7 @@ object SparkEntry {
     // drain equals the batch join row-for-row, so the oracle is plain SQL.
     "stream_enriched" -> ((s, d) => {
       val ev = streaming.StreamOracle.fileStream(s, stagedEvents(s, d))
-      val dim = Tables.customer(prep(s), d).select(
+      val dim = Tables.customer(s, d).select(
         col("c_custkey").as("user_id"),
         col("c_mktsegment").as("mktsegment"),
         col("c_nationkey").cast("long").as("nation_id"))
@@ -501,7 +488,7 @@ object SparkEntry {
       pipeline.Upsert.replacePartitionsAtomic(s, state, out, "bucket",
         (0L until 8L).map(_.toString), committer = c)
       val dataBefore = c.readManifest(out).filterNot(_._1.startsWith("__"))
-      val updDir = streaming.StreamOracle.stage(prep(s),
+      val updDir = streaming.StreamOracle.stage(s,
         state.filter(col("event_type") === "error")
           .withColumn("ts_us", col("ts_us") + 1)
           .withColumn("value_cents", lit(0L)),
@@ -756,7 +743,7 @@ object SparkEntry {
     // or partition sensitivity fails this named row instead of silently
     // shifting every test built on generated data.
     "gen_vitals_replay" -> ((s, _) =>
-      gen.VitalsGen.vitals(prep(s), gen.VitalsGen.FixtureRows,
+      gen.VitalsGen.vitals(s, gen.VitalsGen.FixtureRows,
           gen.VitalsGen.FixtureStartEpochSec)
         .select(col("event_id"), col("patient_id"), col("loinc_code"),
           col("code_display"),
@@ -765,7 +752,7 @@ object SparkEntry {
           col("source"), col("raw"))),
     // ---- quality invariants (SURVEY §5) ----
     "qa_ref_integrity" -> ((s, d) => {
-      val raw = Tables.events(prep(s), d)
+      val raw = Tables.events(s, d)
       Quality.referentialIntegrity(fact(s, d),
         Dims.dimUser(raw), Dims.dimEventType(raw), Dims.dimDate(raw))
     }),
@@ -773,33 +760,33 @@ object SparkEntry {
     // table profiling: per-column null/distinct/min/max in ONE pass
     // (Catalyst expand + two-phase agg), the pre-trust ANALYZE step
     "profile_columns" -> ((s, d) =>
-      Quality.profileColumns(Tables.events(prep(s), d))),
+      Quality.profileColumns(Tables.events(s, d))),
     // IQR-fence (Tukey) outlier screen per event_type over exact cents
     "quality_outliers" -> ((s, d) =>
-      Quality.valueOutliers(Tables.events(prep(s), d))),
+      Quality.valueOutliers(Tables.events(s, d))),
     // ---- analytical breadth (SURVEY §7 step 4) ----
-    "q1_pricing" -> ((s, d) => Analytics.pricingSummary(prep(s), d)),
-    "q6_forecast" -> ((s, d) => Analytics.forecastRevenue(prep(s), d)),
-    "q3_top_orders" -> ((s, d) => Analytics.topRevenueOrders(prep(s), d)),
-    "q5_region_revenue" -> ((s, d) => Analytics.regionRevenue(prep(s), d)),
-    "q_window_topk" -> ((s, d) => Analytics.topOrdersPerCustomer(prep(s), d)),
-    "q_running_total" -> ((s, d) => Analytics.runningUserTotals(prep(s), d)),
-    "q_distinct_users" -> ((s, d) => Analytics.distinctUsersPerType(prep(s), d)),
-    "q_union_ids" -> ((s, d) => Analytics.unionIds(prep(s), d)),
-    "extract_window" -> ((s, d) => Analytics.extractWindow(prep(s), d)),
-    "q_semi_join" -> ((s, d) => Analytics.semiJoin(prep(s), d)),
-    "q_funnel" -> ((s, d) => Analytics.funnel(prep(s), d)),
-    "q_retention" -> ((s, d) => Analytics.retention(prep(s), d)),
-    "q_anti_join" -> ((s, d) => Analytics.antiJoin(prep(s), d)),
+    "q1_pricing" -> ((s, d) => Analytics.pricingSummary(s, d)),
+    "q6_forecast" -> ((s, d) => Analytics.forecastRevenue(s, d)),
+    "q3_top_orders" -> ((s, d) => Analytics.topRevenueOrders(s, d)),
+    "q5_region_revenue" -> ((s, d) => Analytics.regionRevenue(s, d)),
+    "q_window_topk" -> ((s, d) => Analytics.topOrdersPerCustomer(s, d)),
+    "q_running_total" -> ((s, d) => Analytics.runningUserTotals(s, d)),
+    "q_distinct_users" -> ((s, d) => Analytics.distinctUsersPerType(s, d)),
+    "q_union_ids" -> ((s, d) => Analytics.unionIds(s, d)),
+    "extract_window" -> ((s, d) => Analytics.extractWindow(s, d)),
+    "q_semi_join" -> ((s, d) => Analytics.semiJoin(s, d)),
+    "q_funnel" -> ((s, d) => Analytics.funnel(s, d)),
+    "q_retention" -> ((s, d) => Analytics.retention(s, d)),
+    "q_anti_join" -> ((s, d) => Analytics.antiJoin(s, d)),
     // engine-owned KMV sketch: the approximation itself is auditable —
     // DuckDB replays hash, k-minimum retention, and estimator exactly
     // (Sketches scaladoc; native HLL++ stays as PropertySpec comparison)
-    "q_approx_distinct" -> ((s, d) => Analytics.approxDistinctUsers(prep(s), d)),
-    "q_approx_distinct_est" -> ((s, d) => Analytics.approxDistinctEventsKmv(prep(s), d)),
+    "q_approx_distinct" -> ((s, d) => Analytics.approxDistinctUsers(s, d)),
+    "q_approx_distinct_est" -> ((s, d) => Analytics.approxDistinctEventsKmv(s, d)),
     // re-aggregatable sketch rollup: per-day KMV states merged over the
     // trailing week (the HLL_COUNT.INIT/MERGE pattern), exact count rides
     // along as the error reference
-    "sketch_merge_7d" -> ((s, d) => Analytics.kmvMergedDistinct7d(prep(s), d)),
+    "sketch_merge_7d" -> ((s, d) => Analytics.kmvMergedDistinct7d(s, d)),
     // approximate per-group quantiles via a deterministic bottom-k-by-hash
     // sample + exact interpolated percentile over it — O(k) state per
     // group like a rank sketch, but the sampled subset (and thus the
@@ -807,7 +794,7 @@ object SparkEntry {
     // (h, value) picks the identical rows, quantile_cont the same values
     "q_approx_quantiles" -> ((s, d) => {
       val sk = graft.functions.expr.Sketches
-      Tables.events(prep(s), d)
+      Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(sk.bottomKSample(sk.mhash61(col("event_id")), col("value"), 512)
           .as("sample"))
@@ -817,48 +804,48 @@ object SparkEntry {
         .select(col("event_type"), posexplode(col("qs")).as(Seq("pos", "v")))
         .withColumn("v", round(col("v"), 4))
     }),
-    "q_exact_distinct_daily" -> ((s, d) => Analytics.exactDistinctUsersDaily(prep(s), d)),
+    "q_exact_distinct_daily" -> ((s, d) => Analytics.exactDistinctUsersDaily(s, d)),
     // calendar densification: per-user daily frame with explicit zero days
-    "q_gapfill_daily" -> ((s, d) => Analytics.gapFillDaily(prep(s), d)),
+    "q_gapfill_daily" -> ((s, d) => Analytics.gapFillDaily(s, d)),
     // LOCF forward fill over the densified frame
-    "q_locf_daily" -> ((s, d) => Analytics.locfDaily(prep(s), d)),
+    "q_locf_daily" -> ((s, d) => Analytics.locfDaily(s, d)),
     // exact interpolated per-group percentiles (the grouped companion of
     // corpus_token_quantiles' global digest): one hash agg, merge-combining
-    "q_group_median" -> ((s, d) => Tables.events(prep(s), d)
+    "q_group_median" -> ((s, d) => Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(round(expr("percentile(value, 0.5D)"), 4).as("median_value"),
         round(expr("percentile(value, 0.9D)"), 4).as("p90_value"),
         count(lit(1)).as("n"))),
-    "q_sessionize" -> ((s, d) => Analytics.sessionize(prep(s), d)),
+    "q_sessionize" -> ((s, d) => Analytics.sessionize(s, d)),
     // the NATIVE session_window aggregation twin — one shuffle, no
     // analytic-window pair, stream-ready operator; [start, end) boundary
     // semantics mirrored by the oracle's >= gap test and RANGE-frame
     // tie handling (all equal-ts peers share a session)
-    "q_session_window" -> ((s, d) => Analytics.sessionWindowNative(prep(s), d)),
-    "q_moving_7d" -> ((s, d) => Analytics.movingWeeklyVolume(prep(s), d)),
-    "q10_returns" -> ((s, d) => Analytics.returnedRevenue(prep(s), d)),
-    "q13_custdist" -> ((s, d) => Analytics.customerOrderDistribution(prep(s), d)),
-    "q22_wealthy_inactive" -> ((s, d) => Analytics.wealthyInactiveCustomers(prep(s), d)),
-    "q17_small_qty" -> ((s, d) => Analytics.smallQuantityRevenue(prep(s), d)),
-    "q18_large_orders" -> ((s, d) => Analytics.largeOrders(prep(s), d)),
-    "q19_brand_revenue" -> ((s, d) => Analytics.brandRevenue(prep(s), d)),
-    "q2_min_balance" -> ((s, d) => Analytics.minBalanceSuppliers(prep(s), d)),
-    "q4_priority_count" -> ((s, d) => Analytics.latePriorityOrders(prep(s), d)),
-    "q7_nation_volume" -> ((s, d) => Analytics.nationTradeVolume(prep(s), d)),
-    "q8_mkt_share" -> ((s, d) => Analytics.marketShare(prep(s), d)),
-    "q12_late_lines" -> ((s, d) => Analytics.lateLinesByStatus(prep(s), d)),
-    "q14_promo" -> ((s, d) => Analytics.promoRevenue(prep(s), d)),
-    "q15_top_supplier" -> ((s, d) => Analytics.topSupplier(prep(s), d)),
-    "q21_waiting_suppliers" -> ((s, d) => Analytics.waitingSuppliers(prep(s), d)),
-    "q9_nation_profit" -> ((s, d) => Analytics.nationProfit(prep(s), d)),
-    "q16_supplier_cnt" -> ((s, d) => Analytics.supplierRelationships(prep(s), d)),
-    "q20_excess_stock" -> ((s, d) => Analytics.excessStockSuppliers(prep(s), d)),
-    "q11_important_parts" -> ((s, d) => Analytics.importantParts(prep(s), d)),
+    "q_session_window" -> ((s, d) => Analytics.sessionWindowNative(s, d)),
+    "q_moving_7d" -> ((s, d) => Analytics.movingWeeklyVolume(s, d)),
+    "q10_returns" -> ((s, d) => Analytics.returnedRevenue(s, d)),
+    "q13_custdist" -> ((s, d) => Analytics.customerOrderDistribution(s, d)),
+    "q22_wealthy_inactive" -> ((s, d) => Analytics.wealthyInactiveCustomers(s, d)),
+    "q17_small_qty" -> ((s, d) => Analytics.smallQuantityRevenue(s, d)),
+    "q18_large_orders" -> ((s, d) => Analytics.largeOrders(s, d)),
+    "q19_brand_revenue" -> ((s, d) => Analytics.brandRevenue(s, d)),
+    "q2_min_balance" -> ((s, d) => Analytics.minBalanceSuppliers(s, d)),
+    "q4_priority_count" -> ((s, d) => Analytics.latePriorityOrders(s, d)),
+    "q7_nation_volume" -> ((s, d) => Analytics.nationTradeVolume(s, d)),
+    "q8_mkt_share" -> ((s, d) => Analytics.marketShare(s, d)),
+    "q12_late_lines" -> ((s, d) => Analytics.lateLinesByStatus(s, d)),
+    "q14_promo" -> ((s, d) => Analytics.promoRevenue(s, d)),
+    "q15_top_supplier" -> ((s, d) => Analytics.topSupplier(s, d)),
+    "q21_waiting_suppliers" -> ((s, d) => Analytics.waitingSuppliers(s, d)),
+    "q9_nation_profit" -> ((s, d) => Analytics.nationProfit(s, d)),
+    "q16_supplier_cnt" -> ((s, d) => Analytics.supplierRelationships(s, d)),
+    "q20_excess_stock" -> ((s, d) => Analytics.excessStockSuppliers(s, d)),
+    "q11_important_parts" -> ((s, d) => Analytics.importantParts(s, d)),
     "dedup_embedding_lsh" -> ((s, d) =>
-      Ann.embeddingNearDupLshWithPlanes(Tables.embeddings(prep(s), d),
+      Ann.embeddingNearDupLshWithPlanes(Tables.embeddings(s, d),
         Ann.loadPlanes(s, AnnIndexFixture), 0.4)),
     "q_asof_join" -> ((s, d) => {
-      val ev = Tables.events(prep(s), d)
+      val ev = Tables.events(s, d)
       val left = ev.select(col("event_id"), col("ts"), col("user_id"), col("value"))
       val right = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), col("ts"), col("value"))
@@ -870,7 +857,7 @@ object SparkEntry {
     // window (window = [first occurrence, +3d]) — bucketized equi-join, see
     // RangeJoin (a plain inequality join would plan as BroadcastNestedLoop)
     "q_range_join" -> ((s, d) => {
-      val ev = Tables.events(prep(s), d)
+      val ev = Tables.events(s, d)
       val pts = ev.select(col("event_id"), unix_micros(col("ts")).as("ts_us"))
       val wins = ev.groupBy(col("event_type").as("win_type"))
         .agg(min(unix_micros(col("ts"))).as("win_start"))
@@ -879,13 +866,13 @@ object SparkEntry {
           bucketWidth = 86400000000L)
         .select("win_type", "event_id")
     }),
-    "q_rollup" -> ((s, d) => Analytics.ordersRollup(prep(s), d)),
-    "q_cube" -> ((s, d) => Analytics.ordersCube(prep(s), d)),
-    "q_grouping_sets" -> ((s, d) => Analytics.ordersGroupingSets(prep(s), d)),
-    "q_window_analytics" -> ((s, d) => Analytics.userWindowAnalytics(prep(s), d)),
-    "q_pivot" -> ((s, d) => Analytics.dailyTypePivot(prep(s), d)),
-    "q_unpivot" -> ((s, d) => Analytics.dailyTypeUnpivot(prep(s), d)),
-    "q_full_outer" -> ((s, d) => Analytics.clickPurchaseReconciliation(prep(s), d)),
+    "q_rollup" -> ((s, d) => Analytics.ordersRollup(s, d)),
+    "q_cube" -> ((s, d) => Analytics.ordersCube(s, d)),
+    "q_grouping_sets" -> ((s, d) => Analytics.ordersGroupingSets(s, d)),
+    "q_window_analytics" -> ((s, d) => Analytics.userWindowAnalytics(s, d)),
+    "q_pivot" -> ((s, d) => Analytics.dailyTypePivot(s, d)),
+    "q_unpivot" -> ((s, d) => Analytics.dailyTypeUnpivot(s, d)),
+    "q_full_outer" -> ((s, d) => Analytics.clickPurchaseReconciliation(s, d)),
     // ---- skew mitigation as measured queries (SURVEY §4) ----
     // planted 90%-hot key (≈90% of rows collapse onto key 0 — the
     // power-law shape AQE's skew rules miss for AGGREGATIONS): the rollup
@@ -896,7 +883,7 @@ object SparkEntry {
     // can oracle it (SkewStatefulSpec asserts the salt split engaged in
     // the physical plan)
     "skew_salted_rollup" -> ((s, d) => {
-      val sk = Tables.events(prep(s), d).select(
+      val sk = Tables.events(s, d).select(
         when(pmod(col("user_id"), lit(10L)) < 9, lit(0L))
           .otherwise(col("user_id")).as("hot_key"),
         round(col("value") * 100).cast("long").as("value_c"))
@@ -906,7 +893,7 @@ object SparkEntry {
             .as("total_value"))
     }),
     "skew_salted_join" -> ((s, d) => {
-      val sk = Tables.events(prep(s), d).select(
+      val sk = Tables.events(s, d).select(
         when(pmod(col("user_id"), lit(10L)) < 9, lit(0L))
           .otherwise(col("user_id")).as("hot_key"),
         round(col("value") * 100).cast("long").as("value_c"))
@@ -920,16 +907,16 @@ object SparkEntry {
     }),
     // ---- training-data pipeline: dedup / similarity / text (north star) ----
     "dedup_exact" -> ((s, d) =>
-      Dedup.exactByContent(Tables.documents(prep(s), d), "text", "doc_id")),
-    "text_stats" -> ((s, d) => TextOps.textStats(Tables.documents(prep(s), d))),
-    "text_quality" -> ((s, d) => TextOps.textQuality(Tables.documents(prep(s), d))),
-    "doc_fingerprint" -> ((s, d) => TextOps.fingerprints(Tables.documents(prep(s), d))
+      Dedup.exactByContent(Tables.documents(s, d), "text", "doc_id")),
+    "text_stats" -> ((s, d) => TextOps.textStats(Tables.documents(s, d))),
+    "text_quality" -> ((s, d) => TextOps.textQuality(Tables.documents(s, d))),
+    "doc_fingerprint" -> ((s, d) => TextOps.fingerprints(Tables.documents(s, d))
       .select("doc_id", "bow_fingerprint")),
-    "doc_rolling_hash" -> ((s, d) => TextOps.fingerprints(Tables.documents(prep(s), d))
+    "doc_rolling_hash" -> ((s, d) => TextOps.fingerprints(Tables.documents(s, d))
       .select("doc_id", "rolling_hash")),
-    "lang_id" -> ((s, d) => TextOps.langId(Tables.documents(prep(s), d))),
+    "lang_id" -> ((s, d) => TextOps.langId(Tables.documents(s, d))),
     "corpus_token_quantiles" -> ((s, d) =>
-      TextOps.tokenQuantiles(Tables.documents(prep(s), d))),
+      TextOps.tokenQuantiles(Tables.documents(s, d))),
     // the scale default for the length profile: rank-sketch quantiles with
     // bounded aggregation state (the exact form above is the oracle-only
     // companion — its per-value count map is an OOM risk at 100 TB).
@@ -938,15 +925,15 @@ object SparkEntry {
     // asserts the estimate's realized rank interval intersects [p−ε, p+ε];
     // PropertySpec additionally gates the raw-estimate form vs exact sf0.1
     "corpus_token_quantiles_sketch" -> ((s, d) =>
-      TextOps.tokenQuantilesSketchChecked(Tables.documents(prep(s), d))),
+      TextOps.tokenQuantilesSketchChecked(Tables.documents(s, d))),
     // the sketch's REPLAYABLE companion: bottom-k-by-hash sample + exact
     // percentiles — same O(k) state, but DuckDB reproduces the estimate
     "corpus_token_quantiles_sample" -> ((s, d) =>
-      TextOps.tokenQuantilesSample(Tables.documents(prep(s), d))),
+      TextOps.tokenQuantilesSample(Tables.documents(s, d))),
     "quality_deciles" -> ((s, d) =>
-      TextOps.qualityDeciles(Tables.documents(prep(s), d))),
+      TextOps.qualityDeciles(Tables.documents(s, d))),
     "doc_sample_hash" -> ((s, d) =>
-      TextOps.deterministicSample(Tables.documents(prep(s), d), "doc_id", "199a")
+      TextOps.deterministicSample(Tables.documents(s, d), "doc_id", "199a")
         .select("doc_id", "lang")),
     // the END-TO-END curation pipeline written to disk then read back —
     // the LLM-data flagship analog of pipeline_star_disk: exact dedup →
@@ -967,7 +954,7 @@ object SparkEntry {
     // whole-corpus curation SQL as curation_disk: the admission path must
     // reproduce the batch recompute bit for bit, or it hash-mismatches
     "curation_incremental" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       def seedExactOf(seed: DataFrame) = seed.join(
         Dedup.exactByContent(seed, "text", "doc_id")
           .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
@@ -1002,7 +989,7 @@ object SparkEntry {
     // admissions must reproduce whole-corpus curation bit for bit (the
     // SAME CurationSql oracle as curation_disk / curation_incremental)
     "stream_curation" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       def seedExactOf(seed: DataFrame) = seed.join(
         Dedup.exactByContent(seed, "text", "doc_id")
           .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
@@ -1043,51 +1030,51 @@ object SparkEntry {
     // unseen-context/unseen-pair smoothing paths are exercised and
     // oracled, not just the in-model ones)
     "doc_lm_perplexity" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       TextOps.lmPerplexity(
         TextOps.deterministicSample(docs, "doc_id", "8000"), docs)
     }),
     "lang_token_mix" -> ((s, d) =>
-      TextOps.langTokenMix(Tables.documents(prep(s), d))),
+      TextOps.langTokenMix(Tables.documents(s, d))),
     "doc_pack_chunks" -> ((s, d) =>
-      TextOps.packDocuments(Tables.documents(prep(s), d), 2048L, 32)),
+      TextOps.packDocuments(Tables.documents(s, d), 2048L, 32)),
     // GLOBAL token-stream packing via distributed block prefix sum — the
     // oracle is the single global running sum (which DuckDB can afford;
     // Spark's equivalent would be a one-partition window sort), so the
     // block-decomposed offsets must reproduce the global scan exactly
     "doc_pack_global" -> ((s, d) =>
-      TextOps.packGlobal(Tables.documents(prep(s), d), 8192L, 64)),
+      TextOps.packGlobal(Tables.documents(s, d), 8192L, 64)),
     "doc_token_ids" -> ((s, d) =>
-      TextOps.tokenIds(Tables.documents(prep(s), d), 500)),
+      TextOps.tokenIds(Tables.documents(s, d), 500)),
     "doc_chunks" -> ((s, d) =>
-      TextOps.chunkDocuments(Tables.documents(prep(s), d), 64, 16)),
+      TextOps.chunkDocuments(Tables.documents(s, d), 64, 16)),
     "doc_stratified_sample" -> ((s, d) =>
-      TextOps.stratifiedSample(Tables.documents(prep(s), d), "doc_id", "lang",
+      TextOps.stratifiedSample(Tables.documents(s, d), "doc_id", "lang",
         Map("en" -> 0.25, "de" -> 1.0, "fr" -> 0.5))
         .select("doc_id", "lang")),
     // leakage-safe split: assignment is a function of the source DOMAIN,
     // so near-dup shards of one crawl domain never straddle train/test
     "split_train_test" -> ((s, d) =>
-      TextOps.groupSplit(Tables.documents(prep(s), d), "source", 0.8, 0.1)
+      TextOps.groupSplit(Tables.documents(s, d), "source", 0.8, 0.1)
         .select(col("doc_id"), col("source"), col("split"))),
     "domain_mixture_sample" -> ((s, d) =>
-      TextOps.domainMixtureSample(Tables.documents(prep(s), d), 200L)),
+      TextOps.domainMixtureSample(Tables.documents(s, d), 200L)),
     // weight-proportional sampling (priority sample, token-count weights):
     // the deterministic A-ES/DLT companion to the uniform hash sample
     "doc_weighted_sample" -> ((s, d) =>
-      TextOps.weightedPrioritySample(Tables.documents(prep(s), d), 100)),
+      TextOps.weightedPrioritySample(Tables.documents(s, d), 100)),
     "doc_repetition" -> ((s, d) =>
-      TextOps.repetitionStats(Tables.documents(prep(s), d))),
+      TextOps.repetitionStats(Tables.documents(s, d))),
     "doc_contamination" -> ((s, d) =>
-      TextOps.contamination(Tables.documents(prep(s), d), 5, 10L)),
+      TextOps.contamination(Tables.documents(s, d), 5, 10L)),
     "doc_decontaminated" -> ((s, d) =>
-      TextOps.decontaminate(Tables.documents(prep(s), d), 5, 10L)),
+      TextOps.decontaminate(Tables.documents(s, d), 5, 10L)),
     // normalization proves work on the lowercase single-spaced fixture by
     // roughing it up first (case + ragged whitespace) — both engines build
     // the same roughed input and must land on the same fixed point
     "text_normalize" -> ((s, d) =>
       TextOps.normalizeText(
-        Tables.documents(prep(s), d).withColumn("rough",
+        Tables.documents(s, d).withColumn("rough",
           concat(lit("  "), upper(col("text")), lit("\t x\n"))), "rough")
         .select(col("doc_id"), col("norm_text"))),
     // PII synthesized deterministically from doc_id (the fixture has none):
@@ -1106,48 +1093,48 @@ object SparkEntry {
           lpad(pmod(id, lit(1000L)).cast("string"), 3, "0"),
           lit("-1234"))).otherwise(lit(""))
       TextOps.redactPii(
-        Tables.documents(prep(s), d).withColumn("pii_text",
+        Tables.documents(s, d).withColumn("pii_text",
           concat(col("text"), email, ip, phone)), "pii_text")
         .select(col("doc_id"), col("n_emails"), col("n_ips"),
           col("n_phones"), col("redacted_text"))
     }),
     "chunk_dedup" -> ((s, d) =>
-      TextOps.dedupChunks(Tables.documents(prep(s), d), 64, 16)),
+      TextOps.dedupChunks(Tables.documents(s, d), 64, 16)),
     // domain cap: greedy md5-ordered fill to 600 tokens per source
     "domain_token_budget" -> ((s, d) =>
-      TextOps.domainTokenBudget(Tables.documents(prep(s), d), 600L)),
+      TextOps.domainTokenBudget(Tables.documents(s, d), 600L)),
     // span dedup proves removal on the no-exact-dup fixture by planting an
     // exactly-one-span (8-token) boilerplate header on every 4th doc — both
     // engines build the same boosted input; the header must survive only in
     // its first carrier
     "doc_span_dedup" -> ((s, d) =>
       TextOps.dedupSpans(
-        Tables.documents(prep(s), d).withColumn("boosted",
+        Tables.documents(s, d).withColumn("boosted",
           when(pmod(col("doc_id"), lit(4L)) === 0,
             concat(lit("shared license header common to mirrored crawl snapshots "),
               col("text")))
           .otherwise(col("text"))), "boosted", 8)),
     "doc_rare_bigrams" -> ((s, d) =>
-      TextOps.rareNgramScore(Tables.documents(prep(s), d), 2, 2L)),
-    "tok_idf" -> ((s, d) => TextOps.tokenIdf(Tables.documents(prep(s), d), 5L)),
+      TextOps.rareNgramScore(Tables.documents(s, d), 2, 2L)),
+    "tok_idf" -> ((s, d) => TextOps.tokenIdf(Tables.documents(s, d), 5L)),
     "retrieval_bm25" -> ((s, d) =>
-      Retrieval.bm25TopK(Tables.documents(prep(s), d), Retrieval.DefaultQueries, 10)),
+      Retrieval.bm25TopK(Tables.documents(s, d), Retrieval.DefaultQueries, 10)),
     // HYBRID retrieval: BM25 top-10 fused with brute-cosine top-10 by
     // reciprocal-rank fusion (half-up integer 1e6/(60+rk) terms — both
     // engines replay the small-integer division bit-for-bit); the fusion
     // is O(queries x depth) regardless of corpus size, and the persisted
     // BM25/IVF indexes drop in as the retriever sides unchanged
     "retrieval_hybrid_rrf" -> ((s, d) =>
-      Retrieval.hybridRrfTopK(Tables.documents(prep(s), d),
-        Tables.embeddings(prep(s), d), Retrieval.DefaultQueries, 10)),
+      Retrieval.hybridRrfTopK(Tables.documents(s, d),
+        Tables.embeddings(s, d), Retrieval.DefaultQueries, 10)),
     // the drop-in claim made executable: the lexical side swaps to the
     // PERSISTED grown index probe (bm25TopKFromIndex - bit-identical to
     // in-memory BM25), the fusion is untouched - same oracle
     "retrieval_hybrid_indexed" -> ((s, d) =>
       Retrieval.rrfFuse(
-        Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(prep(s), d),
+        Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(s, d),
           Retrieval.DefaultQueries, 10),
-        graft.operators.Ann.bruteTopK(Tables.embeddings(prep(s), d),
+        graft.operators.Ann.bruteTopK(Tables.embeddings(s, d),
           Retrieval.DefaultQueries.size, 10)
           .withColumnRenamed("vec_id", "doc_id"),
         10)),
@@ -1161,9 +1148,9 @@ object SparkEntry {
     // their probed buckets (partition-pruned scans, no corpus read)
     "retrieval_hybrid_persisted" -> ((s, d) =>
       Retrieval.rrfFuse(
-        Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(prep(s), d),
+        Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(s, d),
           Retrieval.DefaultQueries, 10),
-        graft.operators.Ann.ivfTopKFromIndex(s, ivfFullIndex(prep(s), d),
+        graft.operators.Ann.ivfTopKFromIndex(s, ivfFullIndex(s, d),
           Tables.embeddings(s, d)
             .filter(col("vec_id") < Retrieval.DefaultQueries.size),
           10)
@@ -1176,9 +1163,9 @@ object SparkEntry {
     // monotonicity contract (all-lexical weight ⇒ the BM25 order)
     "retrieval_hybrid_weighted" -> ((s, d) =>
       Retrieval.rrfFuseWeighted(
-        Retrieval.bm25TopK(Tables.documents(prep(s), d),
+        Retrieval.bm25TopK(Tables.documents(s, d),
           Retrieval.DefaultQueries, 10),
-        graft.operators.Ann.bruteTopK(Tables.embeddings(prep(s), d),
+        graft.operators.Ann.bruteTopK(Tables.embeddings(s, d),
           Retrieval.DefaultQueries.size, 10)
           .withColumnRenamed("vec_id", "doc_id"),
         10, wA = 3L, wB = 1L)),
@@ -1188,10 +1175,10 @@ object SparkEntry {
     // by the same integer RRF
     "retrieval_hybrid_ivf" -> ((s, d) =>
       Retrieval.rrfFuse(
-        Retrieval.bm25TopK(Tables.documents(prep(s), d),
+        Retrieval.bm25TopK(Tables.documents(s, d),
           Retrieval.DefaultQueries, 10),
         graft.operators.Ann.ivfTopKWithCentroids(
-          Tables.embeddings(prep(s), d),
+          Tables.embeddings(s, d),
           graft.operators.Ann.loadCentroids(s, AnnIndexFixture),
           Retrieval.DefaultQueries.size, 10)
           .withColumnRenamed("vec_id", "doc_id"),
@@ -1203,16 +1190,16 @@ object SparkEntry {
     // only the query tokens' buckets read (the ann_ivf_incremental
     // pattern for text)
     "retrieval_bm25_incremental" -> ((s, d) =>
-      Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(prep(s), d),
+      Retrieval.bm25TopKFromIndex(s, bm25GrownIndex(s, d),
         Retrieval.DefaultQueries, 10)),
     "tok_collocations" -> ((s, d) =>
-      TextOps.collocations(Tables.documents(prep(s), d), 5L, 20)),
+      TextOps.collocations(Tables.documents(s, d), 5L, 20)),
     "tok_heavy_hitters" -> ((s, d) =>
-      TextOps.heavyHitterTokens(prep(s), Tables.documents(s, d), 10)),
+      TextOps.heavyHitterTokens(s, Tables.documents(s, d), 10)),
     "sim_join_jaccard" -> ((s, d) =>
-      DedupApprox.jaccardJoin(Tables.documents(prep(s), d), 0.8)),
+      DedupApprox.jaccardJoin(Tables.documents(s, d), 0.8)),
     "dedup_minhash" -> ((s, d) =>
-      DedupApprox.minhashPairs(Tables.documents(prep(s), d), 0.7)),
+      DedupApprox.minhashPairs(Tables.documents(s, d), 0.7)),
     // INCREMENTAL dedup: corpus (3/4 of docs) fingerprinted into the
     // persisted bucket-partitioned prefix index, the remaining 1/4 probed
     // as the arriving batch — near-dup pairs touching the delta, exactly
@@ -1220,7 +1207,7 @@ object SparkEntry {
     // (EXACT by construction: prefix-filter candidates under the index's
     // frozen shingle order, exact-Jaccard refine — no LSH recall caveat)
     "dedup_incremental" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       val idx = lshIndex(s, d, docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0))
       DedupIndex.probeDelta(s, idx,
         docs.filter(pmod(col("doc_id"), lit(4L)) === 0), 0.7)
@@ -1232,7 +1219,7 @@ object SparkEntry {
     // fresh id, so the bloom-hit → verify → reject path is exercised by
     // data and a broken membership path cannot hash-match the oracle
     "dedup_exact_incremental" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
       val planted = corpus.filter(col("doc_id") === 1)
         .select(lit(1000000L).as("doc_id"), col("text"), col("lang"),
@@ -1243,25 +1230,25 @@ object SparkEntry {
         .select(col("doc_id"), col("n_chars"))
     }),
     "dedup_simhash" -> ((s, d) =>
-      DedupApprox.simhashPairs(Tables.documents(prep(s), d), 8)),
+      DedupApprox.simhashPairs(Tables.documents(s, d), 8)),
     // pair set → transitive closure: the cluster-level retention decision
     // (iterative min-label propagation; deterministic labels = min doc_id)
     "dedup_clusters" -> ((s, d) =>
-      Components.dedupClusters(Tables.documents(prep(s), d), 0.7)),
+      Components.dedupClusters(Tables.documents(s, d), 0.7)),
     // the production retention rule: inside each near-dup cluster keep
     // the HIGHEST-QUALITY member (FxMath-exact score, tie → smallest
     // doc_id), not the arbitrary min-id canonical — one agg per cluster,
     // no corpus-wide window
     "dedup_quality_survivor" -> ((s, d) =>
-      Components.qualitySurvivorClusters(Tables.documents(prep(s), d), 0.7)),
+      Components.qualitySurvivorClusters(Tables.documents(s, d), 0.7)),
     "ann_cosine_topk" -> ((s, d) =>
-      Ann.bruteTopK(Tables.embeddings(prep(s), d), 10, 5)),
+      Ann.bruteTopK(Tables.embeddings(s, d), 10, 5)),
     // contrastive-pair mining: per anchor, the 5 nearest vectors of a
     // DIFFERENT label — the hard negatives a contrastive loss trains on
     "emb_hard_negatives" -> ((s, d) =>
-      Ann.hardNegatives(Tables.embeddings(prep(s), d), 10, 5)),
+      Ann.hardNegatives(Tables.embeddings(s, d), 10, 5)),
     "ann_ivf_topk" -> ((s, d) =>
-      Ann.ivfTopKWithCentroids(Tables.embeddings(prep(s), d),
+      Ann.ivfTopKWithCentroids(Tables.embeddings(s, d),
         Ann.loadCentroids(s, AnnIndexFixture), 10, 5)),
     // INCREMENTAL INDEX MAINTENANCE: the index is seeded from the even
     // half of the corpus with the committed fixture quantizer, the odd
@@ -1274,17 +1261,17 @@ object SparkEntry {
     "ann_ivf_incremental" -> ((s, d) => {
       val idx = cachedTempDir("graft_ivfinc_")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
-      val e = Tables.embeddings(prep(s), d)
+      val e = Tables.embeddings(s, d)
       Ann.buildIvfIndexWithCentroids(e.filter(pmod(col("vec_id"), lit(2L)) === 0),
         idx, Ann.loadCentroids(s, AnnIndexFixture))
       Ann.appendToIvfIndex(e.filter(pmod(col("vec_id"), lit(2L)) === 1), idx)
       Ann.ivfTopKFromIndex(s, idx, e.filter(col("vec_id") < 10), 5)
     }),
     "semantic_dedup" -> ((s, d) =>
-      Ann.semanticDedup(Tables.embeddings(prep(s), d),
+      Ann.semanticDedup(Tables.embeddings(s, d),
         Ann.loadCentroids(s, AnnIndexFixture), 0.4)),
     "semantic_dedup_spill" -> ((s, d) =>
-      Ann.semanticDedupSpill(Tables.embeddings(prep(s), d),
+      Ann.semanticDedupSpill(Tables.embeddings(s, d),
         Ann.loadCentroids(s, AnnIndexFixture), 0.4)),
     // spill decided by the data: runner-up assignments kept only below a
     // margin cut derived from the quantizer's boundary-distance sample —
@@ -1293,37 +1280,37 @@ object SparkEntry {
     // spill=2 at ≤ its assignment rows); the sample cut is the
     // bottom-k-by-hash device, so DuckDB replays it exactly
     "semantic_dedup_adaptive" -> ((s, d) =>
-      Ann.semanticDedupAdaptive(Tables.embeddings(prep(s), d),
+      Ann.semanticDedupAdaptive(Tables.embeddings(s, d),
         Ann.loadCentroids(s, AnnIndexFixture), 0.4)),
     "ann_ivfpq_topk" -> ((s, d) =>
-      Ann.ivfPqTopKWithModels(Tables.embeddings(prep(s), d),
+      Ann.ivfPqTopKWithModels(Tables.embeddings(s, d),
         Ann.loadCentroids(s, AnnIndexFixture),
         Ann.loadCodebooks(s, AnnIndexFixture), 10, 5)),
     "dedup_embedding" -> ((s, d) =>
-      Ann.embeddingNearDup(Tables.embeddings(prep(s), d), 0.4)),
+      Ann.embeddingNearDup(Tables.embeddings(s, d), 0.4)),
     // output exploded back to scalars: array-typed result columns are a
     // cross-engine hash-compare hazard
     "emb_label_centroid" -> ((s, d) =>
-      Ann.labelCentroids(Tables.embeddings(prep(s), d))
+      Ann.labelCentroids(Tables.embeddings(s, d))
         .select(col("label"), posexplode(col("centroid")).as(Seq("pos", "v")))),
     // int8 scalar quantization (float32 → signed byte, 4× shuffle/storage
     // cut for the 100-TB index path); `max_abs` emitted unrounded — it is
     // a pure float→double cast, bit-identical in both engines
     "emb_quantize" -> ((s, d) =>
-      Ann.quantizeEmbeddings(Tables.embeddings(prep(s), d))),
+      Ann.quantizeEmbeddings(Tables.embeddings(s, d))),
     // PCA projection against the committed rotation (gen.PcaGen): one
     // narrow map stage per row — the committed-model device of the IVF
     // family applied to dimensionality reduction
     "emb_pca_project" -> ((s, d) =>
-      Pca.projectFromFixture(prep(s),
-        Tables.embeddings(prep(s), d)
+      Pca.projectFromFixture(s,
+        Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
         PcaFixture)),
     // ANN through the PCA bottleneck: reduced-space candidates (k/d of the
     // per-pair flops), full-precision re-rank of the short list only
     "ann_pca_topk" -> ((s, d) =>
-      Pca.annPcaTopK(prep(s),
-        Tables.embeddings(prep(s), d)
+      Pca.annPcaTopK(s,
+        Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
         PcaFixture)),
     // IVF composed with the PCA bottleneck: the coarse quantizer is
@@ -1332,8 +1319,8 @@ object SparkEntry {
     // bucket-pruned shape but cost k/d per pair, full-precision re-rank
     // touches the refine short list only
     "ann_ivf_pca_topk" -> ((s, d) =>
-      Pca.ivfPcaTopK(prep(s),
-        Tables.embeddings(prep(s), d)
+      Pca.ivfPcaTopK(s,
+        Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
         PcaFixture)),
     // IVF-PQ composed WITH the PCA bottleneck — the full committed-model
@@ -1344,7 +1331,7 @@ object SparkEntry {
     // projection, reduced assignment, reduced-subspace encode, LUT, the
     // ADC fold, and both rank orders exactly from the two fixtures
     "ann_ivfpq_pca_topk" -> ((s, d) => {
-      val e = Tables.embeddings(prep(s), d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val idx = demoFixture(s, d, "ivfpqpca") {
         val idx = cachedTempDir("graft_ivfpqpca_")
@@ -1359,14 +1346,14 @@ object SparkEntry {
     // (per-partition top-k + k-row merge on the driver) — a global ranking
     // window here would funnel every distinct bigram through one partition
     "tok_top_bigrams" -> ((s, d) => {
-      val docs = Tables.documents(prep(s), d)
+      val docs = Tables.documents(s, d)
       docs.select(explode(graft.functions.expr.VectorExpressions
           .shingles(col("text"), 2)).as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("bigram")).limit(10)
     }),
     "mm_media_summary" -> ((s, d) =>
-      Multimodal.mediaSummary(prep(s), Tables.documents(s, d))),
+      Multimodal.mediaSummary(s, Tables.documents(s, d))),
     // GENUINE binary media through the production parsers: the committed
     // fixture at fixtures/media (gen.MediaGen — real PNG/GIF/JPEG/WAV/MP4
     // container bytes) is sf-independent, and the oracle is the generator's
@@ -1374,15 +1361,15 @@ object SparkEntry {
     // be self-consistent with the oracle. Checksum column dropped: it is
     // JVM Arrays.hashCode, not portable semantics.
     "mm_real_media" -> ((s, _) =>
-      Multimodal.extractFeaturesFromMedia(prep(s),
+      Multimodal.extractFeaturesFromMedia(s,
         s.read.parquet(MediaFixture + "/media_blobs").filter(col("kind") === "image"))
         .toDF().select("doc_id", "format", "n_bytes", "width", "height", "n_frames")),
     "mm_real_audio" -> ((s, _) =>
-      Multimodal.extractAudioFeatures(prep(s),
+      Multimodal.extractAudioFeatures(s,
         s.read.parquet(MediaFixture + "/media_blobs")
           .filter(col("kind").isin("audio", "corrupt"))).toDF()),
     "mm_real_tracks" -> ((s, _) =>
-      Multimodal.extractVideoTracks(prep(s),
+      Multimodal.extractVideoTracks(s,
         s.read.parquet(MediaFixture + "/media_blobs")
           .filter(col("kind").isin("video", "corrupt"))).toDF()),
     // REAL pixel decode (not header parsing): inflate the zlib IDAT
@@ -1390,12 +1377,12 @@ object SparkEntry {
     // oracle is the generator's CHOSEN pixel values (expected_pixels), so
     // a wrong unfilter or a dropped IDAT chunk cannot hash-match
     "mm_pixel_stats" -> ((s, _) =>
-      Multimodal.extractPixelStats(prep(s),
+      Multimodal.extractPixelStats(s,
         s.read.parquet(MediaFixture + "/pixel_blobs")).toDF()),
     // fixed-point integer PageRank (10 damped rounds) on the purchase
     // graph — link-structure quality prior; exact long arithmetic makes
     // the iteration bit-replayable in the oracle
-    "graph_pagerank" -> ((s, d) => Graph.purchaseRank(prep(s), d)),
+    "graph_pagerank" -> ((s, d) => Graph.purchaseRank(s, d)),
     // the committed-layout twin: the degree-annotated edge list lands
     // ONCE as a bucketBy(src)+sortBy table (memoized fixture — the
     // production build-once/iterate-many split) and every round's E⋈V
@@ -1405,11 +1392,11 @@ object SparkEntry {
       val out = demoFixture(s, d, "prank_bkt") {
         val dir = cachedTempDir("graft_prankbkt_")
         // commit happens inside pageRankBucketed on first call
-        Graph.pageRankBucketed(prep(s), Graph.purchaseEdges(s, d), dir,
+        Graph.pageRankBucketed(s, Graph.purchaseEdges(s, d), dir,
           iterations = 0, reuseExisting = false)
         dir
       }
-      Graph.pageRankBucketed(prep(s), Graph.purchaseEdges(s, d), out,
+      Graph.pageRankBucketed(s, Graph.purchaseEdges(s, d), out,
         iterations = 10, reuseExisting = true)
         .select(Graph.kindDecode: _*)
     }),
@@ -1425,11 +1412,11 @@ object SparkEntry {
       // them once and measure the delta absorption, not the cold rerun
       val baseRanks = demoFixture(s, d, "prank_base") {
         val out = cachedTempDir("graft_prank_")
-        Graph.pageRank(Graph.basePurchaseEdges(prep(s), d), 6)
+        Graph.pageRank(Graph.basePurchaseEdges(s, d), 6)
           .write.mode("overwrite").parquet(out)
         out
       }
-      Graph.purchaseRankWarmFrom(prep(s), d, s.read.parquet(baseRanks),
+      Graph.purchaseRankWarmFrom(s, d, s.read.parquet(baseRanks),
         warmIterations = 3)
     }),
     // warm start × bucketed layout — the production refresh shape where
@@ -1441,17 +1428,17 @@ object SparkEntry {
     "graph_pagerank_warm_bucketed" -> ((s, d) => {
       val out = demoFixture(s, d, "prank_bkt") {
         val dir = cachedTempDir("graft_prankbkt_")
-        Graph.pageRankBucketed(prep(s), Graph.purchaseEdges(s, d), dir,
+        Graph.pageRankBucketed(s, Graph.purchaseEdges(s, d), dir,
           iterations = 0, reuseExisting = false)
         dir
       }
       val baseRanks = demoFixture(s, d, "prank_base") {
         val rout = cachedTempDir("graft_prank_")
-        Graph.pageRank(Graph.basePurchaseEdges(prep(s), d), 6)
+        Graph.pageRank(Graph.basePurchaseEdges(s, d), 6)
           .write.mode("overwrite").parquet(rout)
         rout
       }
-      Graph.purchaseRankWarmFromBucketed(prep(s), d, out,
+      Graph.purchaseRankWarmFromBucketed(s, d, out,
         s.read.parquet(baseRanks), warmIterations = 3)
     }),
     // O(DELTA) ABSORPTION (the r19 warmbkt caveat closed): base
@@ -1468,7 +1455,7 @@ object SparkEntry {
       val tbl = "graph_split_" + Integer.toHexString(d.hashCode)
       demoFixture(s, d, "gwdelta") {
         val out = cachedTempDir("graft_gwd_")
-        val base = Graph.basePurchaseEdges(prep(s), d)
+        val base = Graph.basePurchaseEdges(s, d)
         Graph.commitSplitEdgeTables(s, base, out, table = tbl)
         Graph.absorbEdgeDelta(s,
           Graph.purchaseEdges(s, d).except(base), tbl)
@@ -1476,35 +1463,35 @@ object SparkEntry {
       }
       val baseRanks = demoFixture(s, d, "prank_base") {
         val rout = cachedTempDir("graft_prank_")
-        Graph.pageRank(Graph.basePurchaseEdges(prep(s), d), 6)
+        Graph.pageRank(Graph.basePurchaseEdges(s, d), 6)
           .write.mode("overwrite").parquet(rout)
         rout
       }
-      Graph.purchaseRankWarmFromSplit(prep(s),
+      Graph.purchaseRankWarmFromSplit(s,
         s.read.parquet(baseRanks), warmIterations = 3, table = tbl)
     }),
     // degree-oriented triangle census of the part co-occurrence graph —
     // wedge join bounded by Σ outdeg² = O(E^1.5), not hub-degree²
     "graph_triangles" -> ((s, d) =>
-      Graph.triangleCount(Graph.coPurchaseEdges(prep(s), d, orderMod = 3))),
+      Graph.triangleCount(Graph.coPurchaseEdges(s, d, orderMod = 3))),
     // market-basket top-3 co-items per part: bounded TopKByScore ranking,
     // never a corpus-wide window sort
     "recs_copurchase" -> ((s, d) =>
-      Graph.coPurchaseRecommendations(prep(s), d, 3)),
+      Graph.coPurchaseRecommendations(s, d, 3)),
     // first-order Markov transition matrix over per-user event streams —
     // one lag window + pair counts, row-conditional p integer-exact
-    "markov_transitions" -> ((s, d) => Analytics.eventTransitions(prep(s), d)),
+    "markov_transitions" -> ((s, d) => Analytics.eventTransitions(s, d)),
     // lift-normalized variant: votes·N/(orders_u·orders_v) in micro units
     "recs_lift" -> ((s, d) =>
-      Graph.coPurchaseLiftRecommendations(prep(s), d, 3)),
+      Graph.coPurchaseLiftRecommendations(s, d, 3)),
     // exact sparse TF-cosine pairs via inverted-index join; integer
     // cross-norm comparison (dot²·1e6 ≥ t²·‖a‖²‖b‖²), no float anywhere
     "sim_join_cosine" -> ((s, d) =>
-      SparseSim.cosineTfJoin(Tables.documents(prep(s), d), 800L)),
+      SparseSim.cosineTfJoin(Tables.documents(s, d), 800L)),
     // blocked entity resolution: exact block equi-join + levenshtein
     // refine on part names (0 = exact duplicate record, ≤3 = typo-range)
     "er_blocked_match" -> ((s, d) =>
-      EntityResolution.blockedFuzzyJoin(Tables.part(prep(s), d),
+      EntityResolution.blockedFuzzyJoin(Tables.part(s, d),
         Seq("p_brand", "p_size"), "p_partkey", "p_name", 3)),
     // UNBLOCKED edit-distance self-join (q-gram prefix filter + exact
     // levenshtein verify): digit-neighbor customer names within 1 edit —
@@ -1519,7 +1506,7 @@ object SparkEntry {
       // quadratic-dense, not the algorithm). q=3 keeps prefix buckets
       // rare-gram-sized over digit strings (trigram vocabulary ~10× the
       // bigram one)
-      EntityResolution.editDistanceJoin(Tables.supplier(prep(s), d),
+      EntityResolution.editDistanceJoin(Tables.supplier(s, d),
         "s_suppkey", "s_name", maxDist = 1, q = 3)),
     // TIME TRAVEL through the VersionedCommitter: three overlapping
     // ts-window batches upserted as versions 1..3, then the table read AS
@@ -1719,7 +1706,7 @@ object SparkEntry {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(q))
       val c = new graft.streaming.VersionedCommitter
       val qc = new graft.streaming.VersionedCommitter
-      val e = Tables.events(prep(s), d).select(
+      val e = Tables.events(s, d).select(
         col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
         col("event_type"),
         round(col("value") * 100).cast("long").as("value_cents"))
@@ -1984,7 +1971,7 @@ object SparkEntry {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
         val c = new graft.streaming.VersionedCommitter
         val view = "ins_src_" + Integer.toHexString(d.hashCode)
-        Tables.events(prep(s), d).select(
+        Tables.events(s, d).select(
           col("event_id"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("value_cents"))
           .createOrReplaceTempView(view)
@@ -2010,7 +1997,7 @@ object SparkEntry {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
         val c = new graft.streaming.VersionedCommitter
         val view = "ctas_src_" + Integer.toHexString(d.hashCode)
-        Tables.events(prep(s), d).select(
+        Tables.events(s, d).select(
           col("event_id"), col("user_id"),
           round(col("value") * 100).cast("long").as("value_cents"),
           pmod(col("event_id"), lit(8L)).as("bucket"))
@@ -2201,22 +2188,22 @@ object SparkEntry {
     // what it hunts). Integer counts make median and MAD exact-in-double,
     // so the flags replay bit-for-bit.
     "mon_anomaly_days" -> ((s, d) =>
-      Monitoring.anomalousDays(Tables.events(prep(s), d))),
+      Monitoring.anomalousDays(Tables.events(s, d))),
     // per-day modal event type with a DETERMINISTIC tie-break (SQL mode()
     // leaves ties unspecified — unusable for reproducible pipelines)
     "mon_modal_type" -> ((s, d) =>
-      Monitoring.dailyModalType(Tables.events(prep(s), d))),
+      Monitoring.dailyModalType(Tables.events(s, d))),
     // grouped least-squares from exact integer sufficient statistics:
     // slope and correlation land bit-identical across engines
     "mon_type_regression" -> ((s, d) =>
-      Monitoring.dailyTypeRegression(Tables.events(prep(s), d))),
+      Monitoring.dailyTypeRegression(Tables.events(s, d))),
     // KMV SET INTERSECTION: users active on BOTH of the last two days
     // estimated from the per-day sketch states alone (union k-min + the
     // Jaccard match ratio — Beyer et al. KMV set algebra), exact
     // intersection alongside as the error reference. O(k) set algebra at
     // query time, never a fact rescan.
     "sketch_intersection_days" -> ((s, d) =>
-      Analytics.kmvIntersectionLastTwoDays(prep(s), d)),
+      Analytics.kmvIntersectionLastTwoDays(s, d)),
     // TYPE WIDENING through evolution: v1 commits buckets 0-3 with INT
     // value_cents; v2 commits buckets 4-7 with LONG — the committed schema
     // widens, and the read binds BIGINT across BOTH halves (Spark 4's
@@ -2763,7 +2750,7 @@ object SparkEntry {
   private def mvDemo(s: SparkSession, d: String): (String, DataFrame, java.time.LocalDate) =
     mvDemoCache.computeIfAbsent((s, d), _ => {
       val out = cachedTempDir("graft_mv_") + "/mv"
-      val base = Tables.events(prep(s), d)
+      val base = Tables.events(s, d)
       graft.plans.MaterializedViews.create(s, s"daily_rollup_$d", base,
         groups = Seq("day" -> to_date(col("ts")),
           "event_type" -> col("event_type")),
@@ -2818,7 +2805,7 @@ object SparkEntry {
     * clone diverges by applying batch 3 to the clone).
     */
   private def versionedDemoBatches(s: SparkSession, d: String): Seq[DataFrame] = {
-    val e = Tables.events(prep(s), d).select(
+    val e = Tables.events(s, d).select(
       col("event_id"), unix_micros(col("ts")).as("ts_us"),
       col("user_id"), col("event_type"),
       round(col("value") * 100).cast("long").as("value_cents"),

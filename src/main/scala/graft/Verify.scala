@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,19 +10,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query-name filter (local iteration)
     val only = args.drop(2).headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet timestamp[ns]; read as long + truncate (Tables)
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // write µs (never INT96) so the driver's readers see plain int64 µs
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // write µs (never INT96) so the oracle's readers see plain int64 µs
+    val spark = Session(conf = Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,6 +1,5 @@
 package graft.functions.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -11,10 +10,9 @@ import org.apache.spark.sql.types.IntegerType
   * `simhash64(tokens)`, `minhash_sig(shingles, 16)`, `shingles(text, 3)`,
   * `poly_rolling_hash(text)`.
   *
-  * Two registration paths: [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.plans.GraftExtensions`) injects them at
-  * session build — the production route — and [[register]] installs them on
-  * a live session.
+  * One registration path: [[graft.plans.GraftExtensions]] injects them at
+  * session build ([[graft.Session]] sets
+  * `spark.sql.extensions=graft.plans.GraftExtensions`).
   */
 object GraftFunctions {
 
@@ -49,10 +47,4 @@ object GraftFunctions {
       info(classOf[PolyRollingHash], "poly_rolling_hash",
         "poly_rolling_hash(text) - order-sensitive Rabin-Karp polynomial hash over codepoints"),
       (args: Seq[Expression]) => PolyRollingHash(args.head)))
-
-  /** Install on a live session (temp-function registry). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, inf, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
-    }
 }

@@ -2,7 +2,7 @@ package graft.gen
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Deterministic GENUINE-container media fixture: real PNG/GIF/JPEG/WAV/MP4
   * byte layouts (valid signatures, chunk/box/marker structure, correct
@@ -293,11 +293,7 @@ object MediaGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/media")
     val pixelsOnly = args.contains("pixelsOnly")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("media-gen").getOrCreate()
+    val spark = graft.Session(4)
     import spark.implicits._
     def write[T <: Product : org.apache.spark.sql.Encoder](rows: Seq[T], name: String): Unit =
       rows.toDS().toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$out/$name")

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Pca
@@ -26,13 +26,7 @@ object PcaGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("fixtures/pca")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(8)
     import spark.implicits._
 
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -44,11 +44,7 @@ object RunLogGen {
     */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/runlog")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("runlog-gen").getOrCreate()
+    val spark = graft.Session(4)
     runLog(spark, 12 * 144, 1704067200L)
       .repartition(1)
       .write.mode("overwrite").partitionBy("day_partition")

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Committed token→xxhash64 dictionary fixture: the per-token hash family
@@ -23,12 +23,7 @@ object SimHashDictGen {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/simhash")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(8)
 
     val scales = Seq("sf0.001", "sf0.01", "sf0.1")
     val vocab = scales.map { sf =>

@@ -81,11 +81,7 @@ object VitalsGen {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/vitalsgen")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("vitals-gen").getOrCreate()
+    val spark = graft.Session(4)
     vitals(spark, FixtureRows, FixtureStartEpochSec)
       .repartition(1).sortWithinPartitions("effective_ts")
       .write.mode("overwrite").parquet(s"$out/vitals")

@@ -17,13 +17,11 @@ import graft.sources.Tables
   */
 object Views {
 
-  /** Base tables + derived models + monitoring views over `dir`, plus the
+  /** Base tables + derived models + monitoring views over `dir`. The
     * engine's native SQL functions (cosine_sim, simhash64, minhash_sig,
-    * shingles, poly_rolling_hash).
+    * shingles, poly_rolling_hash) come with the session ([[graft.Session]]).
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    spark.conf.set(Tables.NanosAsLongConf, "true")
-    graft.functions.expr.GraftFunctions.register(spark)
     val raw = Tables.events(spark, dir)
 
     // base tables (TPC-H-ish + documents/embeddings)

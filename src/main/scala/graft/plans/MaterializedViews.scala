@@ -185,9 +185,9 @@ object MaterializedViews {
   }
 }
 
-/** The rewrite rule. Registered via [[GraftExtensions]] or
-  * `spark.experimental.extraOptimizations`; consults the session's MV
-  * registry on every application (registration is dynamic).
+/** The rewrite rule. Injected at session build by [[GraftExtensions]];
+  * consults the session's MV registry on every application (MV
+  * registration is dynamic).
   */
 object RewriteAggregateToMv extends Rule[LogicalPlan] {
   import MaterializedViews._

@@ -63,10 +63,12 @@ object RewriteRankOneToMaxBy extends Rule[LogicalPlan] {
   }
 }
 
-/** Production registration:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Installs the
-  * QUALIFY-dedup rewrite, the engine's native SQL functions
+/** The one registration path for the engine's rules, parser and
+  * functions: [[graft.Session]] sets
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, so every session
+  * gets them at build and nothing installs them at runtime. Installs the
+  * four optimizer rules (QUALIFY-dedup rewrite, MV rewrite, metadata-only
+  * count, stats join reorder), the engine's native SQL functions
   * ([[graft.functions.expr.GraftFunctions]]), and the lifecycle SQL
   * surface ([[graft.sql.LifecycleSql]]: DESCRIBE HISTORY / RESTORE /
   * VACUUM / CLONE / ANALYZE on path-addressed manifest tables, all other

@@ -20,9 +20,9 @@ object Tables {
     * .nanosAsLong`, truncated to µs here) and timestamp[µs]
     * isAdjustedToUTC=0 (read as TimestampNTZType by Spark's reader since
     * `spark.sql.parquet.inferTimestampNTZ` defaults true). Both are
-    * normalized to the session-local TimestampType — the session timezone
-    * is pinned UTC everywhere (prep/Verify/Bench/tests), so NTZ→LTZ names
-    * the same instant DuckDB computes for the oracle. The normalized type
+    * normalized to the session-local TimestampType — [[graft.Session]]
+    * pins the session timezone to UTC, so NTZ→LTZ names the same instant
+    * DuckDB computes for the oracle. The normalized type
     * is asserted so a future fixture re-type fails loudly HERE, not 16
     * queries downstream.
     */

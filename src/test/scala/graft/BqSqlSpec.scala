@@ -47,20 +47,23 @@ class BqSqlSpec extends AnyFunSuite {
     assert(raw.count() > raw.select("event_id").distinct().count(),
       "fixture must contain overlap duplicates for the dedup to repair")
     val translated = BqSql.run(spark, refSql("sql/bq_fact_vitals.sql"))
-    val native = Dedup.keepFirst(raw, Seq("event_id"), Seq(col("created_at").desc))
-      .select(translated.columns.map(col).toIndexedSeq: _*)
-    assert(rows(translated) == rows(native))
+    // the native side keeps its window: the rank-1 rule is excluded here
+    val (nativePlan, nativeRows) = TestSpark.withoutRankOneRewrite {
+      val native = Dedup.keepFirst(raw, Seq("event_id"), Seq(col("created_at").desc))
+        .select(translated.columns.map(col).toIndexedSeq: _*)
+      (native.queryExecution.optimizedPlan.toString, rows(native))
+    }
+    assert(nativePlan.contains("windowspecdefinition"),
+      s"native baseline should keep the window:\n$nativePlan")
+    assert(rows(translated) == nativeRows)
     assert(translated.count() == raw.select("event_id").distinct().count())
     // the translated QUALIFY becomes the engine's canonical rank-1 filter,
-    // so the optimizer rule rewrites it window-free (max_by aggregate)
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteRankOneToMaxBy)
-    try {
-      val opt = spark.sql(BqSql.translate(refSql("sql/bq_fact_vitals.sql")).sparkSelect)
-      val plan = opt.queryExecution.optimizedPlan.toString
-      assert(plan.contains("max_by") && !plan.contains("windowspecdefinition"),
-        s"reference QUALIFY should get the max_by plan:\n$plan")
-      assert(rows(opt) == rows(native), "rewritten plan must answer identically")
-    } finally spark.experimental.extraOptimizations = Nil
+    // so the injected optimizer rule rewrites it window-free (max_by aggregate)
+    val opt = spark.sql(BqSql.translate(refSql("sql/bq_fact_vitals.sql")).sparkSelect)
+    val plan = opt.queryExecution.optimizedPlan.toString
+    assert(plan.contains("max_by") && !plan.contains("windowspecdefinition"),
+      s"reference QUALIFY should get the max_by plan:\n$plan")
+    assert(rows(opt) == nativeRows, "rewritten plan must answer identically")
   }
 
   test("general-boolean QUALIFY falls back to the __qualify column path") {

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Checkpoint-cadence probe for Graph.pageRank (BASELINE.md note): measures
   * the sf0.1 purchase-graph ranking at several lineage-cut intervals.
   * `sbt "Test/runMain graft.GraphProbe"`.
   */
 object GraphProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val edges = graft.operators.Graph.purchaseEdges(spark, dir)
       .localCheckpoint(true)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{MaterializedViews, RewriteAggregateToMv, RewriteRankOneToMaxBy}
+import graft.plans.MaterializedViews
 
 /** Materialized-view rewrite: aggregates over the base data re-plan onto
   * the committed rollup when (and only when) the match is provably sound —
@@ -27,8 +27,6 @@ class MvRewriteSpec extends AnyFunSuite {
   private def base = spark.read.parquet(basePath)
 
   private lazy val mvPath = {
-    spark.experimental.extraOptimizations =
-      Seq(RewriteRankOneToMaxBy, RewriteAggregateToMv)
     val p = Files.createTempDirectory("graft-mv").toString + "/mv"
     MaterializedViews.create(spark, "daily", base,
       groups = Seq("day" -> col("day"), "typ" -> col("typ")),

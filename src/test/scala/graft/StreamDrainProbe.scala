@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: times the heaviest streaming-drain queries at sf0.1 under
   * different `spark.sql.shuffle.partitions` (= state-store partition
   * count) — each stateful drain pays per-partition state-store files per
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamDrainProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     val parts = sys.env.getOrElse("GRAFT_DRAIN_PARTS", "32,8")

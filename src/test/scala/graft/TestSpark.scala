@@ -33,31 +33,26 @@ object TestSpark {
     fileScanNodes(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
   }
 
+  /** Run `body` with the rank-1 → max_by rewrite excluded from the
+    * optimizer: the window form a rewritten plan is compared against.
+    */
+  def withoutRankOneRewrite[T](body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      graft.plans.RewriteRankOneToMaxBy.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   /** Data files committed under `parts` of the manifest table at `path`. */
   def filesOf(path: String, parts: String*): Long =
     graft.pipeline.Maintenance.tableFileStats(path)
       .filter(p => parts.contains(p.key)).map(_.nFiles.toLong).sum
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongConf, "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      // the simulated object-store schemes (ObjectStoreSim.scala): naf =
-      // atomic-put / non-atomic-rename, hdfsl = non-local atomic-rename
-      .config("spark.hadoop.fs.naf.impl", classOf[AtomicPutStoreFs].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.naf.impl",
-        classOf[AtomicPutStoreAbstractFs].getName)
-      .config("spark.hadoop.fs.hdfsl.impl", classOf[HdfsLikeFs].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.hdfsl.impl",
-        classOf[HdfsLikeAbstractFs].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(4, Seq(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString,
+    // the simulated object-store schemes (ObjectStoreSim.scala): naf =
+    // atomic-put / non-atomic-rename, hdfsl = non-local atomic-rename
+    "spark.hadoop.fs.naf.impl" -> classOf[AtomicPutStoreFs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.naf.impl" -> classOf[AtomicPutStoreAbstractFs].getName,
+    "spark.hadoop.fs.hdfsl.impl" -> classOf[HdfsLikeFs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.hdfsl.impl" -> classOf[HdfsLikeAbstractFs].getName))
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Monitoring}
 import graft.pipeline.Views
+import graft.plans.{MetadataOnlyCount, RewriteAggregateToMv, RewriteRankOneToMaxBy, StatsJoinReorder}
 import graft.sources.Tables
 
 /** The SQL surface: a reference user's SELECT-against-views workflow must
@@ -13,6 +14,17 @@ class ViewsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
+
+  test("the factory-built session fixes UTC, the ns reader, the rules and functions at build") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get(Tables.NanosAsLongConf) == "true")
+    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules.map(_.ruleName)
+    Seq(RewriteRankOneToMaxBy, RewriteAggregateToMv, MetadataOnlyCount, StatsJoinReorder)
+      .foreach(r => assert(rules.count(_ == r.ruleName) == 1, s"${r.ruleName} in $rules"))
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.sql("SELECT cosine_sim(array(2.0D, 0.0D), array(5.0D, 0.0D))").first()
+      .getDouble(0) == 1.0)
+  }
 
   test("SQL star rollup over registered views matches the DataFrame form") {
     Views.registerAll(spark, dir)
