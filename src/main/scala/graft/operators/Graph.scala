@@ -25,28 +25,23 @@ import graft.sources.Tables
   * Floor rounding loses ≤1 unit per edge per round (≤E·1e-12 of the mass):
   * immaterial for ranking, essential for exactness.
   *
-  * Scale shape: each iteration is one equi-join of the out-degree-
-  * annotated edge list (E rows, checkpointed once, reused every round)
-  * with the rank frame (V rows) on the source id, then one
-  * map-side-combining sum by destination — two keyed shuffles, nothing
-  * else. Both sides hash-partition on the same key width, so AQE reuses
-  * the exchange layout across rounds; on a real cluster the edge list
-  * would be bucketed by `src` once and every iteration's join would be
-  * shuffle-free on the edge side. Lineage is cut every `checkpointEvery`
-  * rounds (`localCheckpoint`, same device as [[Components]]) so round k
-  * plans O(1) deep instead of O(k). Since round 21 the cadence default is
-  * 1: with the partitioning-preserving checkpoints both join inputs
-  * re-enter each round co-partitioned, so EVERY round is exchange-free on
-  * the edge side — under the old non-preserving checkpoint a shorter
-  * cadence only added barriers (r20 measured cadence 1 worse THEN), now it
-  * removes the E-sized exchange the intermediate round of a cadence-2
-  * segment still pays when the edge width differs from the session
-  * shuffle width. No driver-side graph state — V and E stay distributed.
+  * Scale shape: each round is one equi-join of the out-degree-annotated
+  * edge frame ([[RankEdges]]: E rows, built once, hash-partitioned on
+  * `src`) with the rank frame (V rows) on the source id, then one
+  * map-side-combining sum by destination. Every rank frame a later round
+  * or the residual probe reads is cut with a partitioning-preserving
+  * `localCheckpoint` at the edge frame's partition count, so round k plans
+  * O(1) deep and both join inputs re-enter each round co-partitioned: no
+  * round exchanges the edge side, only the V-sized rank frame moves. No
+  * driver-side graph state — V and E stay distributed.
   *
-  * Iteration count is FIXED (no convergence probe): deterministic replay
-  * and a bounded job DAG matter more at 100 TB than squeezing the last
-  * rounds out — 10 damped rounds bound the residual to d^10 ≈ 0.2 of the
-  * initial gap, ample for a curation prior.
+  * One kernel ([[pageRank]]) serves every form: a cold start runs a FIXED
+  * round count (no convergence probe — deterministic replay and a bounded
+  * job DAG matter more at 100 TB than squeezing the last rounds out; 10
+  * damped rounds bound the residual to d^10 ≈ 0.2 of the initial gap), a
+  * warm start absorbs an edge delta from committed ranks, and the edge
+  * frame comes from memory, a committed bucketed table or the split
+  * delta-absorbing tables — all through the same [[prRound]] integers.
   */
 object Graph {
 
@@ -59,81 +54,161 @@ object Graph {
   val DampNum = 85L
   val DampDen = 100L
 
-  /** PageRank over a DIRECTED edge list (`src`, `dst` — long ids, UNIQUE
-    * rows: callers dedup). Every node appearing as a source or destination is ranked;
-    * dangling nodes (no out-edges) are allowed — their mass leaks, the
-    * standard simplification when the graph is made symmetric upstream
-    * (an undirected graph has no dangling nodes). Returns (`node`,
-    * `rank`) with `rank` in 1e-12 mass units.
+  /** The edge side of every PageRank round: the out-degree-annotated
+    * `(src, dst, outdeg)` frame over a DIRECTED edge list with UNIQUE rows
+    * (callers dedup), hash-partitioned on `src` at `parts` partitions.
+    * The kernel checkpoints each rank frame at the same `parts`, so the
+    * per-round E⋈V join needs no exchange on the edge side whichever
+    * source built the frame (plan-asserted per source in `GraphSpec`).
+    * Join strategy cannot change the fixed-point integer sums, so every
+    * source gives bit-identical ranks. Only the three constructors below
+    * build one, so the partitioning holds by construction.
     */
-  def pageRank(edges: DataFrame, iterations: Int = 10,
-               checkpointEvery: Int = 1): DataFrame = {
-    // out-degree-annotated edges: built once, checkpointed, reused by
-    // every round's join (the E-side of each iteration). No defensive
-    // distinct() — unique edges are the caller's contract (above), and a
-    // redundant E-sized shuffle at 100 TB is exactly the kind of "just in
-    // case" work to refuse.
-    // materialize the edge list ONCE before fanning it into its two
-    // consumers (the degree aggregate and the join): without the cut, the
-    // caller's edge-construction subtree (for the purchase graph: an
-    // orders⋈lineitem join + distinct + both-directions union) re-executes
-    // once per consumer per branch — the round-20 profile showed the 5.5 MB
-    // o⋈l exchange map stage running twice inside one build
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val (eDeg, parts) = partitionEdgeFrame(e.join(deg, "src"))
-    // eDeg's eager checkpoint no longer depends on e's lineage — release
-    // e's blocks now instead of holding TWO copies of E for the whole
-    // 10-round job (the r20 advisor's finding)
-    Par.release(e)
-    iterate(eDeg, iterations, checkpointEvery, parts)
-  }
+  final class RankEdges private (val eDeg: DataFrame, val parts: Int)
 
-  /** Hash-partition + sort the degree-annotated edge frame by `src` BEFORE
-    * checkpointing it, through the PARTITIONING-PRESERVING checkpoint
-    * ([[org.apache.spark.sql.graftshim.CheckpointBridge]]): every
-    * iteration's E⋈V join then needs NO exchange and NO sort on the edge
-    * side — the committed-bucketed twin's per-round plan economics
-    * (shuffle V per round, not E+V), achieved in memory for the plain
-    * path. Round 20 used a plain `localCheckpoint(true)` here believing it
-    * preserved the physical partitioning; the round-21 plan dump disproved
-    * that (under AQE the LogicalRDD lands with UnknownPartitioning —
-    * `plans/r21/graph_pagerank_before.txt` shows the E-sized exchange
-    * re-planned every round). Join strategy cannot change the fixed-point
-    * integer sums, so results are bit-identical.
-    */
-  private def partitionEdgeFrame(eDeg: DataFrame): (DataFrame, Int) = {
-    // EXPLICIT partition count: a keyed repartition without one is
-    // AQE-coalescible, and a CoalescedHashPartitioning cannot co-partition
-    // with the rank side's plain hashpartitioning(node, N) — the round-21
-    // mid dump showed EnsureRequirements re-exchanging BOTH sides because
-    // the counts (8 vs 32) no longer matched. The count is SIZE-DERIVED
-    // (guide §2: scale-adaptive, never a local constant): the upstream e
-    // checkpoint's measured bytes over the AQE advisory partition size —
-    // small graphs get few partitions (every extra task is ~100ms of pure
-    // constant at fixture scale, the <1 low-core scaling ratios' cause),
-    // a 100-TB edge list saturates the session's shuffle width.
-    val conf = eDeg.sparkSession.sessionState.conf
-    val advisory = conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val parts = Par.checkpointedBytes(eDeg) match {
-      case Some(bytes) => math.max(1L, math.min(
-        conf.numShufflePartitions.toLong,
-        (bytes + advisory - 1) / advisory)).toInt
-      case None => conf.numShufflePartitions
+  object RankEdges {
+
+    /** Build the edge frame in memory. The edge list is materialized ONCE
+      * before it fans into its two consumers (the degree aggregate and the
+      * join): without the cut, the caller's edge-construction subtree (for
+      * the purchase graph: an orders⋈lineitem join + distinct +
+      * both-directions union) re-executes once per consumer — the round-20
+      * profile showed the 5.5 MB o⋈l exchange map stage running twice. No
+      * defensive distinct(): unique edges are the caller's contract.
+      *
+      * The annotated frame is hash-partitioned + sorted by `src` BEFORE a
+      * PARTITIONING-PRESERVING checkpoint
+      * ([[org.apache.spark.sql.graftshim.CheckpointBridge]]): a plain
+      * `localCheckpoint` lands under AQE with UnknownPartitioning and
+      * re-plans the E-sized exchange every round (`GraphSpec`'s plan-shape
+      * test asserts the edge side stays exchange-free).
+      */
+    def inMemory(edges: DataFrame): RankEdges = {
+      val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      val eDeg = e.join(deg, "src")
+      // EXPLICIT partition count: a keyed repartition without one is
+      // AQE-coalescible, and a CoalescedHashPartitioning cannot
+      // co-partition with the rank side's plain hashpartitioning(node, N)
+      // — EnsureRequirements re-exchanges BOTH sides once the counts no
+      // longer match. The count is SIZE-DERIVED (guide §2: scale-adaptive,
+      // never a local constant): the e checkpoint's measured bytes over
+      // the AQE advisory partition size — small graphs get few partitions
+      // (every extra task is ~100ms of pure constant at fixture scale), a
+      // 100-TB edge list saturates the session's shuffle width. But never
+      // ONE when the session is wider: Spark plans a one-partition
+      // repartition as SinglePartition, which the join never co-partitions
+      // with, so every round would re-shuffle E at the session width.
+      val conf = eDeg.sparkSession.sessionState.conf
+      val advisory = conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val parts = Par.checkpointedBytes(eDeg) match {
+        case Some(bytes) => math.min(conf.numShufflePartitions.toLong,
+          math.max(2L, (bytes + advisory - 1) / advisory)).toInt
+        case None => conf.numShufflePartitions
+      }
+      val out = new RankEdges(localCheckpointPreserving(
+        eDeg.repartition(parts, col("src")).sortWithinPartitions("src")), parts)
+      // the annotated checkpoint no longer depends on e's lineage — release
+      // e's blocks now instead of holding TWO copies of E for the whole job
+      Par.release(e)
+      out
     }
-    (localCheckpointPreserving(
-      eDeg.repartition(parts, col("src")).sortWithinPartitions("src")), parts)
+
+    /** Commit (or reuse) the edge frame as a `bucketBy(src)+sortBy` table —
+      * the cluster layout: the annotated edge list lands ONCE and every
+      * round's E⋈V join reads it with NO exchange on the edge side (the
+      * scan's `HashPartitioning(src)` satisfies the join's distribution;
+      * only the V-sized rank frame moves per round, the same split
+      * `star_bucketed_disk` makes for the fact⋈dim join). Build once /
+      * iterate many: `reuseExisting = true` skips the commit when the table
+      * is already in the catalog — but trusts a catalog hit ONLY when the
+      * committed table's location is the one this call would write
+      * (`outDir/table`): a same-named table committed for a DIFFERENT dir
+      * in the same session (the multi-scale sweep pattern) would otherwise
+      * be silently iterated, returning ranks for the wrong graph — on
+      * mismatch the table is rebuilt in place. Note a delta changes E and
+      * the out-degrees, so absorbing one here re-commits the table at O(E);
+      * [[split]] is the O(delta) form.
+      */
+    def bucketed(spark: SparkSession, edges: DataFrame, outDir: String,
+                 buckets: Int = 8, table: String = "graph_edges_bkt",
+                 reuseExisting: Boolean = false): RankEdges = {
+      val loc = s"$outDir/$table"
+      def locationMatches: Boolean = {
+        val committed = spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+        val wanted = graft.streaming.TableFs.fs(loc)
+          .makeQualified(new org.apache.hadoop.fs.Path(loc)).toUri
+        committed == wanted
+      }
+      if (!reuseExisting || !spark.catalog.tableExists(table) || !locationMatches) {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        val e = edges.select(col("src"), col("dst"))
+        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+        // EXTERNAL table under the caller's dir (the runBucketedStar
+        // precedent): survives catalog loss without LOCATION_ALREADY_EXISTS
+        e.join(deg, "src")
+          .write.bucketBy(buckets, "src").sortBy("src")
+          .option("path", loc)
+          .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(table)
+      }
+      new RankEdges(spark.table(table), buckets)
+    }
+
+    /** The edge frame over the SPLIT committed layout
+      * ([[commitSplitEdgeTables]] / [[absorbEdgeDelta]]): eDeg =
+      * `<table>_e ⋈ <table>_d` on `src` — zero exchange on both bucketed
+      * sides — materialized ONCE per refresh through the preserving
+      * checkpoint (the join output keeps its `HashPartitioning(src,
+      * buckets)`), so every round iterates the in-memory frame instead of
+      * re-running the E-row merge join (measured 1.9× per-round overhead
+      * at 20M edges when left lazy — `GraphScaleProbe` splitabsorb). That
+      * normalization is the trade for O(delta) absorption: [[bucketed]]
+      * refreshes at an O(E) disk re-commit but scans its denormalized
+      * table per round; the split layout refreshes at O(delta) disk + one
+      * exchange-free in-memory join.
+      */
+    def split(spark: SparkSession,
+              table: String = "graph_edges_split"): RankEdges =
+      new RankEdges(
+        localCheckpointPreserving(
+          spark.table(s"${table}_e").join(spark.table(s"${table}_d"), "src")),
+        spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_e"))
+          .bucketSpec.map(_.numBuckets)
+          .getOrElse(spark.sessionState.conf.numShufflePartitions))
   }
 
-  /** The shared fixed-point loop over an already degree-annotated edge
-    * frame `(src, dst, outdeg)` — the seam that lets [[pageRankBucketed]]
-    * swap the in-memory checkpointed E-side for a committed bucketed scan
-    * without touching one arithmetic expression (bit-identical results
-    * are the contract; the oracle replays both).
+  /** PageRank over `edges`: every node appearing as a source or
+    * destination is ranked; dangling nodes (no out-edges) are allowed —
+    * their mass leaks, the standard simplification when the graph is made
+    * symmetric upstream. Returns (`node`, `rank` in 1e-12 mass units), the
+    * rounds run, and the last round's moved mass.
+    *
+    * `warm = None` is a cold start: every node enters at the uniform init.
+    * `warm = Some(committed)` is the INCREMENTAL form: surviving nodes
+    * enter at their committed rank, new nodes at the init. The damped
+    * iteration is a contraction toward a unique fixpoint, so the start
+    * only changes how many rounds it takes — after a small delta the
+    * committed ranks are already close (measured in `GraphScaleProbe`: the
+    * 10⁻³-mass residual a cold start reaches in 8 rounds is reached warm
+    * in 2-3 on a 1% edge delta), and each round is a full E⋈V pass.
+    *
+    * `tolMass = None` runs exactly `rounds` rounds with no residual job
+    * (the moved mass is reported as `Long.MaxValue`, unmeasured).
+    * `tolMass = Some(t)` measures the per-round L1 movement
+    * (`sum |rank_k − rank_{k−1}|`, exact integer — one extra V-sized
+    * aggregate per round) and exits early once it is ≤ t; `rounds` still
+    * caps the job DAG. `Some(0)` exits only at the exact integer fixpoint,
+    * where further rounds are the identity — bit-invisible, so an oracle
+    * can unroll exactly `rounds` rounds. `GraphSpec` bounds the warm/cold
+    * L1 gap by the contraction argument (≤ moved·d/(1−d) at exit).
     */
-  private def iterate(eDeg: DataFrame, iterations: Int,
-                      checkpointEvery: Int, rankParts: Int): DataFrame = {
+  def pageRank(edges: RankEdges, rounds: Int,
+               warm: Option[DataFrame] = None,
+               tolMass: Option[Long] = None): (DataFrame, Int, Long) = {
+    val (eDeg, parts) = (edges.eDeg, edges.parts)
     val nodes = localCheckpointPreserving(
       eDeg.select(col("src").as("node"))
         .union(eDeg.select(col("dst").as("node"))).distinct())
@@ -142,75 +217,57 @@ object Graph {
     val init = TotalMass / n
     val base = (TotalMass - DampNum * TotalMass / DampDen) / n
 
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (k <- 1 to iterations) {
-      ranks = prRound(eDeg, nodes, base, ranks)
-      if (k % checkpointEvery == 0 && k < iterations)
-        // preserving checkpoint AT THE EDGE FRAME'S WIDTH: with BOTH join
-        // children already hashpartitioned at the same count, the round's
-        // E⋈V join plans with no exchange on either side (co-partitioning
-        // is only accepted when no side needs a shuffle — otherwise
-        // EnsureRequirements re-widens everything to the session default)
-        ranks = localCheckpointPreserving(
-          ranks.repartition(rankParts, col("node")))
+    // preserving checkpoint AT THE EDGE FRAME'S WIDTH: with BOTH join
+    // children already hashpartitioned at the same count, the next round's
+    // E⋈V join (and the residual join) plans with no exchange on either
+    // side (co-partitioning is only accepted when no side needs a shuffle
+    // — otherwise EnsureRequirements re-widens everything to the session
+    // default)
+    def cut(ranks: DataFrame): DataFrame =
+      localCheckpointPreserving(ranks.repartition(parts, col("node")))
+
+    // departed nodes drop out via the inner node set — their mass is
+    // re-normalized by the contraction over the following rounds
+    var ranks = warm.fold(nodes.withColumn("rank", lit(init))) { w =>
+      cut(nodes
+        .join(w.select(col("node"), col("rank").as("__warm")), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__warm"), lit(init)).as("rank")))
     }
-    ranks
+    var done = 0
+    var moved = Long.MaxValue
+    while (done < rounds && tolMass.forall(moved > _)) {
+      val next = prRound(eDeg, nodes, base, ranks)
+      done += 1
+      // the one checkpoint rule: cut every round whose result is read
+      // again — by the next round or by the residual job below
+      val kept = if (done < rounds || tolMass.isDefined) cut(next) else next
+      if (tolMass.isDefined)
+        moved = kept.join(ranks.select(col("node"), col("rank").as("__prev")),
+            Seq("node"))
+          .agg(sum(abs(col("rank") - col("__prev")))).head().getLong(0)
+      ranks = kept
+    }
+    (ranks, done, moved)
   }
 
-  /** [[pageRank]] over a COMMITTED `bucketBy(src)` edge table — the
-    * cluster layout the plain path's doc promises: the degree-annotated
-    * edge list lands ONCE as a bucketed+sorted table, and every
-    * iteration's E⋈V join then reads it with NO exchange on the edge
-    * side (the scan's `HashPartitioning(src)` satisfies the join's
-    * distribution; only the V-sized rank frame moves per round — the
-    * same split `star_bucketed_disk` makes for the fact⋈dim join). The
-    * per-round shuffle footprint drops from E+V to V — at a 100-TB edge
-    * list that E-shuffle × 10 rounds is the whole cost of the operator.
-    * Results are bit-identical to [[pageRank]] on the same edges (same
-    * [[prRound]] fixed-point arithmetic; join strategy cannot change
-    * integer sums), so the twin shares its oracle. Build once / iterate
-    * many: `reuseExisting = true` skips the commit when the table is
-    * already in the catalog (the bench's memoized-fixture shape).
+  /** One power-iteration round — the oracle replays
+    * (`SparkEntry.pageRankOracleSql`) depend on these exact expressions.
+    * The zero-contribution union keeps receive-nothing nodes (sources that
+    * are never a destination) alive at the base rank WITHOUT a second
+    * join: one equi-join + one map-side-combining sum per round is the
+    * whole shuffle footprint.
     */
-  def pageRankBucketed(spark: SparkSession, edges: DataFrame, outDir: String,
-                       iterations: Int = 10, buckets: Int = 8,
-                       table: String = "graph_edges_bkt",
-                       reuseExisting: Boolean = false): DataFrame =
-    iterate(bucketedEdgeTable(spark, edges, outDir, buckets, table,
-      reuseExisting), iterations, checkpointEvery = 2, rankParts = buckets)
-
-  /** Commit (or reuse) the degree-annotated `bucketBy(src)+sortBy` edge
-    * table and return its scan — the shared E-side of [[pageRankBucketed]]
-    * and [[pageRankWarmStartBucketed]]. `reuseExisting` trusts a
-    * catalog hit ONLY when the committed table's location is the one this
-    * call would write (`outDir/table`): a same-named table committed for a
-    * DIFFERENT dir in the same session (the multi-scale sweep pattern)
-    * would otherwise be silently iterated, returning ranks for the wrong
-    * graph — on mismatch the table is rebuilt in place.
-    */
-  private def bucketedEdgeTable(spark: SparkSession, edges: DataFrame,
-                                outDir: String, buckets: Int, table: String,
-                                reuseExisting: Boolean): DataFrame = {
-    val loc = s"$outDir/$table"
-    def locationMatches: Boolean = {
-      val committed = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-      val wanted = graft.streaming.TableFs.fs(loc)
-        .makeQualified(new org.apache.hadoop.fs.Path(loc)).toUri
-      committed == wanted
-    }
-    if (!reuseExisting || !spark.catalog.tableExists(table) || !locationMatches) {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val e = edges.select(col("src"), col("dst"))
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      // EXTERNAL table under the caller's dir (the runBucketedStar
-      // precedent): survives catalog loss without LOCATION_ALREADY_EXISTS
-      e.join(deg, "src")
-        .write.bucketBy(buckets, "src").sortBy("src")
-        .option("path", loc)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(table)
-    }
-    spark.table(table)
+  private def prRound(eDeg: DataFrame, nodes: DataFrame, base: Long,
+                      ranks: DataFrame): DataFrame = {
+    val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
+      .select(eDeg("dst").as("node"),
+        call_function("div", col("rank"), col("outdeg")).as("contrib"))
+    contribs
+      .union(nodes.select(col("node"), lit(0L).as("contrib")))
+      .groupBy(col("node")).agg(sum(col("contrib")).as("s"))
+      .select(col("node"),
+        (lit(base) + call_function("div",
+          lit(DampNum) * col("s"), lit(DampDen))).as("rank"))
   }
 
   /** Commit the SPLIT bucketed layout — the O(delta)-refresh form of the
@@ -227,7 +284,7 @@ object Graph {
     * Both sides hash-partition on `src`, so the per-round
     * `edges ⋈ deg` join is EXCHANGE-FREE ON BOTH SIDES and the rank
     * join keeps the bucketed path's V-only shuffle — same per-round
-    * plan economics as [[pageRankBucketed]], same bit-identical
+    * plan economics as [[RankEdges.bucketed]], same bit-identical
     * [[prRound]] arithmetic, refresh cost now tracking the delta
     * (measured in `GraphScaleProbe`'s splitabsorb section).
     */
@@ -280,164 +337,6 @@ object Graph {
     merged.write.bucketBy(buckets, "src").sortBy("src")
       .option("path", loc)
       .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(s"${table}_d")
-  }
-
-  /** [[pageRankWarmStart]] iterating over the SPLIT committed layout:
-    * eDeg = `<table>_e ⋈ <table>_d` on `src` — zero exchange on both
-    * bucketed sides (plan-asserted) — materialized ONCE per refresh
-    * (`localCheckpoint`, the plain path's device) so every round
-    * iterates the in-memory frame instead of re-running the E-row merge
-    * join per round (measured 1.9× per-round overhead at 20M edges when
-    * left lazy — `GraphScaleProbe` splitabsorb). The refresh-time
-    * normalization cost is the trade for the O(delta) absorption: the
-    * monolithic layout refreshes at O(E) DISK re-commit but scans its
-    * denormalized table per round; the split layout refreshes at
-    * O(delta) disk + one exchange-free in-memory join. Bit-identical to
-    * the plain warm path on the same absorbed edge set (same
-    * [[prRound]] integers), so the twin shares the warm oracle.
-    */
-  def pageRankWarmStartSplit(spark: SparkSession, warmRanks: DataFrame,
-                             maxIterations: Int = 10,
-                             tolMass: Long = TotalMass / 1000,
-                             table: String = "graph_edges_split"): (DataFrame, Int, Long) =
-    warmIterate(
-      // preserving checkpoint: the bucketed-join output keeps its
-      // HashPartitioning(src, buckets), so no round re-exchanges E
-      localCheckpointPreserving(
-        spark.table(s"${table}_e").join(spark.table(s"${table}_d"), "src")),
-      warmRanks, maxIterations, tolMass,
-      rankParts = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_e"))
-        .bucketSpec.map(_.numBuckets)
-        .getOrElse(spark.sessionState.conf.numShufflePartitions))
-
-  /** [[purchaseRankWarmFrom]] over the split absorbed tables. */
-  def purchaseRankWarmFromSplit(spark: SparkSession,
-                                committedRanks: DataFrame,
-                                warmIterations: Int = 3,
-                                table: String = "graph_edges_split"): DataFrame = {
-    val (ranks, _, _) = pageRankWarmStartSplit(spark, committedRanks,
-      maxIterations = warmIterations, tolMass = 0L, table = table)
-    ranks.select(kindDecode: _*)
-  }
-
-  /** One power-iteration round (shared by [[pageRank]] and
-    * [[pageRankWarmStart]] — the cold path's bit-exact oracle replay
-    * depends on these exact expressions). The zero-contribution union
-    * keeps receive-nothing nodes (sources that are never a destination)
-    * alive at the base rank WITHOUT a second join: one equi-join + one
-    * map-side-combining sum per round is the whole shuffle footprint.
-    */
-  private[graft] def prRound(eDeg: DataFrame, nodes: DataFrame, base: Long,
-                             ranks: DataFrame): DataFrame = {
-    val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
-      .select(eDeg("dst").as("node"),
-        call_function("div", col("rank"), col("outdeg")).as("contrib"))
-    contribs
-      .union(nodes.select(col("node"), lit(0L).as("contrib")))
-      .groupBy(col("node")).agg(sum(col("contrib")).as("s"))
-      .select(col("node"),
-        (lit(base) + call_function("div",
-          lit(DampNum) * col("s"), lit(DampDen))).as("rank"))
-  }
-
-  /** INCREMENTAL PageRank: absorb an edge delta by re-running the same
-    * fixed-point iteration from the COMMITTED ranks as warm start, with
-    * early exit on residual mass. The damped iteration is a contraction
-    * toward a unique fixpoint, so where it starts only changes how many
-    * rounds it takes to get there — and after a small delta the committed
-    * ranks are already close, so the warm run exits in a fraction of the
-    * cold round count (measured in `GraphScaleProbe`: the 10⁻³-mass
-    * residual that costs a cold start 8 rounds is reached warm in 2-3 on
-    * a 1% edge delta). That round count IS the cost: each round is the
-    * full two-shuffle E⋈V pass, so at 100 TB re-ranking on every crawl
-    * increment at cold cost would dominate the pipeline.
-    *
-    * Mechanics: surviving nodes enter at their committed rank, new nodes
-    * at the uniform init; each round then runs the identical integer
-    * arithmetic as [[pageRank]] ([[prRound]]), so the result lands on the
-    * same fixpoint orbit the cold run converges to (`GraphSpec` bounds the
-    * L1 gap by the contraction argument: distance ≤ moved·d/(1−d) at
-    * exit). The per-round L1 movement (`sum |rank_k − rank_{k−1}|`, exact
-    * integer) doubles as the convergence probe — one extra V-sized
-    * aggregate per round, the price of adaptivity the fixed-round batch
-    * form deliberately refuses. Early exit keeps the job DAG bounded:
-    * `maxIterations` caps it regardless of the tolerance.
-    *
-    * Returns (ranks, roundsRun, finalMovedMass).
-    */
-  def pageRankWarmStart(edges: DataFrame, warmRanks: DataFrame,
-                        maxIterations: Int = 10,
-                        tolMass: Long = TotalMass / 1000): (DataFrame, Int, Long) = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val (eDeg, parts) = partitionEdgeFrame(e.join(deg, "src"))
-    Par.release(e) // as in pageRank: eDeg is checkpointed, e's copy of E can go
-    warmIterate(eDeg, warmRanks, maxIterations, tolMass, parts)
-  }
-
-  /** [[pageRankWarmStart]] iterating over the COMMITTED `bucketBy(src)`
-    * edge table ([[pageRankBucketed]]'s layout, built or reused here via
-    * the same location-validated seam) — the production refresh shape
-    * where the two wins COMPOUND: the warm start cuts the ROUND COUNT
-    * (2-3 rounds on a small delta instead of the cold 8-10) and the
-    * bucketed scan cuts the PER-ROUND shuffle from E+V to V (no exchange
-    * on the edge side of any round's E⋈V join). Bit-identical to
-    * [[pageRankWarmStart]] on the same edges — same [[prRound]] integer
-    * arithmetic, join strategy cannot change integer sums — so the twin
-    * shares the warm oracle. Note the delta-absorption lifecycle implies
-    * re-committing the edge table per refresh (the delta changes E and
-    * the out-degrees); that append-shaped write is O(E) once per refresh
-    * vs O(E) shuffle per ROUND saved — the trade documented at
-    * BASELINE.md's warm-rank rows.
-    */
-  def pageRankWarmStartBucketed(spark: SparkSession, edges: DataFrame,
-                                outDir: String, warmRanks: DataFrame,
-                                maxIterations: Int = 10,
-                                tolMass: Long = TotalMass / 1000,
-                                buckets: Int = 8,
-                                table: String = "graph_edges_bkt",
-                                reuseExisting: Boolean = false): (DataFrame, Int, Long) =
-    warmIterate(bucketedEdgeTable(spark, edges, outDir, buckets, table,
-      reuseExisting), warmRanks, maxIterations, tolMass, rankParts = buckets)
-
-  /** The shared warm fixed-point loop over an already degree-annotated
-    * edge frame — the same seam [[iterate]] is for the cold path. */
-  private def warmIterate(eDeg: DataFrame, warmRanks: DataFrame,
-                          maxIterations: Int, tolMass: Long,
-                          rankParts: Int): (DataFrame, Int, Long) = {
-    val nodes = localCheckpointPreserving(
-      eDeg.select(col("src").as("node"))
-        .union(eDeg.select(col("dst").as("node"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "pageRankWarmStart on an empty edge list")
-    val init = TotalMass / n
-    val base = (TotalMass - DampNum * TotalMass / DampDen) / n
-
-    // surviving nodes carry their committed rank; new nodes enter uniform.
-    // (Departed nodes drop out via the inner node set — their mass is
-    // re-normalized by the contraction over the following rounds.)
-    var ranks = localCheckpointPreserving(nodes
-      .join(warmRanks.select(col("node"), col("rank").as("__warm")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("__warm"), lit(init)).as("rank"))
-      .repartition(rankParts, col("node")))
-    var rounds = 0
-    var moved = Long.MaxValue
-    while (rounds < maxIterations && moved > tolMass) {
-      // eager cut per round: the residual aggregate re-reads both frames,
-      // so materializing `next` costs nothing extra and keeps plans O(1)
-      // co-partitioned at the edge width (see iterate): the next round's
-      // join AND the residual join below both go exchange-free
-      val next = localCheckpointPreserving(
-        prRound(eDeg, nodes, base, ranks).repartition(rankParts, col("node")))
-      moved = next.join(ranks.select(col("node"), col("rank").as("__prev")),
-          Seq("node"))
-        .agg(sum(abs(col("rank") - col("__prev")))).head().getLong(0)
-      ranks = next
-      rounds += 1
-    }
-    (ranks, rounds, moved)
   }
 
   /** Triangle census of an undirected graph — the graph-quality metric
@@ -606,40 +505,17 @@ object Graph {
   }
 
   /** The purchase graph: customer c and supplier s are linked iff some
-    * order of c contains a line item supplied by s. Node ids are
-    * namespaced into one long space — customers even (`2*custkey`),
-    * suppliers odd (`2*suppkey+1`). Made SYMMETRIC (both directions per
-    * link) so the bipartite graph has no dangling nodes and rank flows
-    * both ways — the co-purchase prominence prior.
+    * order of c passing the `orders` predicate contains a line item
+    * supplied by s. Node ids are namespaced into one long space —
+    * customers even (`2*custkey`), suppliers odd (`2*suppkey+1`). Made
+    * SYMMETRIC (both directions per link) so the bipartite graph has no
+    * dangling nodes and rank flows both ways — the co-purchase prominence
+    * prior. A predicate selecting a deterministic subset of orders gives
+    * the "committed crawl" an incremental re-rank warm-starts from.
     */
-  def purchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val links = o.join(l, o("o_orderkey") === l("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    links.union(links.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** The registered query: rank the purchase graph, return every node with
-    * its kind decoded and its original key — totally ordered downstream by
-    * (rank desc, node) for a deterministic top list.
-    */
-  def purchaseRank(spark: SparkSession, dir: String,
-                   iterations: Int = 10): DataFrame =
-    pageRank(purchaseEdges(spark, dir), iterations)
-      .select(kindDecode: _*)
-
-  /** [[purchaseEdges]] restricted to a deterministic subset of orders —
-    * the "committed crawl" the incremental-rank demo warm-starts from.
-    * (`o_orderkey % 10 <> 0` keeps ~90% of the links; the delta back to
-    * the full graph adds edges AND brand-new nodes, exercising both warm
-    * paths.)
-    */
-  def basePurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .filter(pmod(col("o_orderkey"), lit(10L)) =!= 0)
+  def purchaseEdges(spark: SparkSession, dir: String,
+                    orders: Column = lit(true)): DataFrame = {
+    val o = Tables.orders(spark, dir).filter(orders)
       .select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
     val links = o.join(l, o("o_orderkey") === l("l_orderkey"))
@@ -649,53 +525,6 @@ object Graph {
     links.union(links.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** The registered INCREMENTAL-rank query: cold-converge the base
-    * (90%-of-orders) purchase graph, then absorb the remaining orders'
-    * edge delta via [[pageRankWarmStart]] with a FIXED warm budget and
-    * `tolMass = 0`. Exactly replayable: early exit at tolMass=0 fires
-    * only at the exact integer fixpoint, where further rounds are the
-    * identity — so the result is bit-identical to running precisely
-    * `warmIterations` rounds, which the DuckDB oracle unrolls. The point
-    * being demonstrated (and probed at 40M edges in GraphScaleProbe): a
-    * small delta re-ranks in 2-3 warm rounds instead of the cold 8-10.
-    */
-  def purchaseRankWarm(spark: SparkSession, dir: String,
-                       coldIterations: Int = 6,
-                       warmIterations: Int = 3): DataFrame =
-    purchaseRankWarmFrom(spark, dir,
-      pageRank(basePurchaseEdges(spark, dir), coldIterations),
-      warmIterations)
-
-  /** The warm-start phase alone, from already-committed base ranks —
-    * the production shape: the converged base lives in a table, only
-    * the delta absorption runs per refresh. Callers that re-rank
-    * repeatedly (and the bench) pass the committed ranks in instead of
-    * re-converging the cold base every time.
-    */
-  def purchaseRankWarmFrom(spark: SparkSession, dir: String,
-                           committedRanks: DataFrame,
-                           warmIterations: Int = 3): DataFrame = {
-    val (ranks, _, _) = pageRankWarmStart(purchaseEdges(spark, dir),
-      committedRanks, maxIterations = warmIterations, tolMass = 0L)
-    ranks.select(kindDecode: _*)
-  }
-
-  /** [[purchaseRankWarmFrom]] over the committed bucketed edge table —
-    * both production wins at once (fewer rounds × exchange-free rounds;
-    * see [[pageRankWarmStartBucketed]]). Bit-identical to the plain warm
-    * path, so it shares the unrolled warm oracle.
-    */
-  def purchaseRankWarmFromBucketed(spark: SparkSession, dir: String,
-                                   outDir: String, committedRanks: DataFrame,
-                                   warmIterations: Int = 3,
-                                   table: String = "graph_edges_bkt"): DataFrame = {
-    val (ranks, _, _) = pageRankWarmStartBucketed(spark,
-      purchaseEdges(spark, dir), outDir, committedRanks,
-      maxIterations = warmIterations, tolMass = 0L,
-      table = table, reuseExisting = true)
-    ranks.select(kindDecode: _*)
-  }
-
   /** Decode the even/odd node-id namespace back to (kind, entity_key). */
   private[graft] def kindDecode: Seq[Column] = Seq(
     when(col("node") % 2 === 0, lit("customer"))
@@ -703,3 +532,4 @@ object Graph {
     call_function("div", col("node"), lit(2L)).as("entity_key"),
     col("rank"))
 }
+

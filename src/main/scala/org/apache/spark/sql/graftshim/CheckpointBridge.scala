@@ -18,9 +18,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * checkpoint REACQUIRES an exchange (and a sort) at every downstream
   * join, once per consumer. The round-21 plan dumps caught exactly this
   * in the PageRank fixed-point loop: the supposedly partition-carrying
-  * edge checkpoint was re-exchanged every round
-  * (`plans/r21/graph_pagerank_before.txt`, Exchange (2)/(6) over
-  * `Scan ExistingRDD ... UnknownPartitioning(0)`).
+  * edge checkpoint was re-exchanged every round (an Exchange over
+  * `Scan ExistingRDD ... UnknownPartitioning(0)`); `GraphSpec`'s
+  * plan-shape test now asserts every edge source's rounds stay
+  * exchange-free.
   *
   * [[localCheckpointPreserving]] re-implements the checkpoint with the
   * same mechanics (`toRdd.map(_.copy())`, `localCheckpoint`, eager

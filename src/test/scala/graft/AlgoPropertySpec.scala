@@ -92,7 +92,7 @@ object AlgoPropertySpec extends Properties("graft-algo") {
   property("fixed-point pagerank tracks the floating-point definition") =
     forAll(graphGen) { edges =>
       import graft.operators.Graph
-      val got = Graph.pageRank(edges.toDF("src", "dst"), 10)
+      val got = Graph.pageRank(Graph.RankEdges.inMemory(edges.toDF("src", "dst")), 10)._1
         .as[(Long, Long)].collect().toMap
         .map { case (n, r) => n -> r.toDouble / Graph.TotalMass }
       // driver-side reference: the same damped iteration in Doubles

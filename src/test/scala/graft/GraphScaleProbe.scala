@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Graph
+import graft.operators.Graph.RankEdges
+
 /** Scale probe behind the BASELINE.md "PageRank" row: per-round cost must
   * be linear in |E| and independent of the round count's position (no
   * lineage creep). Synthetic near-uniform directed graph with planted
@@ -10,6 +13,8 @@ import org.apache.spark.sql.functions._
 object GraphScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = Session(32)
+    // the residual tolerance the convergence sections run to
+    val tol = Some(Graph.TotalMass / 1000)
 
     def graph(e: Long) = {
       val v = e / 10
@@ -25,8 +30,8 @@ object GraphScaleProbe {
         .localCheckpoint(true)
     }
 
-    // section filter (comma list of cold,warm,bucketed,warmbkt) so a
-    // targeted re-measure does not pay for the whole sweep
+    // section filter (comma list of cold,warm,bucketed,warmbkt,splitabsorb)
+    // so a targeted re-measure does not pay for the whole sweep
     val sections = sys.env.get("GRAPH_PROBE_SECTIONS").map(_.split(',').toSet)
     def enabled(name: String): Boolean = sections.forall(_.contains(name))
 
@@ -37,32 +42,31 @@ object GraphScaleProbe {
       val ne = g.count()
       for (iters <- Seq(5, 10); pass <- 1 to 2) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Graph.pageRank(g, iters).count()
+        val n = Graph.pageRank(RankEdges.inMemory(g), iters)._1.count()
         println(f"[graph-scale] E=$ne iters=$iters pass=$pass nodes=$n " +
           f"${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     }
 
     // incremental warm start: the round-count savings claim behind
-    // Graph.pageRankWarmStart — cold-converge the base graph, add a ~1%
+    // warm Graph.pageRank — cold-converge the base graph, add a ~1%
     // edge delta, and compare the rounds (= full E⋈V passes) a cold rerun
     // needs against the warm restart from the committed ranks, at the same
     // residual tolerance
     if (enabled("warm")) {
       val e = 2000000L
       val g = graph(e)
-      val noWarm = spark.range(0).selectExpr("id AS node", "id AS rank")
-      val (ranks0, r0, _) = graft.operators.Graph.pageRankWarmStart(g, noWarm, 40)
+      val (ranks0, r0, _) = Graph.pageRank(RankEdges.inMemory(g), 40, None, tol)
       val delta = spark.range(e / 100).select(
         pmod(xxhash64(col("id") + 7), lit(e / 10)).as("src"),
         pmod(xxhash64(col("id") + 13), lit(100L)).as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
       val g2 = g.union(delta).distinct().localCheckpoint(true)
       val t0 = System.nanoTime()
-      val (_, rCold, _) = graft.operators.Graph.pageRankWarmStart(g2, noWarm, 40)
+      val (_, rCold, _) = Graph.pageRank(RankEdges.inMemory(g2), 40, None, tol)
       val tCold = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val (_, rWarm, _) = graft.operators.Graph.pageRankWarmStart(g2, ranks0, 40)
+      val (_, rWarm, _) = Graph.pageRank(RankEdges.inMemory(g2), 40, Some(ranks0), tol)
       val tWarm = (System.nanoTime() - t1) / 1e9
       println(f"[graph-scale] warm-start: base converged in $r0 rounds; " +
         f"1%% delta cold=$rCold rounds ($tCold%.2f s) warm=$rWarm rounds ($tWarm%.2f s)")
@@ -77,18 +81,16 @@ object GraphScaleProbe {
       val g = graph(e)
       val dir = java.nio.file.Files.createTempDirectory("graft-prbkt").toString
       val tB = System.nanoTime()
-      graft.operators.Graph.pageRankBucketed(spark, g, dir, iterations = 0,
-        buckets = 32, table = "graph_probe_bkt")
+      RankEdges.bucketed(spark, g, dir, buckets = 32, table = "graph_probe_bkt")
       println(f"[graph-scale] bucketed edge-table build (once): " +
         f"${(System.nanoTime() - tB) / 1e9}%.2f s")
       for (pass <- 1 to 2) {
         val t0 = System.nanoTime()
-        graft.operators.Graph.pageRank(g, 10).count()
+        Graph.pageRank(RankEdges.inMemory(g), 10)._1.count()
         val plain = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        graft.operators.Graph.pageRankBucketed(spark, g, dir, 10,
-          buckets = 32, table = "graph_probe_bkt", reuseExisting = true)
-          .count()
+        Graph.pageRank(RankEdges.bucketed(spark, g, dir, buckets = 32,
+          table = "graph_probe_bkt", reuseExisting = true), 10)._1.count()
         val bkt = (System.nanoTime() - t1) / 1e9
         println(f"[graph-scale] E=$e pass=$pass 10 rounds: " +
           f"plain=$plain%.2f s bucketed=$bkt%.2f s (per-round " +
@@ -106,9 +108,8 @@ object GraphScaleProbe {
     if (enabled("warmbkt")) {
       val e = sys.env.getOrElse("GRAPH_PROBE_BUCKETED_E", "20000000").toLong
       val g = graph(e)
-      val noWarm = spark.range(0).selectExpr("id AS node", "id AS rank")
       val tBase = System.nanoTime()
-      val (ranks0, r0, _) = graft.operators.Graph.pageRankWarmStart(g, noWarm, 40)
+      val (ranks0, r0, _) = Graph.pageRank(RankEdges.inMemory(g), 40, None, tol)
       val ranksC = ranks0.localCheckpoint(true)
       println(f"[graph-scale] warmbkt: base E=$e converged in $r0 rounds " +
         f"(${(System.nanoTime() - tBase) / 1e9}%.2f s)")
@@ -123,20 +124,19 @@ object GraphScaleProbe {
       // catches up
       g.unpersist(blocking = false)
       val t0 = System.nanoTime()
-      val (_, rCold, _) = graft.operators.Graph.pageRankWarmStart(g2, noWarm, 40)
+      val (_, rCold, _) = Graph.pageRank(RankEdges.inMemory(g2), 40, None, tol)
       val tCold = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val (_, rWarm, _) = graft.operators.Graph.pageRankWarmStart(g2, ranksC, 40)
+      val (_, rWarm, _) = Graph.pageRank(RankEdges.inMemory(g2), 40, Some(ranksC), tol)
       val tWarm = (System.nanoTime() - t1) / 1e9
       val dir = java.nio.file.Files.createTempDirectory("graft-prwbkt").toString
       val t2 = System.nanoTime()
-      val (_, rWb1, _) = graft.operators.Graph.pageRankWarmStartBucketed(
-        spark, g2, dir, ranksC, 40, table = "graph_probe_bkt_warm")
+      val (_, rWb1, _) = Graph.pageRank(RankEdges.bucketed(spark, g2, dir,
+        table = "graph_probe_bkt_warm"), 40, Some(ranksC), tol)
       val tWb1 = (System.nanoTime() - t2) / 1e9
       val t3 = System.nanoTime()
-      val (_, rWb2, _) = graft.operators.Graph.pageRankWarmStartBucketed(
-        spark, g2, dir, ranksC, 40, table = "graph_probe_bkt_warm",
-        reuseExisting = true)
+      val (_, rWb2, _) = Graph.pageRank(RankEdges.bucketed(spark, g2, dir,
+        table = "graph_probe_bkt_warm", reuseExisting = true), 40, Some(ranksC), tol)
       val tWb2 = (System.nanoTime() - t3) / 1e9
       println(f"[graph-scale] warmbkt E=$e 1%% delta: cold-plain=$rCold rounds " +
         f"($tCold%.2f s), warm-plain=$rWarm rounds ($tWarm%.2f s), " +
@@ -153,8 +153,7 @@ object GraphScaleProbe {
     if (enabled("splitabsorb")) {
       val e = sys.env.getOrElse("GRAPH_PROBE_BUCKETED_E", "20000000").toLong
       val g = graph(e)
-      val noWarm = spark.range(0).selectExpr("id AS node", "id AS rank")
-      val (ranks0, r0, _) = graft.operators.Graph.pageRankWarmStart(g, noWarm, 40)
+      val (ranks0, r0, _) = Graph.pageRank(RankEdges.inMemory(g), 40, None, tol)
       val ranksC = ranks0.localCheckpoint(true)
       val delta = spark.range(e / 100).select(
         pmod(xxhash64(col("id") + 7), lit(e / 10)).as("src"),
@@ -165,11 +164,11 @@ object GraphScaleProbe {
       val dir = java.nio.file.Files.createTempDirectory("graft-prsplit").toString
       val tSeed = System.nanoTime()
       val buckets = sys.env.getOrElse("GRAPH_PROBE_BUCKETS", "32").toInt
-      graft.operators.Graph.commitSplitEdgeTables(spark, g, dir,
+      Graph.commitSplitEdgeTables(spark, g, dir,
         buckets = buckets, table = "graph_probe_split")
       val tCommit = (System.nanoTime() - tSeed) / 1e9
       val t0 = System.nanoTime()
-      graft.operators.Graph.absorbEdgeDelta(spark, delta, "graph_probe_split")
+      Graph.absorbEdgeDelta(spark, delta, "graph_probe_split")
       val tAbsorb = (System.nanoTime() - t0) / 1e9
       // the monolithic comparison term: what a refresh costs when the
       // degree-denormalized table must re-commit at O(E)
@@ -177,20 +176,20 @@ object GraphScaleProbe {
       g.unpersist(blocking = false)
       val dir2 = java.nio.file.Files.createTempDirectory("graft-prmono").toString
       val t1 = System.nanoTime()
-      graft.operators.Graph.pageRankBucketed(spark, g2, dir2, 0,
-        buckets = buckets, table = "graph_probe_mono")
+      RankEdges.bucketed(spark, g2, dir2, buckets = buckets,
+        table = "graph_probe_mono")
       val tMono = (System.nanoTime() - t1) / 1e9
       val t2 = System.nanoTime()
-      val (_, rS, _) = graft.operators.Graph.pageRankWarmStartSplit(spark,
-        ranksC, 40, table = "graph_probe_split")
+      val (_, rS, _) = Graph.pageRank(RankEdges.split(spark, "graph_probe_split"),
+        40, Some(ranksC), tol)
       val tWarmSplit = (System.nanoTime() - t2) / 1e9
       // the monolithic steady state at the SAME scale, for the honest
       // side-by-side: cheaper rounds (denormalized scan) bought by the
       // O(E) re-commit per refresh timed above
       val t3 = System.nanoTime()
-      val (_, rM, _) = graft.operators.Graph.pageRankWarmStartBucketed(
-        spark, g2, dir2, ranksC, 40, table = "graph_probe_mono",
-        reuseExisting = true)
+      val (_, rM, _) = Graph.pageRank(RankEdges.bucketed(spark, g2, dir2,
+        buckets = buckets, table = "graph_probe_mono", reuseExisting = true),
+        40, Some(ranksC), tol)
       val tWarmMono = (System.nanoTime() - t3) / 1e9
       println(f"[graph-scale] splitabsorb E=$e 1%% delta: base commit " +
         f"(once)=$tCommit%.2f s; absorb O(delta)=$tAbsorb%.2f s vs " +

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
+import graft.operators.Graph.RankEdges
 
 /** Fixed-point PageRank semantics: mass conservation up to floor loss,
   * limit behavior on analytically-solvable graphs, determinism across
@@ -13,7 +14,7 @@ class GraphSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ranksOf(edges: Seq[(Long, Long)], iters: Int = 10): Map[Long, Long] =
-    Graph.pageRank(edges.toDF("src", "dst"), iters)
+    Graph.pageRank(RankEdges.inMemory(edges.toDF("src", "dst")), iters)._1
       .as[(Long, Long)].collect().toMap
 
   test("symmetric pair splits the mass exactly in half") {
@@ -58,35 +59,35 @@ class GraphSpec extends AnyFunSuite {
   test("identical ranks regardless of input partitioning") {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
     val edges = und ++ und.map(_.swap)
-    val one = Graph.pageRank(edges.toDF("src", "dst").coalesce(1))
+    val one = Graph.pageRank(RankEdges.inMemory(edges.toDF("src", "dst").coalesce(1)), 10)._1
       .as[(Long, Long)].collect().toMap
-    val many = Graph.pageRank(edges.toDF("src", "dst").repartition(7))
+    val many = Graph.pageRank(RankEdges.inMemory(edges.toDF("src", "dst").repartition(7)), 10)._1
       .as[(Long, Long)].collect().toMap
     assert(one == many)
   }
 
   test("warm-started PageRank absorbs an edge delta in fewer rounds, landing on the cold fixpoint") {
-    import graft.operators.Graph
     // a 200-node directed ring with 10 hub shortcuts — enough structure
     // that convergence to the 1e-3-mass tolerance takes several rounds
     val ring = (0L until 200L).map(i => (i, (i + 1) % 200))
     val hubs = (0L until 200L by 20).map(i => (i, 7L))
     val edges1 = (ring ++ hubs).distinct
     val noWarm = Seq.empty[(Long, Long)].toDF("node", "rank")
+    def warmStart(edges: Seq[(Long, Long)], warm: org.apache.spark.sql.DataFrame) =
+      Graph.pageRank(RankEdges.inMemory(edges.toDF("src", "dst")), 40, Some(warm),
+        Some(Graph.TotalMass / 1000))
 
-    val (ranks1, _, _) = Graph.pageRankWarmStart(edges1.toDF("src", "dst"), noWarm, maxIterations = 40)
+    val (ranks1, _, _) = warmStart(edges1, noWarm)
 
     // warm start on the UNCHANGED graph: already at the fixpoint orbit —
     // the probe round confirms and exits at once
-    val (_, roundsNoop, _) = Graph.pageRankWarmStart(edges1.toDF("src", "dst"), ranks1, maxIterations = 40)
+    val (_, roundsNoop, _) = warmStart(edges1, ranks1)
     assert(roundsNoop <= 2, s"restart at the fixpoint must exit fast, took $roundsNoop")
 
     // absorb a small delta: two new shortcut edges + one new node
     val edges2 = edges1 ++ Seq((13L, 99L), (42L, 200L), (200L, 0L))
-    val (cold, roundsCold, movedCold) =
-      Graph.pageRankWarmStart(edges2.toDF("src", "dst"), noWarm, maxIterations = 40)
-    val (warm, roundsWarm, movedWarm) =
-      Graph.pageRankWarmStart(edges2.toDF("src", "dst"), ranks1, maxIterations = 40)
+    val (cold, roundsCold, movedCold) = warmStart(edges2, noWarm)
+    val (warm, roundsWarm, movedWarm) = warmStart(edges2, ranks1)
     info(s"cold=$roundsCold rounds, warm=$roundsWarm rounds")
     assert(roundsWarm < roundsCold,
       s"warm start must save rounds: warm=$roundsWarm cold=$roundsCold")
@@ -171,7 +172,8 @@ class GraphSpec extends AnyFunSuite {
 
   test("purchase graph namespaces customers even / suppliers odd") {
     val dir = "/root/testdata/sf0.001"
-    val kinds = Graph.purchaseRank(spark, dir)
+    val kinds = Graph.pageRank(RankEdges.inMemory(Graph.purchaseEdges(spark, dir)), 10)._1
+      .select(Graph.kindDecode: _*)
       .groupBy("kind").count().as[(String, Long)].collect().toMap
     assert(kinds.keySet == Set("customer", "supplier"))
     assert(kinds("customer") > kinds("supplier"),
@@ -182,25 +184,14 @@ class GraphSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-prbkt").toString
     val und = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 1L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val plain = Graph.pageRank(edges, 10).as[(Long, Long)].collect().toMap
-    val bkt = Graph.pageRankBucketed(spark, edges, dir, 10,
-      table = "graph_edges_bkt_spec")
+    val plain = Graph.pageRank(RankEdges.inMemory(edges), 10)._1
+      .as[(Long, Long)].collect().toMap
+    val bkt = Graph.pageRank(RankEdges.bucketed(spark, edges, dir,
+      table = "graph_edges_bkt_spec"), 10)._1
     assert(bkt.as[(Long, Long)].collect().toMap == plain,
       "join strategy must not change the fixed-point integers")
-    // the per-round E⋈V join must need NO exchange on the committed
-    // bucketed edge side: a shuffle keyed by src would be the E-sized
-    // per-round cost the layout exists to remove (the rank-frame and
-    // aggregate exchanges are keyed by node)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val round = Graph.pageRankBucketed(spark, edges, dir, 1,
-        table = "graph_edges_bkt_spec", reuseExisting = true)
-      round.collect()
-      val plan = round.queryExecution.executedPlan.toString
-      assert(!plan.contains("hashpartitioning(src"),
-        s"expected no exchange on the bucketed edge side:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    // the edge side's plan shape is asserted for every source below
+    // ("every edge source ...")
   }
 
   test("reuseExisting rebuilds when the committed table points at a different dir") {
@@ -211,15 +202,16 @@ class GraphSpec extends AnyFunSuite {
     // commit graph A at dirA, then ask for graph B at dirB WITH
     // reuseExisting — the multi-scale sweep pattern. A catalog-only check
     // would silently iterate graph A; the location guard must rebuild.
-    Graph.pageRankBucketed(spark, edgesA, dirA, 1, table = "graph_edges_bkt_loc")
-    val b = Graph.pageRankBucketed(spark, edgesB, dirB, 1,
-      table = "graph_edges_bkt_loc", reuseExisting = true)
-    val plainB = Graph.pageRank(edgesB, 1).as[(Long, Long)].collect().toMap
+    RankEdges.bucketed(spark, edgesA, dirA, table = "graph_edges_bkt_loc")
+    val b = Graph.pageRank(RankEdges.bucketed(spark, edgesB, dirB,
+      table = "graph_edges_bkt_loc", reuseExisting = true), 1)._1
+    val plainB = Graph.pageRank(RankEdges.inMemory(edgesB), 1)._1
+      .as[(Long, Long)].collect().toMap
     assert(b.as[(Long, Long)].collect().toMap == plainB,
       "stale same-named table for another dir must be rebuilt, not reused")
     // same dir + reuseExisting: the committed table IS reused (no rebuild)
-    val again = Graph.pageRankBucketed(spark, edgesB, dirB, 1,
-      table = "graph_edges_bkt_loc", reuseExisting = true)
+    val again = Graph.pageRank(RankEdges.bucketed(spark, edgesB, dirB,
+      table = "graph_edges_bkt_loc", reuseExisting = true), 1)._1
     assert(again.as[(Long, Long)].collect().toMap == plainB)
   }
 
@@ -228,33 +220,16 @@ class GraphSpec extends AnyFunSuite {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 1L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     // committed base: 4 cold rounds on a subgraph; warm-absorb the rest
-    val base = Graph.pageRank(edges.filter($"src" =!= 5L && $"dst" =!= 5L), 4)
-    val (plainWarm, rPlain, _) =
-      Graph.pageRankWarmStart(edges, base, maxIterations = 3, tolMass = 0L)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (bktWarm, rBkt, _) = Graph.pageRankWarmStartBucketed(spark, edges,
-        dir, base, maxIterations = 3, tolMass = 0L,
-        table = "graph_edges_bkt_warm_spec")
-      assert(rBkt == rPlain)
-      assert(bktWarm.as[(Long, Long)].collect().toMap ==
-        plainWarm.as[(Long, Long)].collect().toMap,
-        "the bucketed scan must not change the fixed-point integers")
-      // the warm loop checkpoints each round (the residual aggregate
-      // re-reads it), so the returned frame's plan is a checkpoint scan;
-      // assert exchange-freeness on the round itself: the E⋈V join over
-      // the committed bucketed table must need NO src-keyed exchange
-      val eDeg = spark.table("graph_edges_bkt_warm_spec")
-      val nodes = eDeg.select($"src".as("node"))
-        .union(eDeg.select($"dst".as("node"))).distinct()
-      val round = Graph.prRound(eDeg, nodes, 0L,
-        nodes.withColumn("rank", org.apache.spark.sql.functions.lit(1000L)))
-      round.collect()
-      val plan = round.queryExecution.executedPlan.toString
-      assert(!plan.contains("hashpartitioning(src"),
-        s"expected no exchange on the bucketed edge side:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    val base = Graph.pageRank(
+      RankEdges.inMemory(edges.filter($"src" =!= 5L && $"dst" =!= 5L)), 4)._1
+    val (plainWarm, rPlain, _) = Graph.pageRank(RankEdges.inMemory(edges), 3,
+      Some(base), Some(0L))
+    val (bktWarm, rBkt, _) = Graph.pageRank(RankEdges.bucketed(spark, edges,
+      dir, table = "graph_edges_bkt_warm_spec"), 3, Some(base), Some(0L))
+    assert(rBkt == rPlain)
+    assert(bktWarm.as[(Long, Long)].collect().toMap ==
+      plainWarm.as[(Long, Long)].collect().toMap,
+      "the bucketed scan must not change the fixed-point integers")
   }
 
   test("split-table delta absorption: append-only edges, merged degrees, bit-identical warm ranks, exchange-free eDeg join") {
@@ -288,31 +263,75 @@ class GraphSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(deg == expected, "degree merge must equal the full recompute")
     // warm restart over the absorbed tables: same rounds, same integers
-    val base = Graph.pageRank(baseEdges, 4)
-    val (plainWarm, rPlain, _) =
-      Graph.pageRankWarmStart(edges, base, maxIterations = 3, tolMass = 0L)
+    val base = Graph.pageRank(RankEdges.inMemory(baseEdges), 4)._1
+    val (plainWarm, rPlain, _) = Graph.pageRank(RankEdges.inMemory(edges), 3,
+      Some(base), Some(0L))
+    val (splitWarm, rSplit, _) = Graph.pageRank(
+      RankEdges.split(spark, "graph_split_spec"), 3, Some(base), Some(0L))
+    assert(rSplit == rPlain)
+    assert(splitWarm.as[(Long, Long)].collect().toMap ==
+      plainWarm.as[(Long, Long)].collect().toMap,
+      "the split absorbed layout must not change the fixed-point integers")
+  }
+
+  test("a warm start from an empty frame is the cold start") {
+    val edges = RankEdges.inMemory(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (4L, 5L), (5L, 1L), (2L, 6L)).toDF("src", "dst"))
+    val noWarm = Seq.empty[(Long, Long)].toDF("node", "rank")
+    val (cold, rCold, _) = Graph.pageRank(edges, 7)
+    val (warm, rWarm, _) = Graph.pageRank(edges, 7, Some(noWarm))
+    assert(rCold == 7 && rWarm == 7)
+    assert(warm.as[(Long, Long)].collect().toMap ==
+      cold.as[(Long, Long)].collect().toMap)
+  }
+
+  test("every edge source runs cold and warm rounds with no exchange on the edge side") {
+    import org.apache.spark.sql.execution.{InputAdapter, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case _ => p +: p.children.flatMap(planNodes)
+    }
+    def edgeCheckpoint(p: SparkPlan): Boolean = p match {
+      case InputAdapter(c) => edgeCheckpoint(c)
+      case r: RDDScanExec => r.output.map(_.name).contains("outdeg")
+      case _ => false
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-prplan").toString
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 1L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    Graph.commitSplitEdgeTables(spark, edges, dir, table = "graph_split_plan_spec")
+    val sources = Seq[(String, () => RankEdges)](
+      "inMemory" -> (() => RankEdges.inMemory(edges)),
+      "bucketed" -> (() => RankEdges.bucketed(spark, edges, dir,
+        table = "graph_edges_bkt_plan_spec", reuseExisting = true)),
+      "split" -> (() => RankEdges.split(spark, "graph_split_plan_spec")))
+    val committed = Graph.pageRank(RankEdges.inMemory(edges), 2)._1
+    // broadcast off: a broadcast E⋈V join would hide the co-partitioning
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val (splitWarm, rSplit, _) = Graph.pageRankWarmStartSplit(spark, base,
-        maxIterations = 3, tolMass = 0L, table = "graph_split_spec")
-      assert(rSplit == rPlain)
-      assert(splitWarm.as[(Long, Long)].collect().toMap ==
-        plainWarm.as[(Long, Long)].collect().toMap,
-        "the split absorbed layout must not change the fixed-point integers")
-      // the round over eDeg = edges ⋈ deg must shuffle NOTHING on src:
-      // both sides are bucketed on it, so the only exchanges are the
-      // node-keyed rank/aggregate ones
-      val eDeg = spark.table("graph_split_spec_e")
-        .join(spark.table("graph_split_spec_d"), "src")
-      val nodes = eDeg.select($"src".as("node"))
-        .union(eDeg.select($"dst".as("node"))).distinct()
-      val round = Graph.prRound(eDeg, nodes, 0L,
-        nodes.withColumn("rank", org.apache.spark.sql.functions.lit(1000L)))
-      round.collect()
-      val plan = round.queryExecution.executedPlan.toString
-      assert(!plan.contains("hashpartitioning(src"),
-        s"expected no src-keyed exchange over the split bucketed tables:\n$plan")
+      val violations = for {
+        (name, source) <- sources
+        warm <- Seq(None, Some(committed))
+        rounds <- Seq(1, 2)
+        // a fixed-count run leaves its last round un-checkpointed, so the
+        // returned frame's plan IS that round's E⋈V join and sum
+        round = Graph.pageRank(source(), rounds, warm)._1
+        plan = { round.collect(); round.queryExecution.executedPlan }
+        // the rank and aggregate exchanges are keyed by node; one keyed by
+        // src would be the E-sized per-round shuffle
+        problem <- Seq(
+          "an exchange on the edge side" ->
+            plan.toString.contains("hashpartitioning(src"),
+          "a sort over the edge checkpoint" -> planNodes(plan).exists {
+            case s: SortExec => edgeCheckpoint(s.child)
+            case _ => false
+          }).collect { case (p, true) => p }
+      } yield s"$name ${if (warm.isEmpty) "cold" else "warm"} round $rounds " +
+        s"has $problem:\n$plan"
+      assert(violations.isEmpty, violations.mkString("\n"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 }
