@@ -129,7 +129,9 @@ object Graph {
       * be silently iterated, returning ranks for the wrong graph — on
       * mismatch the table is rebuilt in place. Note a delta changes E and
       * the out-degrees, so absorbing one here re-commits the table at O(E);
-      * [[split]] is the O(delta) form.
+      * [[split]] is the O(delta) form. The frame iterates at the
+      * committed table's bucket count (read from the catalog, as
+      * [[split]] does), so `buckets` only matters when this call commits.
       */
     def bucketed(spark: SparkSession, edges: DataFrame, outDir: String,
                  buckets: Int = 8, table: String = "graph_edges_bkt",
@@ -153,7 +155,7 @@ object Graph {
           .option("path", loc)
           .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(table)
       }
-      new RankEdges(spark.table(table), buckets)
+      new RankEdges(spark.table(table), bucketCount(spark, table))
     }
 
     /** The edge frame over the SPLIT committed layout
@@ -174,11 +176,16 @@ object Graph {
       new RankEdges(
         localCheckpointPreserving(
           spark.table(s"${table}_e").join(spark.table(s"${table}_d"), "src")),
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_e"))
-          .bucketSpec.map(_.numBuckets)
-          .getOrElse(spark.sessionState.conf.numShufflePartitions))
+        bucketCount(spark, s"${table}_e"))
   }
+
+  /** The committed bucket count of `table` — the width both bucketed
+    * sources iterate at, read from the catalog, never from a caller. */
+  private def bucketCount(spark: SparkSession, table: String): Int =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets).getOrElse(
+        throw new IllegalStateException(s"$table is not bucketed"))
 
   /** PageRank over `edges`: every node appearing as a source or
     * destination is ranked; dangling nodes (no out-edges) are allowed —
@@ -222,7 +229,9 @@ object Graph {
     // E⋈V join (and the residual join) plans with no exchange on either
     // side (co-partitioning is only accepted when no side needs a shuffle
     // — otherwise EnsureRequirements re-widens everything to the session
-    // default)
+    // default). Over a round's sum by node the repartition is no second
+    // shuffle: AggregateAtRepartitionWidth runs the sum's own exchange at
+    // `parts`.
     def cut(ranks: DataFrame): DataFrame =
       localCheckpointPreserving(ranks.repartition(parts, col("node")))
 
@@ -318,11 +327,9 @@ object Graph {
     deltaEdges.select(col("src"), col("dst"))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .insertInto(s"${table}_e")
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_d"))
-    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
-      throw new IllegalStateException(s"${table}_d is not bucketed"))
-    val loc = meta.location.getPath
+    val buckets = bucketCount(spark, s"${table}_d")
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_d")).location.getPath
     val deltaDeg = deltaEdges.groupBy(col("src"))
       .agg(count(lit(1)).as("d"))
     // materialize BEFORE the overwrite — the merge reads the table it

@@ -68,7 +68,8 @@ object RewriteRankOneToMaxBy extends Rule[LogicalPlan] {
   * `spark.sql.extensions=graft.plans.GraftExtensions`, so every session
   * gets them at build and nothing installs them at runtime. Installs the
   * four optimizer rules (QUALIFY-dedup rewrite, MV rewrite, metadata-only
-  * count, stats join reorder), the engine's native SQL functions
+  * count, stats join reorder), one query-stage preparation rule
+  * ([[AggregateAtRepartitionWidth]]), the engine's native SQL functions
   * ([[graft.functions.expr.GraftFunctions]]), and the lifecycle SQL
   * surface ([[graft.sql.LifecycleSql]]: DESCRIBE HISTORY / RESTORE /
   * VACUUM / CLONE / ANALYZE on path-addressed manifest tables, all other
@@ -80,6 +81,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteAggregateToMv)
     e.injectOptimizerRule(_ => MetadataOnlyCount)
     e.injectOptimizerRule(_ => StatsJoinReorder)
+    e.injectQueryStagePrepRule(_ => AggregateAtRepartitionWidth)
     e.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
     graft.functions.expr.GraftFunctions.functions.foreach(e.injectFunction)
   }

@@ -89,7 +89,7 @@ object GraphScaleProbe {
         Graph.pageRank(RankEdges.inMemory(g), 10)._1.count()
         val plain = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        Graph.pageRank(RankEdges.bucketed(spark, g, dir, buckets = 32,
+        Graph.pageRank(RankEdges.bucketed(spark, g, dir,
           table = "graph_probe_bkt", reuseExisting = true), 10)._1.count()
         val bkt = (System.nanoTime() - t1) / 1e9
         println(f"[graph-scale] E=$e pass=$pass 10 rounds: " +
@@ -188,8 +188,7 @@ object GraphScaleProbe {
       // O(E) re-commit per refresh timed above
       val t3 = System.nanoTime()
       val (_, rM, _) = Graph.pageRank(RankEdges.bucketed(spark, g2, dir2,
-        buckets = buckets, table = "graph_probe_mono", reuseExisting = true),
-        40, Some(ranksC), tol)
+        table = "graph_probe_mono", reuseExisting = true), 40, Some(ranksC), tol)
       val tWarmMono = (System.nanoTime() - t3) / 1e9
       println(f"[graph-scale] splitabsorb E=$e 1%% delta: base commit " +
         f"(once)=$tCommit%.2f s; absorb O(delta)=$tAbsorb%.2f s vs " +

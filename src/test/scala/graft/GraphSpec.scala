@@ -272,6 +272,18 @@ class GraphSpec extends AnyFunSuite {
     assert(splitWarm.as[(Long, Long)].collect().toMap ==
       plainWarm.as[(Long, Long)].collect().toMap,
       "the split absorbed layout must not change the fixed-point integers")
+    // the eDeg = edges ⋈ deg join RankEdges.split checkpoints must shuffle
+    // NOTHING on src: both sides are bucketed on it at the same count
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val eDeg = spark.table("graph_split_spec_e")
+        .join(spark.table("graph_split_spec_d"), "src")
+      eDeg.collect()
+      val plan = eDeg.queryExecution.executedPlan.toString
+      assert(!plan.contains("hashpartitioning(src"),
+        s"expected no src-keyed exchange over the split bucketed tables:\n$plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
   test("a warm start from an empty frame is the cold start") {
@@ -288,6 +300,8 @@ class GraphSpec extends AnyFunSuite {
   test("every edge source runs cold and warm rounds with no exchange on the edge side") {
     import org.apache.spark.sql.execution.{InputAdapter, RDDScanExec, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
       case q: QueryStageExec => planNodes(q.plan)
@@ -316,10 +330,16 @@ class GraphSpec extends AnyFunSuite {
         (name, source) <- sources
         warm <- Seq(None, Some(committed))
         rounds <- Seq(1, 2)
+        e = source()
         // a fixed-count run leaves its last round un-checkpointed, so the
         // returned frame's plan IS that round's E⋈V join and sum
-        round = Graph.pageRank(source(), rounds, warm)._1
+        round = Graph.pageRank(e, rounds, warm)._1
         plan = { round.collect(); round.queryExecution.executedPlan }
+        // what the kernel checkpoints when it cuts that round
+        cut = round.repartition(e.parts, $"node")
+        cutExchanges = { cut.collect()
+          planNodes(cut.queryExecution.executedPlan).collect {
+            case x: ShuffleExchangeLike => x.outputPartitioning } }
         // the rank and aggregate exchanges are keyed by node; one keyed by
         // src would be the E-sized per-round shuffle
         problem <- Seq(
@@ -328,7 +348,16 @@ class GraphSpec extends AnyFunSuite {
           "a sort over the edge checkpoint" -> planNodes(plan).exists {
             case s: SortExec => edgeCheckpoint(s.child)
             case _ => false
-          }).collect { case (p, true) => p }
+          },
+          // a round over cut ranks (every round but a cold first) joins
+          // them co-partitioned, and the cut's repartition is the sum's
+          // own exchange: ONE shuffle per round
+          s"cut exchanges $cutExchanges, not one on node at ${e.parts}" ->
+            ((warm.isDefined || rounds > 1) && !(cutExchanges match {
+              case Seq(h: HashPartitioning) => h.numPartitions == e.parts &&
+                h.references.toSeq.map(_.name) == Seq("node")
+              case _ => false
+            }))).collect { case (p, true) => p }
       } yield s"$name ${if (warm.isEmpty) "cold" else "warm"} round $rounds " +
         s"has $problem:\n$plan"
       assert(violations.isEmpty, violations.mkString("\n"))
