@@ -956,28 +956,23 @@ object SparkEntry {
     // reproduce the batch recompute bit for bit, or it hash-mismatches
     "curation_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      def seedExactOf(seed: DataFrame) = seed.join(
-        Dedup.exactByContent(seed, "text", "doc_id")
-          .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
       val (split, idx) = demoFixture(s, d, "cur_incr") {
         val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
         val idx = cachedTempDir("graft_curidx_")
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
         DedupIndex.buildIndex(
-          seedExactOf(docs.filter(col("doc_id") < split)), idx)
+          Dedup.exactSurvivors(docs.filter(col("doc_id") < split)), idx)
         (split, idx)
       }
       val seed = docs.filter(col("doc_id") < split)
-      val (seedCurated, _, staged) =
-        pipeline.Curation.curateStaged(seed, collectStats = false)
-      // the admission corpus IS the seed's exact survivors, which
-      // curateStaged just checkpointed (staged.head — its documented
-      // contract): reuse the blocks instead of recomputing the whole
+      val seedCuration = pipeline.Curation.curate(seed)
+      // the admission corpus IS the seed's exact survivors, which curate
+      // just checkpointed: reuse the blocks instead of recomputing the whole
       // scan+sha256+semi-join chain for the bloom build (§1.2 compute-once)
-      val (admitted, _) = pipeline.Curation.admitBatch(s, staged.head,
+      val (admitted, _) = pipeline.Curation.admitBatch(s, seedCuration.exact,
         idx, docs.filter(col("doc_id") >= split))
       val cols = Seq("doc_id", "quality_score", "predicted_lang", "n_tokens")
-      seedCurated.select(cols.map(col): _*)
+      seedCuration.curated.select(cols.map(col): _*)
         .unionByName(admitted.select(cols.map(col): _*))
     }),
     // CONTINUOUS CURATION: the admission loop as a Structured-Streaming
@@ -991,15 +986,12 @@ object SparkEntry {
     // SAME CurationSql oracle as curation_disk / curation_incremental)
     "stream_curation" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      def seedExactOf(seed: DataFrame) = seed.join(
-        Dedup.exactByContent(seed, "text", "doc_id")
-          .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
       val (split, root) = demoFixture(s, d, "stream_cur") {
         val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
         val root = cachedTempDir("graft_scur_")
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
         val seed = docs.filter(col("doc_id") < split)
-        streaming.CuratedStore.seed(s, seedExactOf(seed), root)
+        streaming.CuratedStore.seed(s, Dedup.exactSurvivors(seed), root)
         val stage = s"$root/in"
         streaming.StreamCuration.stageMonotoneBatches(s,
           docs.filter(col("doc_id") >= split), stage, 3)
@@ -1009,8 +1001,8 @@ object SparkEntry {
           root, s"$root/_ckpt").awaitTermination()
         (split, root)
       }
-      val (seedCurated, _, _) = pipeline.Curation.curateStaged(
-        docs.filter(col("doc_id") < split), collectStats = false)
+      val seedCurated = pipeline.Curation.curate(
+        docs.filter(col("doc_id") < split)).curated
       val cols = Seq("doc_id", "quality_score", "predicted_lang", "n_tokens")
       seedCurated.select(cols.map(col): _*)
         .unionByName(streaming.CuratedStore.curatedRows(s, root)

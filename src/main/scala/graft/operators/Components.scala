@@ -52,16 +52,7 @@ object Components {
     * (bounded by the clustered-node count; the blocks are released when the
     * frame is garbage-collected).
     */
-  def connectedComponents(edges: DataFrame): DataFrame =
-    connectedComponentsStaged(edges)._1
-
-  /** As [[connectedComponents]], plus the final label frame for staged
-    * callers. Both propagation paths are checkpoint-backed now, so
-    * `unpersist()` on the handle is a harmless no-op (kept for interface
-    * stability with staged pipelines written against the cache-backed
-    * form).
-    */
-  private[graft] def connectedComponentsStaged(edges: DataFrame): (DataFrame, DataFrame) = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     // cut the upstream lineage at the boundary: the DIRECTED edge list is
     // materialized once (one job — the same single pass over the pair join
     // the previous persist-based form paid inside round 0), and every
@@ -93,9 +84,7 @@ object Components {
       if (r.isNullAt(0)) None else Some(r.getDecimal(0))
     }
     var labelSum = labelSumOf(labels)
-    if (labelSum.isEmpty) {
-      return (labels.select(col("node"), col("label").as("component")), labels)
-    }
+    if (labelSum.isEmpty) return labels.select(col("node"), col("label").as("component"))
 
     var converged = false
     var iter = 0
@@ -127,10 +116,9 @@ object Components {
       log.warn(s"label propagation hit the $MaxIterations-round cap without " +
         "converging (component diameter exceeds the cap); falling back to " +
         "starContractionComponents")
-      val out = starContractionComponents(edges)
-      return (out, out)
+      return starContractionComponents(edges)
     }
-    (labels.select(col("node"), col("label").as("component")), labels)
+    labels.select(col("node"), col("label").as("component"))
   }
 
   /** Connected components by alternating star contraction (the
@@ -229,8 +217,18 @@ object Components {
     * survivor. Docs in no pair are singletons and are not emitted — the
     * retention rule for them is "keep" by definition.
     */
-  def dedupClusters(documents: DataFrame, threshold: Double): DataFrame =
-    dedupClustersStaged(documents, threshold)._1
+  def dedupClusters(documents: DataFrame, threshold: Double): DataFrame = {
+    val pairs = DedupApprox.jaccardJoin(documents, threshold)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val cc = connectedComponents(pairs)
+    val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("n_members"))
+    cc.join(sizes, "component") // cluster count ≪ docs: AQE broadcasts
+      .select(
+        col("node").as("doc_id"),
+        col("component").as("cluster_id"),
+        col("n_members"),
+        (col("node") === col("component")).as("is_canonical"))
+  }
 
   /** [[dedupClusters]] with QUALITY-AWARE survivor selection — what a
     * production curation pipeline actually keeps: inside each near-dup
@@ -258,24 +256,5 @@ object Components {
       .select(col("doc_id"), col("cluster_id"), col("n_members"),
         col("quality_score"),
         (col("doc_id") === col("survivor_id")).as("is_survivor"))
-  }
-
-  /** As [[dedupClusters]], plus the component-label cache handle (see
-    * [[connectedComponentsStaged]]) for staged pipelines that must release
-    * it once their sink has materialized.
-    */
-  private[graft] def dedupClustersStaged(documents: DataFrame,
-                                         threshold: Double): (DataFrame, DataFrame) = {
-    val pairs = DedupApprox.jaccardJoin(documents, threshold)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val (cc, ccCache) = connectedComponentsStaged(pairs)
-    val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("n_members"))
-    val out = cc.join(sizes, "component") // cluster count ≪ docs: AQE broadcasts
-      .select(
-        col("node").as("doc_id"),
-        col("component").as("cluster_id"),
-        col("n_members"),
-        (col("node") === col("component")).as("is_canonical"))
-    (out, ccCache)
   }
 }

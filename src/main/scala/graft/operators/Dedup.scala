@@ -60,6 +60,18 @@ object Dedup {
     df.groupBy(sha2(col(contentCol), 256).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
+  /** The exact survivors of a `(doc_id, text, …)` frame: the rows whose
+    * `doc_id` is the minimum id of their content group,
+    * `docs ⋉ exactByContent(docs).keep_id`. `observed` wraps the
+    * per-content aggregate before the semi-join — the one place where
+    * each input row and each survivor is counted exactly once
+    * ([[graft.pipeline.Curation.curate]] hangs its funnel there).
+    */
+  def exactSurvivors(docs: DataFrame,
+                     observed: DataFrame => DataFrame = identity): DataFrame =
+    docs.join(observed(exactByContent(docs, "text", "doc_id"))
+      .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
+
   /** Incremental EXACT dedup with a Bloom prefilter — the scalable form of
     * "is this document already in the corpus": a Bloom filter over the
     * corpus content hashes (built once per cycle, ~1.2 GB for 10⁹ docs at

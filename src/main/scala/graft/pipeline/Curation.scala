@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.graftshim.ListenerBus
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
-import graft.operators.{Components, Dedup, DedupApprox, Par, TextOps}
+import graft.operators.{Dedup, DedupApprox, Par, TextOps}
 import graft.sources.Tables
 
 /** End-to-end training-data curation pipeline (BASELINE.json north star):
@@ -23,120 +24,82 @@ object Curation {
 
   case class CurationResult(stage: String, docs: Long)
 
-  /** Stage counts (`collectStats`) force one job per stage; the intermediate
-    * stages are persisted while counting so the expensive jaccard-join
-    * lineage runs once, not once per downstream count. With
-    * `collectStats = true` the returned DataFrame still reads from the
-    * persisted `nearDeduped` intermediate, so the CALLER's first
-    * materialization reuses it — the caller owns releasing it when done via
-    * the handle [[curateStaged]] returns (which [[run]] unpersists after its
-    * write). With `collectStats = false` nothing is persisted at all — the
-    * pipeline is a single lazy lineage for the caller's sink.
+  /** What [[curate]] returns: the `curated` frame, the checkpointed
+    * `exact` survivors (MEMORY_AND_DISK blocks the caller may reuse — the
+    * incremental-admission corpus reads them instead of recomputing the
+    * dedup chain — and releases with [[Par.release]] once its sink has
+    * run), and the stage [[funnel]].
     */
-  def curate(documents: DataFrame, jaccardThreshold: Double = 0.8,
-             minQuality: Double = 0.3,
-             collectStats: Boolean = true): (DataFrame, Seq[CurationResult]) = {
-    val (curated, stages, _) =
-      curateStaged(documents, jaccardThreshold, minQuality, collectStats)
-    (curated, stages)
+  final class Curated private[Curation] (val curated: DataFrame,
+                                         val exact: DataFrame,
+                                         observations: Seq[Observation]) {
+
+    /** `input / exact_dedup / near_dedup / quality_filter` document
+      * counts ([[curate]] says which job fills each). Read before an action
+      * on `curated` has finished, this throws `IllegalStateException`
+      * rather than wait on a query that may never run.
+      */
+    def funnel: Seq[CurationResult] = {
+      val counts = observations
+        .flatMap(ListenerBus.observed(curated.sparkSession.sparkContext, _)).toMap
+      Seq("input", "exact_dedup", "near_dedup", "quality_filter")
+        .map(stage => CurationResult(stage, counts(stage).asInstanceOf[Long]))
+    }
   }
 
-  /** [[curate]] plus the persisted intermediates (empty when nothing was
-    * persisted), so the caller can unpersist exactly those DataFrames once
-    * its sink has materialized — never a session-global cache clear, which
-    * would evict unrelated datasets a shared session may be caching.
+  /** Curate `documents` (`doc_id`, `text`): exact dedup (min id per
+    * content) → near-dup pruning (a doc drops iff it is the higher id of a
+    * pair at `jaccardThreshold`) → quality gate at `minQuality` →
+    * language and token enrichment.
+    *
+    * One lineage, no extra jobs for the funnel: its counts come from
+    * `Dataset.observe` on the stages themselves. `input` and `exact_dedup`
+    * (`sum(dup_count)` and `count(*)` over the content aggregate) are
+    * filled by the eager exact checkpoint before this returns; `near_dedup`
+    * and `quality_filter` (row counts of the anti-join and of the gate)
+    * by the first action on the curated frame. Each call observes through
+    * its own unnamed `Observation`s, so curations sharing a plan or a
+    * session never collide on a metric name.
     */
-  /** Near-dup retention policy. `Greedy` drops the higher doc_id of every
-    * surviving pair — conservative: a doc is removed only when it is
-    * directly similar to a kept lower id. `Cluster` resolves the pair graph
-    * to connected components first ([[Components.dedupClusters]]) and keeps
-    * one canonical doc per component — aggressive: transitive chains
-    * (A~B~C without A~C) collapse to a single survivor, the standard
-    * MinHash-pipeline behavior for boilerplate families.
-    */
-  sealed trait NearDupPolicy
-  case object Greedy extends NearDupPolicy
-  case object Cluster extends NearDupPolicy
-
-  def curateStaged(documents: DataFrame, jaccardThreshold: Double = 0.8,
-                   minQuality: Double = 0.3,
-                   collectStats: Boolean = true,
-                   nearDupPolicy: NearDupPolicy = Greedy)
-      : (DataFrame, Seq[CurationResult], Seq[DataFrame]) = {
-    val stages = Seq.newBuilder[CurationResult]
-    def stat(name: String, df: DataFrame): Unit =
-      if (collectStats) stages += CurationResult(name, df.count())
-    def persisted(df: DataFrame): DataFrame = if (collectStats) df.persist() else df
-    stat("input", documents)
-
+  def curate(documents: DataFrame, jaccardThreshold: Double = 0.8,
+             minQuality: Double = 0.3): Curated = {
+    val exactObs, nearObs, gateObs = Observation()
     // parallelism floor for the per-row-heavy stages (sha256 hashing,
     // shingling, tokenization): a single-file input otherwise pins them
     // all to one task (guide §2.5); a no-op on multi-file production input
     val docs = Par.fanOutScan(documents)
 
-    // 1. exact content dedup: keep the min doc_id per sha256(text)
-    val keep = Dedup.exactByContent(docs, "text", "doc_id")
-      .select(col("keep_id").as("doc_id"))
-    // materialized ONCE (eager, like admitBatchWith's batchExact): the
-    // near-dup join below fans this subtree into five consumers (freq
-    // aggregate, both prefix self-join sides, both refine sides) plus the
-    // anti-join left side — left lazy, AQE runs the independent stages
-    // concurrently and each re-executes the scan+hash+semi-join subtree
-    // (the round-21 profile showed the fan-out exchange computed twice and
-    // ~3 s of duplicated single-task hash stages inside curation_disk).
-    // MEMORY_AND_DISK blocks, intra-query only; released by the caller's
-    // handle (stats mode) or the ContextCleaner once the result frame is
-    // dropped — the same lifecycle as the admission path's checkpoints.
-    // At 100 TB this is the one full-corpus materialization the pipeline
-    // keeps (the guide §5 trade: not fault-tolerant — a lost executor
-    // re-runs the query; the committed CuratedStore is the durable form).
-    val exact = docs.join(keep, Seq("doc_id"), "left_semi")
+    // 1. exact content dedup, materialized ONCE (eager, like
+    // admitBatchWith's batchExact): the near-dup join below fans this
+    // subtree into five consumers (freq aggregate, both prefix self-join
+    // sides, both refine sides) plus the anti-join left side — left lazy,
+    // AQE runs the independent stages concurrently and each re-executes
+    // the scan+hash+semi-join subtree (the round-21 profile showed the
+    // fan-out exchange computed twice and ~3 s of duplicated single-task
+    // hash stages inside curation_disk). MEMORY_AND_DISK blocks,
+    // intra-query only; released by the caller or the ContextCleaner once
+    // the frame is dropped. At 100 TB this is the one full-corpus
+    // materialization the pipeline keeps (the guide §5 trade: not
+    // fault-tolerant — a lost executor re-runs the query; the committed
+    // CuratedStore is the durable form).
+    val exact = Dedup.exactSurvivors(docs, _.observe(exactObs,
+      sum(col("dup_count")).as("input"), count(lit(1)).as("exact_dedup")))
       .localCheckpoint(true)
-    stat("exact_dedup", exact)
 
-    // 2. near-dup pruning: drop the policy's non-survivors
-    val (dupHigh, ccCache) = nearDupPolicy match {
-      case Greedy => (DedupApprox.jaccardJoin(exact, jaccardThreshold)
-        .select(col("doc_b").as("doc_id")).distinct(), None)
-      case Cluster =>
-        val (clusters, cache) = Components.dedupClustersStaged(exact, jaccardThreshold)
-        (clusters.filter(!col("is_canonical")).select(col("doc_id")), Some(cache))
-    }
-    val nearDeduped = persisted(exact.join(dupHigh, Seq("doc_id"), "left_anti"))
-    stat("near_dedup", nearDeduped)
-    // nearDeduped is materialized — the Cluster policy's component-label
-    // cache (MEMORY_AND_DISK blocks from the propagation loop) is no
-    // longer needed; without the release, staged runs in a shared session
-    // accumulate one labels cache per run. (The checkpointed exact frame
-    // stays: nearDeduped's cached blocks read from it on recompute, and
-    // its blocks are handed up for release below.)
-    if (collectStats) ccCache.foreach(_.unpersist(blocking = false))
+    // 2. near-dup pruning: drop the higher doc_id of every pair
+    val dupHigh = DedupApprox.jaccardJoin(exact, jaccardThreshold)
+      .select(col("doc_b").as("doc_id")).distinct()
+    val nearDeduped = exact.join(dupHigh, Seq("doc_id"), "left_anti")
+      .observe(nearObs, count(lit(1)).as("near_dedup"))
 
     // 3. quality filter + enrichment (language, token counts) — DIRECT
-    // column expressions on the near-deduped frame: the quality score is a
-    // pure per-row projection ([[TextOps.textQuality]]), so joining it back
-    // on doc_id only added a V-sized self-join shuffle and a second
-    // tokenization pass (guide §2.4 "remove shuffles outright"); the
-    // expressions below are textQuality's, verbatim, so the score — and
-    // therefore the gate — is bit-identical
+    // column expressions on the near-deduped frame (see gateAndEnrich)
     val curated = gateAndEnrich(nearDeduped, minQuality)
-    stat("quality_filter", curated)
-
-    (curated, stages.result(),
-      // persisted/checkpointed intermediates the caller owns releasing:
-      // HEAD IS ALWAYS the checkpointed exact-dedup frame (MEMORY_AND_DISK
-      // blocks — release via Par.release once the result is materialized;
-      // a plain unpersist() no-ops on a checkpoint). Callers that need the
-      // exact survivors AGAIN (the incremental-admission corpus) read it
-      // from here instead of recomputing the dedup chain. With stats the
-      // persisted near-dedup stage follows (the CC label cache is already
-      // released above); the Cluster policy's CC loop persists internally
-      // regardless — hand its cache up rather than leaking it into the
-      // session
-      (if (collectStats) Seq(exact, nearDeduped) else Seq(exact)) ++ ccCache.toSeq)
+      .observe(gateObs, count(lit(1)).as("quality_filter"))
+    new Curated(curated, exact, Seq(exactObs, nearObs, gateObs))
   }
 
-  /** The quality gate + enrichment tail shared by [[curateStaged]] and
+  /** The quality gate + enrichment tail shared by [[curate]] and
     * [[admitBatchWith]]: one narrow projection computing the
     * [[TextOps.textQuality]] score (same expressions — the gate is
     * bit-identical to filtering on the joined score), the gate, and the
@@ -157,11 +120,11 @@ object Curation {
       .withColumn("n_tokens", nTok)
   }
 
-  /** Incremental admission — the production shape of [[curateStaged]]
+  /** Incremental admission — the production shape of [[curate]]
     * for a corpus that grows over time: a new batch is curated AGAINST
     * the committed corpus without recomputing it. Requires ids ordered
     * across batches (every seed doc_id < every batch doc_id — the
-    * natural monotone-id ingest); then [[Greedy]]'s drop-the-higher-id
+    * natural monotone-id ingest); then the drop-the-higher-id
     * rule makes prior curation immune to later batches, so
     * `seed curation ∪ admitted batches ≡ whole-corpus curation` exactly.
     *
@@ -218,11 +181,8 @@ object Curation {
     //    tokenization/shingling pass over them — to one or two tasks; a
     //    no-op when the batch already scans wide.
     val batchWide = Par.fanOutScan(batch)
-    val keepB = Dedup.exactByContent(batchWide, "text", "doc_id")
-      .select(col("keep_id").as("doc_id"))
-    val batchExact =
-      newContent(batchWide.join(keepB, Seq("doc_id"), "left_semi"))
-        .localCheckpoint(true) // consumed by the probe, the anti-join, and the caller's index append
+    val batchExact = newContent(Dedup.exactSurvivors(batchWide))
+      .localCheckpoint(true) // consumed by the probe, the anti-join, and the caller's index append
     // 2. near-dup: a batch doc drops iff it is the HIGHER id of any
     //    exact-survivor pair — seed ids are all lower, batch↔batch pairs
     //    canonicalize doc_a < doc_b, so the drop set is just doc_b
@@ -257,19 +217,13 @@ object Curation {
         round(avg(col("quality_score")), 4).as("avg_quality"))
 
   def run(spark: SparkSession, srcDir: String, outDir: String): Seq[CurationResult] = {
-    val (curated, stages, staged) = curateStaged(Tables.documents(spark, srcDir))
-    curated.write.mode(SaveMode.Overwrite).parquet(s"$outDir/curated_documents")
-    // the write was the last consumer of the persisted near-dedup stage and
-    // the checkpointed exact-dedup frame — release exactly those
-    // intermediates, nothing else the session may cache (Par.release frees
-    // checkpoint blocks; unpersist frees cached plans — each no-ops on the
-    // other kind)
-    staged.foreach { df =>
-      df.unpersist(blocking = false)
-      graft.operators.Par.release(df)
-    }
+    val c = curate(Tables.documents(spark, srcDir))
+    c.curated.write.mode(SaveMode.Overwrite).parquet(s"$outDir/curated_documents")
+    // the write was the last consumer of the exact checkpoint: release its
+    // blocks, nothing else the session may cache
+    Par.release(c.exact)
     summary(spark.read.parquet(s"$outDir/curated_documents"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/corpus_summary")
-    stages
+    c.funnel
   }
 }

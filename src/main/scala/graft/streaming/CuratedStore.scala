@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.graftshim.ListenerBus
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -96,8 +97,12 @@ object CuratedStore {
     val dir = s"$root/batch-seed"
     val (shB, docB, _) =
       DedupIndex.stageSeedIndex(seedExact, dir, shingleBuckets, docBuckets)
-    seedExact.write.mode(SaveMode.Overwrite).parquet(s"$dir/exact")
-    val nDocs = seedExact.count()
+    // the exact write counts the survivors on its way (no separate job)
+    val written = Observation()
+    seedExact.observe(written, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/exact")
+    val nDocs = ListenerBus.observed(spark.sparkContext, written)("n")
+      .asInstanceOf[Long]
     val hashB = math.max(16L, math.min(4096L, (nDocs + 262143L) / 262144L))
     hashes(seedExact).withColumn("h_bucket", pmod(col("xh"), lit(hashB)))
       .repartition(col("h_bucket"))

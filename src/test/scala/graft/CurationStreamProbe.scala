@@ -63,9 +63,7 @@ object CurationStreamProbe {
 
     val root = java.nio.file.Files.createTempDirectory("curstream").toString + "/store"
     val seed = genDocs(0L, seedN)
-    val seedExact = seed.join(
-      graft.operators.Dedup.exactByContent(seed, "text", "doc_id")
-        .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
+    val seedExact = graft.operators.Dedup.exactSurvivors(seed)
     val t0 = System.nanoTime()
     CuratedStore.seed(spark, seedExact, root)
     println(f"[cur-stream] seed $seedN docs: ${(System.nanoTime() - t0) / 1e9}%.1f s")

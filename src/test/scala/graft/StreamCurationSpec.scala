@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
 import graft.streaming.{AtomicRenameCommitter, ConditionalPutCommitter, CuratedStore, SnapshotCommitter, StreamCuration, StreamOracle, TableFs}
 
 /** The continuous-curation drain over the manifest-committed
@@ -33,16 +34,12 @@ class StreamCurationSpec extends AnyFunSuite {
     (13L, "a duplicated streaming document that repeats its phrasing almost word by word"),
     (14L, "noise in the stream that matches nothing in the corpus or the batch"))
 
-  private def seedExactOf(seed: org.apache.spark.sql.DataFrame) =
-    seed.join(graft.operators.Dedup.exactByContent(seed, "text", "doc_id")
-      .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-
   /** Seed the store at `root` and stage the 2 monotone batches under a
     * LOCAL dir (the ingest staging area is always filesystem-local; the
     * STORE may live on the object store). Returns the staging dir. */
   private def build(root: String,
                     committer: SnapshotCommitter = AtomicRenameCommitter): String = {
-    CuratedStore.seed(spark, seedExactOf(seedDocs.toDF("doc_id", "text")),
+    CuratedStore.seed(spark, Dedup.exactSurvivors(seedDocs.toDF("doc_id", "text")),
       root, committer, jaccardThreshold = 0.6)
     val stage = Files.createTempDirectory("graft-scur-in").toString
     StreamCuration.stageMonotoneBatches(spark,
